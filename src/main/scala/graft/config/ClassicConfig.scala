@@ -3,7 +3,7 @@ package graft.config
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Grep, Modify, ParserFilter, RewriteTag}
+import graft.ops.{Fields, Grep, Modify, RewriteTag}
 import graft.route.Router
 import graft.sinks.Formats
 import graft.sql.Planner
@@ -260,18 +260,48 @@ object ClassicConfig {
   }
 
   /** One [FILTER] section: records whose tag matches `Match` go through
-    * the operator; everything else passes untouched (split-apply-union,
-    * exactly the per-chunk gating of flb_filter.c).
+    * the operator; everything else passes untouched (flb_filter.c runs
+    * each chunk through every filter whose Match admits its tag). The
+    * gate is per row, inside the operator's own `Filter` or `Project`, so
+    * the frame is read once however many filters run. Only lua and
+    * multiline, which change the record's shape, split the frame by
+    * Match and union the halves back.
+    *
+    * A record whose tag is NULL matches no pattern and is dropped,
+    * uncounted, by every filter but rewrite_tag; under Match `*` so is
+    * one whose tag `^.*$` does not match.
     */
   private def applyFilter(df: DataFrame, s: Section,
                           parsers: Map[String, Section],
                           mlParsers: Map[String, Seq[graft.streaming.Multiline.Rule]] = Map.empty): DataFrame = {
     val pat = s.get("match").getOrElse("*")
     val cond = Router.tagMatch(col("tag"), pat)
-    val matched = df.filter(cond)
-    val rest = df.filter(!cond)
+    val admitted = if (pat == "*") cond else col("tag").isNotNull
+    lazy val matched = df.filter(cond)
     def rejoin(out: DataFrame): DataFrame =
-      if (pat == "*") out else out.unionByName(rest, allowMissingColumns = true)
+      if (pat == "*") out else out.unionByName(df.filter(!cond), allowMissingColumns = true)
+    // a per-row filter: `keep` decides the records Match admits
+    def keepIf(keep: Column): DataFrame = df.filter(when(cond, keep).otherwise(admitted))
+    val in = Fields.of(df)
+    // a per-row projection: records Match admits (and `applies` holds
+    // for) take `out`, the others keep their own keys. The columns are
+    // `out`'s, then the input's that `out` dropped: the order a
+    // `unionByName` of the two gives, which json key order follows. NULL
+    // stands for an absent key on either side. `from` is `df` plus any
+    // helper columns `out` reads, which the projection drops.
+    def gated(out: Fields, applies: Option[Column] = None, from: DataFrame = df): DataFrame =
+      (if (pat == "*") applies else Some(applies.fold(cond)(cond && _))) match {
+        case None => out.frame(from.filter(admitted))
+        case Some(g) =>
+          val kept = out.entries.map { case (n, e) =>
+            if (!in.has(n)) when(g, e).as(n)
+            else if (e eq in(n)) col(n)
+            else when(g, e).otherwise(col(n)).as(n)
+          }
+          val restored = in.names.filterNot(out.has)
+            .map(n => when(g, lit(null)).otherwise(col(n)).as(n))
+          from.filter(admitted).select(kept ++ restored: _*)
+      }
 
     s.required("name").toLowerCase match {
       case "grep" =>
@@ -299,7 +329,7 @@ object ClassicConfig {
           rules.exists(_.exclude) && rules.exists(!_.exclude))
           throw new IllegalArgumentException(
             "grep: Regex and Exclude cannot be combined with logical_op and/or (grep.c rejects this config)")
-        rejoin(if (rules.isEmpty) matched else Grep(matched, rules, op))
+        keepIf(if (rules.isEmpty) lit(true) else Grep.predicate(rules, op))
 
       case "modify" =>
         val ops: Seq[Modify.Rule] = s.props.flatMap {
@@ -330,18 +360,17 @@ object ClassicConfig {
               s"modify condition $other unsupported")
           }
         }
-        rejoin(Modify(matched, ops, conds))
+        gated(Modify.fields(in, ops, conds))
 
       case "record_modifier" =>
-        val removed = s.all("remove_key").foldLeft(matched)(_ drop _)
+        val removed = in.drop(s.all("remove_key"): _*)
         val allow = s.all("allowlist_key") ++ s.all("whitelist_key")
         val kept =
           if (allow.isEmpty) removed
-          else removed.select(("tag" +: allow).distinct.map(col): _*)
-        val appended = s.all("record").foldLeft(kept) { (d, kv) =>
-          val (k, v) = split2(kv); d.withColumn(k, lit(v))
-        }
-        rejoin(appended)
+          else removed.select(("tag" +: allow).distinct)
+        gated(s.all("record").foldLeft(kept) { (f, kv) =>
+          val (k, v) = split2(kv); f.set(k, lit(v))
+        })
 
       case "parser" =>
         val p = parsers.getOrElse(s.required("parser"),
@@ -356,17 +385,18 @@ object ClassicConfig {
         // (filter_parser returns FLB_FILTER_NOTOUCH on failure); only
         // successful parses get the reserve/preserve projection. The
         // routing tag is always kept — parsing never re-tags.
-        val ok = coalesce(col(keyName).rlike(pattern), lit(false))
-        val parsed = ParserFilter.regex(matched.filter(ok), keyName, pattern,
-          reserveData = true, preserveKey = true)
-        val groupCols = graft.parse.Parsers.groupNames(pattern)
+        // the match gets its own column so the text is matched once a
+        // record: inside each group's `when` it would be matched per group
+        val hit = col("__parsed")
+        val withHit = df.withColumn("__parsed",
+          graft.parse.Parsers.regexMatch(col(keyName), pattern))
+        val groups = graft.parse.Parsers.regexColumns(hit, pattern)
+        val parsed = groups.foldLeft(in) { case (f, (n, v)) => f.set(n, v) }
         val projected =
           if (reserve) { if (preserve) parsed else parsed.drop(keyName) }
-          else {
-            val keep = ("tag" +: groupCols) ++ (if (preserve) Seq(keyName) else Nil)
-            parsed.select(keep.distinct.map(col): _*)
-          }
-        rejoin(projected.unionByName(matched.filter(!ok), allowMissingColumns = true))
+          else parsed.select(
+            (("tag" +: groups.map(_._1)) ++ (if (preserve) Seq(keyName) else Nil)).distinct)
+        gated(projected, Some(hit.isNotNull), withHit)
 
       case "rewrite_tag" =>
         val rules = s.all("rule").map { r =>
@@ -387,7 +417,8 @@ object ClassicConfig {
         // rewrite_tag's emitter re-injects into the whole flow, so the
         // loop runs over the full frame; each rule's gate restricts it
         // to tags matching this filter instance (and stops re-matching
-        // once a record is re-tagged out of the pattern).
+        // once a record is re-tagged out of the pattern). A NULL tag
+        // matches no gate, so that record passes through.
         RewriteTag.reinjectLoop(df, "tag", rules)
 
       case "content_modifier" =>
@@ -397,22 +428,22 @@ object ClassicConfig {
         val key = () => s.required("key")
         val out = s.required("action").toLowerCase match {
           case "insert" =>
-            ContentModifier.insert(matched, key(), lit(s.required("value")))
+            ContentModifier.insert(in, key(), lit(s.required("value")))
           case "upsert" =>
-            ContentModifier.upsert(matched, key(), lit(s.required("value")))
-          case "delete" => ContentModifier.delete(matched, key())
+            ContentModifier.upsert(in, key(), lit(s.required("value")))
+          case "delete" => ContentModifier.delete(in, key())
           case "rename" =>
-            ContentModifier.rename(matched, key(), s.required("value"))
-          case "hash" => ContentModifier.hash(matched, key())
+            ContentModifier.rename(in, key(), s.required("value"))
+          case "hash" => ContentModifier.hash(in, key())
           case "extract" =>
             val pattern = s.required("pattern")
             val names = graft.parse.Parsers.groupNames(pattern)
             require(names.nonEmpty,
               "content_modifier extract: pattern has no named groups")
-            ContentModifier.extract(matched, col(key()), pattern,
+            ContentModifier.extract(in, col(key()), pattern,
               names.zipWithIndex.map { case (n, i) => (i + 1, n) })
           case "convert" =>
-            ContentModifier.convert(matched, key(),
+            ContentModifier.convert(in, key(),
               s.required("converted_type").toLowerCase match {
                 case "int"     => "long"
                 case "double"  => "double"
@@ -424,7 +455,7 @@ object ClassicConfig {
           case other => throw new IllegalArgumentException(
             s"content_modifier action $other")
         }
-        rejoin(out)
+        gated(out)
 
       case "multiline" =>
         // filter_multiline with a NAMED parser (YAML multiline_parsers
@@ -486,9 +517,9 @@ object ClassicConfig {
         // action=warn passes records through unchanged.
         def checkOf(kind: String, v: String): Column = kind match {
           case "key_exists" =>
-            if (matched.columns.contains(v)) col(v).isNotNull else lit(false)
+            if (in.has(v)) col(v).isNotNull else lit(false)
           case "key_not_exists" =>
-            if (matched.columns.contains(v)) col(v).isNull else lit(true)
+            if (in.has(v)) col(v).isNull else lit(true)
           case "key_val_is_null" => col(v).isNull
           case "key_val_is_not_null" => col(v).isNotNull
           case "key_val_eq" =>
@@ -504,13 +535,13 @@ object ClassicConfig {
         }
         val ok = checks.reduceOption(_ && _).getOrElse(lit(true))
         s.get("action").map(_.toLowerCase).getOrElse("warn") match {
-          case "exit" => rejoin(matched.filter(
+          case "exit" => keepIf(
             when(ok, lit(true)).otherwise(
               raise_error(lit("expect: record violates invariant"))
-                .cast("boolean"))))
-          case "result_key" => rejoin(matched.withColumn(
-            s.get("result_key").getOrElse("matched"), ok))
-          case _ => rejoin(matched) // warn: pass-through
+                .cast("boolean")))
+          case "result_key" =>
+            gated(in.set(s.get("result_key").getOrElse("matched"), ok))
+          case _ => keepIf(lit(true)) // warn: pass-through
         }
 
       case other => throw new IllegalArgumentException(s"[FILTER] $other unsupported")

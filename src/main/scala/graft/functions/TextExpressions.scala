@@ -1097,7 +1097,60 @@ object HtmlUnescape {
   }
 }
 
+/** Every listed capture group of ONE regex match, in list order — the
+  * parse of a named-group parser in a single pass over the text, where
+  * one `regexp_extract` per group runs the whole match once per group.
+  * Semantics per group match `regexp_extract(s, pattern, g)` after a
+  * successful `rlike(s, pattern)` (first `find()`; a group that did not
+  * take part reads ""); NULL when the pattern does not match.
+  */
+case class RegexGroups(child: Expression, pattern: String, groups: Seq[Int])
+    extends UnaryExpression {
+  @transient private lazy val compiled = java.util.regex.Pattern.compile(pattern)
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(input: Any): Any =
+    RegexGroups.compute(compiled, input.asInstanceOf[UTF8String], groups.toArray)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val p = ctx.addReferenceObj("pattern", java.util.regex.Pattern.compile(pattern),
+      "java.util.regex.Pattern")
+    val g = ctx.addReferenceObj("groups", groups.toArray, "int[]")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.RegexGroups.compute($p, $c, $g);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "regex_groups"
+}
+
+object RegexGroups {
+  /** Static entry shared by eval and generated code. */
+  def compute(p: java.util.regex.Pattern, s: UTF8String, groups: Array[Int]): ArrayData = {
+    val m = p.matcher(s.toString)
+    if (!m.find()) return null
+    val out = new Array[Any](groups.length)
+    var i = 0
+    while (i < groups.length) {
+      val v = m.group(groups(i))
+      out(i) = UTF8String.fromString(if (v == null) "" else v)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
 object TextFunctions {
+  /** Groups `groups` of one match of `pattern` in `s`; NULL on no match. */
+  def regexGroups(s: Column, pattern: String, groups: Seq[Int]): Column =
+    shim.column(RegexGroups(shim.expression(s), pattern, groups))
+
   /** All word n-grams of `text` (split on single spaces). */
   def wordShingles(text: Column, n: Int): Column =
     shim.column(WordShingles(shim.expression(text), n))

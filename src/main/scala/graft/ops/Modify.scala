@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * Spark mapping: fluent-bit records are schemaless, Spark schemas are
   * fixed — so *structural* rules (rename/remove/copy) act on columns
   * (whole-DataFrame), while *value* rules (SET) are per-row `when(...)`
-  * expressions gated by the condition. Wildcard/regex key rules target
+  * expressions gated by the condition. All rules fold into one
+  * projection ([[Fields]]). Wildcard/regex key rules target
   * either column names or a MAP<STRING,STRING> residue column via
   * `map_filter` (codegen'd higher-order function, no UDF).
   */
@@ -33,52 +34,54 @@ object Modify {
   final case class MoveToStart(prefix: String) extends Rule
   final case class MoveToEnd(prefix: String) extends Rule
 
-  sealed trait Condition { def toColumn(df: DataFrame): Column }
+  /** A condition reads the record as it enters the filter. */
+  sealed trait Condition { def toColumn(in: Fields): Column }
   final case class KeyExists(key: String) extends Condition {
-    def toColumn(df: DataFrame): Column =
-      if (df.columns.contains(key)) col(key).isNotNull else lit(false)
+    def toColumn(in: Fields): Column =
+      if (in.has(key)) in(key).isNotNull else lit(false)
   }
   final case class KeyValueEquals(key: String, value: String) extends Condition {
-    def toColumn(df: DataFrame): Column =
-      if (df.columns.contains(key)) col(key).cast("string") === value else lit(false)
+    def toColumn(in: Fields): Column =
+      if (in.has(key)) in(key).cast("string") === value else lit(false)
   }
   final case class KeyValueMatches(key: String, pattern: String) extends Condition {
-    def toColumn(df: DataFrame): Column =
-      if (df.columns.contains(key)) coalesce(col(key).cast("string").rlike(pattern), lit(false))
+    def toColumn(in: Fields): Column =
+      if (in.has(key)) coalesce(in(key).cast("string").rlike(pattern), lit(false))
       else lit(false)
   }
 
-  def apply(df: DataFrame, rules: Seq[Rule], conditions: Seq[Condition] = Nil): DataFrame = {
+  def apply(df: DataFrame, rules: Seq[Rule], conditions: Seq[Condition] = Nil): DataFrame =
+    fields(Fields.of(df), rules, conditions).frame(df)
+
+  /** The rules' result over the record `in`. The conditions are read
+    * once, on `in` (modify.c evaluates them before any rule runs).
+    */
+  def fields(in: Fields, rules: Seq[Rule], conditions: Seq[Condition] = Nil): Fields = {
     val gate: Option[Column] =
-      if (conditions.isEmpty) None else Some(conditions.map(_.toColumn(df)).reduce(_ && _))
-    rules.foldLeft(df) { (d, rule) =>
+      if (conditions.isEmpty) None else Some(conditions.map(_.toColumn(in)).reduce(_ && _))
+    rules.foldLeft(in) { (f, rule) =>
       rule match {
         case Rename(from, to, hard) =>
-          if (!d.columns.contains(from)) d
-          else if (d.columns.contains(to) && !hard) d
-          else if (d.columns.contains(to)) d.drop(to).withColumnRenamed(from, to)
-          else d.withColumnRenamed(from, to)
+          if (!f.has(from) || (f.has(to) && !hard)) f
+          else f.drop(to).rename(from, to)
         case Add(key, value) =>
-          if (d.columns.contains(key)) d
-          else d.withColumn(key, gated(gate, value, lit(null)))
+          if (f.has(key)) f
+          else f.set(key, gated(gate, value, lit(null)))
         case Set(key, value) =>
-          val orig = if (d.columns.contains(key)) col(key) else lit(null)
-          d.withColumn(key, gated(gate, value, orig))
-        case Remove(key) => d.drop(key)
-        case RemoveWildcard(prefix) =>
-          d.drop(d.columns.filter(_.startsWith(prefix)).toIndexedSeq: _*)
-        case RemoveRegex(pattern) =>
-          d.drop(d.columns.filter(_.matches(pattern)).toIndexedSeq: _*)
+          val orig = if (f.has(key)) f(key) else lit(null)
+          f.set(key, gated(gate, value, orig))
+        case Remove(key) => f.drop(key)
+        case RemoveWildcard(prefix) => f.drop(f.names.filter(_.startsWith(prefix)): _*)
+        case RemoveRegex(pattern) => f.drop(f.names.filter(_.matches(pattern)): _*)
         case Copy(from, to, hard) =>
-          if (!d.columns.contains(from)) d
-          else if (d.columns.contains(to) && !hard) d
-          else d.withColumn(to, gated(gate, col(from), lit(null)))
+          if (!f.has(from) || (f.has(to) && !hard)) f
+          else f.set(to, gated(gate, f(from), lit(null)))
         case MoveToStart(prefix) =>
-          val (m, rest) = d.columns.partition(_.startsWith(prefix))
-          d.select((m ++ rest).map(col).toIndexedSeq: _*)
+          val (m, rest) = f.names.partition(_.startsWith(prefix))
+          f.select(m ++ rest)
         case MoveToEnd(prefix) =>
-          val (m, rest) = d.columns.partition(_.startsWith(prefix))
-          d.select((rest ++ m).map(col).toIndexedSeq: _*)
+          val (m, rest) = f.names.partition(_.startsWith(prefix))
+          f.select(rest ++ m)
       }
     }
   }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** filter_rewrite_tag (reference `plugins/filter_rewrite_tag/
   * rewrite_tag.c:425`, rule struct rewrite_tag.h:32-48): rule =
@@ -10,8 +11,9 @@ import org.apache.spark.sql.functions._
   * groups); `keep` controls whether the original also survives.
   *
   * Spark mapping: the new tag is a codegen'd `regexp_replace`-style
-  * template; re-emission = union of the rewritten subset with the
-  * original flow (bounded, no recursion — SURVEY §7.4(4)).
+  * template; re-emission is a bounded run of per-row re-tagging
+  * projections ending in one `explode` (no recursion, no union —
+  * SURVEY §7.4(4)).
   */
 object RewriteTag {
 
@@ -27,13 +29,8 @@ object RewriteTag {
   /** Apply one rule. Returns the full routed DataFrame: rewritten records
     * (new tag) plus originals (all if keep, else only non-matching).
     */
-  def apply(df: DataFrame, tagCol: String, rule: Rule): DataFrame = {
-    val matches =
-      coalesce(rule.gate, lit(false)) && coalesce(rule.field.rlike(rule.pattern), lit(false))
-    val rewritten = df.filter(matches).withColumn(tagCol, rule.newTagTemplate)
-    val kept = if (rule.keep) df else df.filter(!matches)
-    kept.unionByName(rewritten)
-  }
+  def apply(df: DataFrame, tagCol: String, rule: Rule): DataFrame =
+    reinjectLoop(df, tagCol, Seq(rule), maxHops = 1)
 
   /** `$1`-style capture-group reference for tag templates. */
   def capture(field: Column, pattern: String, group: Int): Column =
@@ -41,9 +38,10 @@ object RewriteTag {
 
   /** Re-injection loop (rewrite_tag.c:425 + in_emitter): rewritten
     * records re-enter routing and may match other rules under their new
-    * tag. The reference bounds this by emitter capacity; here it is an
-    * iterative fixpoint over a work set, `maxHops` deep — plain unions,
-    * no driver-side recursion, each hop a narrow transformation.
+    * tag. The reference bounds this by emitter capacity; here it is
+    * `maxHops` deep, in one pass over `df`: each hop is a projection that
+    * re-tags the records a rule matches, and one `explode` at the end
+    * emits every record's kept originals plus its final form.
     *
     * Faithful to the reference's per-pass loop (rewrite_tag.c:380-390):
     * the FIRST matching rule wins — it fixes the new tag and its `keep`
@@ -55,6 +53,10 @@ object RewriteTag {
     * re-emission never manufactures duplicates (one copy per match).
     * Records still matching after `maxHops` are emitted as-is — the
     * bounded analogue of the reference's emitter backlog.
+    *
+    * The `explode` also keeps an output's route filter on the tag above
+    * the hops: pushed through them, Catalyst would inline every hop's tag
+    * expression into the filter, doubling the rule regexes per hop.
     */
   def reinjectLoop(df: DataFrame, tagCol: String, rules: Seq[Rule],
                    maxHops: Int = 4): DataFrame = {
@@ -69,14 +71,19 @@ object RewriteTag {
     val keepOriginal = rules.zip(matches).foldRight(lit(false)) {
       case ((r, m), els) => when(m, lit(r.keep)).otherwise(els)
     }
-    var settled = Vector.empty[DataFrame]
-    var work = df
-    (1 to maxHops).foreach { _ =>
-      val matched = work.filter(anyMatch)
-      settled :+= work.filter(!anyMatch)
-      settled :+= matched.filter(keepOriginal)
-      work = matched.withColumn(tagCol, newTag)
+    // the tags a record's kept originals settle under, hop by hop
+    val kept = "__rewrite_tag_kept"
+    val start = df.withColumn(kept,
+      array().cast(ArrayType(df.schema(tagCol).dataType)))
+    val hopped = (1 to maxHops).foldLeft(start) { (d, _) =>
+      d.select(d.columns.toSeq.map {
+        case `tagCol` => when(anyMatch, newTag).otherwise(col(tagCol)).as(tagCol)
+        case `kept` => when(anyMatch && keepOriginal,
+          concat(col(kept), array(col(tagCol)))).otherwise(col(kept)).as(kept)
+        case c => col(c)
+      }: _*)
     }
-    (settled :+ work).reduce(_ unionByName _)
+    hopped.withColumn(tagCol, explode(concat(col(kept), array(col(tagCol)))))
+      .drop(kept)
   }
 }

@@ -60,15 +60,29 @@ object Parsers {
     * in the caller (filter_parser semantics, filter_parser.c:174).
     */
   def regex(df: DataFrame, source: Column, pattern: String,
-            types: Map[String, String] = Map.empty): DataFrame = {
-    val idx = groupIndexes(pattern)
-    val matched = source.rlike(pattern)
-    groupNames(pattern).foldLeft(df) { (d, name) =>
-      val raw = regexp_extract(source, pattern, idx(name))
-      val v = when(matched, types.get(name).map(t => raw.try_cast(t)).getOrElse(raw))
-      d.withColumn(name, v)
+            types: Map[String, String] = Map.empty): DataFrame =
+    regexColumns(regexMatch(source, pattern), pattern, types).foldLeft(df) {
+      case (d, (name, v)) => d.withColumn(name, v)
     }
+
+  /** One match of `pattern` against `source`: each named group's text,
+    * in group order, or NULL when the pattern does not match. The text is
+    * matched once, however many groups the pattern names.
+    */
+  def regexMatch(source: Column, pattern: String): Column = {
+    val idx = groupIndexes(pattern)
+    graft.functions.TextFunctions.regexGroups(source, pattern, groupNames(pattern).map(idx))
   }
+
+  /** The named groups of `matched`, a [[regexMatch]] of `pattern`, as
+    * (name, value) expressions in group order; NULL where it is NULL.
+    */
+  def regexColumns(matched: Column, pattern: String,
+                   types: Map[String, String] = Map.empty): Seq[(String, Column)] =
+    groupNames(pattern).zipWithIndex.map { case (name, i) =>
+      val raw = matched.getItem(i)
+      name -> types.get(name).map(t => raw.try_cast(t)).getOrElse(raw)
+    }
 
   // ----------------------------------------------------------- json / csv
 

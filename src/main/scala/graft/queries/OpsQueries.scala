@@ -226,12 +226,12 @@ object OpsQueries {
     GraftQuery(
       "p_content_modifier",
       (s, dir) => {
-        val hashed = ContentModifier.hash(
-          Tables.documents(s, dir).withColumn("text_sha", col("text")), "text_sha")
+        val docs = Tables.documents(s, dir)
+          .withColumn("text_sha", col("text")).withColumn("n_chars_str", col("n_chars"))
+        val hashed = ContentModifier.hash(Fields.of(docs), "text_sha")
         val extracted = ContentModifier.extract(
           hashed, col("text"), "^(\\w+)", Seq(1 -> "first_word"))
-        ContentModifier.convert(
-          extracted.withColumn("n_chars_str", col("n_chars")), "n_chars_str", "string")
+        ContentModifier.convert(extracted, "n_chars_str", "string").frame(docs)
           .select(col("doc_id"), col("text_sha"), col("first_word"), col("n_chars_str"))
       },
       Some("""SELECT doc_id, sha256(text) AS text_sha,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.config.ClassicConfig
@@ -270,5 +271,152 @@ class ConfigSpec extends AnyFunSuite {
     assert(line.contains("\"hostname\":\"h1\""))
     assert(line.contains("\"ddtags\":\"env:prod\""))
     assert(line.contains("\"message\":\"oops\""))
+  }
+
+  // ------------------------------------------------ per-row Match gating
+  // Each gated op below runs under a non-`*` Match over two tags. The
+  // expected lines are the exact `to_json` output, key order included,
+  // of the split-filter-union plans the per-row form replaced.
+
+  /** Every line of output `id` as `tag line`, sorted. */
+  private def tagged(outs: Map[String, DataFrame], id: String): Seq[String] =
+    outs(id).select(concat_ws(" ", col("tag"), col("line"))).as[String]
+      .collect().sorted.toSeq
+
+  private def webAndSys(web: DataFrame, sys: DataFrame, filters: String,
+                        outputs: String = ""): Map[String, DataFrame] =
+    ClassicConfig.assemble(spark,
+      s"""[INPUT]
+         |    name lib
+         |    tag  app.web
+         |[INPUT]
+         |    name lib
+         |    tag  sys.log
+         |$filters
+         |[OUTPUT]
+         |    name   file
+         |    match  *
+         |    format json
+         |$outputs""".stripMargin,
+      streams = Map("app.web" -> web, "sys.log" -> sys))
+
+  test("parser under Match app.*: reserve_data x preserve_key, unparseable line, other tag") {
+    val web = Seq(("GET /a 200", "old", 1L), ("PUT /b 500", "old", 2L),
+      ("not an access line", "old", 3L)).toDF("log", "code", "id")
+    val sys = Seq(("GET /c 200", "kernel", 4L)).toDF("log", "unit", "id")
+    def lines(reserve: String, preserve: String): Seq[String] = tagged(webAndSys(web, sys,
+      s"""[PARSER]
+         |    name   access
+         |    format regex
+         |    regex  ^(?<method>[A-Z]+) (?<path>\\S+) (?<code>\\d+)$$
+         |[FILTER]
+         |    name         parser
+         |    match        app.*
+         |    key_name     log
+         |    parser       access
+         |    reserve_data $reserve
+         |    preserve_key $preserve""".stripMargin), "file:*")
+    assert(lines("off", "off") == Seq(
+      "app.web {\"code\":\"old\",\"log\":\"not an access line\",\"id\":3}",
+      "app.web {\"method\":\"GET\",\"path\":\"/a\",\"code\":\"200\"}",
+      "app.web {\"method\":\"PUT\",\"path\":\"/b\",\"code\":\"500\"}",
+      "sys.log {\"log\":\"GET /c 200\",\"id\":4,\"unit\":\"kernel\"}"))
+    assert(lines("off", "on") == Seq(
+      "app.web {\"code\":\"old\",\"log\":\"not an access line\",\"id\":3}",
+      "app.web {\"method\":\"GET\",\"path\":\"/a\",\"code\":\"200\",\"log\":\"GET /a 200\"}",
+      "app.web {\"method\":\"PUT\",\"path\":\"/b\",\"code\":\"500\",\"log\":\"PUT /b 500\"}",
+      "sys.log {\"log\":\"GET /c 200\",\"id\":4,\"unit\":\"kernel\"}"))
+    assert(lines("on", "off") == Seq(
+      "app.web {\"code\":\"200\",\"id\":1,\"method\":\"GET\",\"path\":\"/a\"}",
+      "app.web {\"code\":\"500\",\"id\":2,\"method\":\"PUT\",\"path\":\"/b\"}",
+      "app.web {\"code\":\"old\",\"id\":3,\"log\":\"not an access line\"}",
+      "sys.log {\"id\":4,\"unit\":\"kernel\",\"log\":\"GET /c 200\"}"))
+    assert(lines("on", "on") == Seq(
+      "app.web {\"log\":\"GET /a 200\",\"code\":\"200\",\"id\":1,\"method\":\"GET\",\"path\":\"/a\"}",
+      "app.web {\"log\":\"PUT /b 500\",\"code\":\"500\",\"id\":2,\"method\":\"PUT\",\"path\":\"/b\"}",
+      "app.web {\"log\":\"not an access line\",\"code\":\"old\",\"id\":3}",
+      "sys.log {\"log\":\"GET /c 200\",\"id\":4,\"unit\":\"kernel\"}"))
+  }
+
+  test("modify under Match app.* with a Condition: rename, hard_rename, add, set, copy") {
+    val web = Seq(("error", "h1", "u1", "a1", "new", 1L), ("info", "h2", "u2", null, "new", 2L))
+      .toDF("level", "host", "user", "account", "stage", "id")
+    val sys = Seq(("error", "s1", 3L)).toDF("level", "host", "id")
+    val outs = webAndSys(web, sys,
+      """[FILTER]
+        |    name        modify
+        |    match       app.*
+        |    condition   key_value_equals level error
+        |    rename      host remote
+        |    rename      id level
+        |    hard_rename user account
+        |    add         env prod
+        |    add         level ignored
+        |    set         stage done
+        |    copy        level severity""".stripMargin)
+    assert(tagged(outs, "file:*") == Seq(
+      "app.web {\"level\":\"error\",\"remote\":\"h1\",\"account\":\"u1\",\"stage\":\"done\",\"id\":1,\"env\":\"prod\",\"severity\":\"error\"}",
+      "app.web {\"level\":\"info\",\"remote\":\"h2\",\"account\":\"u2\",\"stage\":\"new\",\"id\":2}",
+      "sys.log {\"level\":\"error\",\"id\":3,\"host\":\"s1\"}"))
+  }
+
+  test("rewrite_tag keep=true chained over two hops keeps every copy") {
+    val web = Seq(("error", 1L), ("error", 1L), ("info", 2L)).toDF("level", "id")
+    val sys = Seq(("error", 3L)).toDF("level", "id")
+    val outs = webAndSys(web, sys,
+      """[FILTER]
+        |    name  rewrite_tag
+        |    match a*
+        |    rule  $tag ^alert\.err$ page.err true
+        |    rule  $level ^(err)or$ alert.$1 true""".stripMargin,
+      """[OUTPUT]
+        |    name   file
+        |    match  page.*
+        |    format json""".stripMargin)
+    assert(tagged(outs, "file:*") == Seq(
+      "alert.err {\"level\":\"error\",\"id\":1}",
+      "alert.err {\"level\":\"error\",\"id\":1}",
+      "app.web {\"level\":\"error\",\"id\":1}",
+      "app.web {\"level\":\"error\",\"id\":1}",
+      "app.web {\"level\":\"info\",\"id\":2}",
+      "page.err {\"level\":\"error\",\"id\":1}",
+      "page.err {\"level\":\"error\",\"id\":1}",
+      "sys.log {\"level\":\"error\",\"id\":3}"))
+    assert(tagged(outs, "file:page.*") == Seq(
+      "page.err {\"level\":\"error\",\"id\":1}",
+      "page.err {\"level\":\"error\",\"id\":1}"))
+  }
+
+  test("a record with a null tag is dropped by every Match-gated filter but rewrite_tag") {
+    // No Match admits a NULL tag, so the gated filters drop the record;
+    // nothing counts the drop. rewrite_tag passes it through.
+    val in = Seq[(String, String)](("app.web", "GET /a 200"), ("sys.log", "x"), (null, "y"))
+      .toDF("tag", "log")
+    val filters = Seq(
+      "name grep\n    match app.*\n    exclude log ^zzz$",
+      "name grep\n    match *\n    exclude log ^zzz$",
+      "name parser\n    match app.*\n    key_name log\n    parser access",
+      "name modify\n    match app.*\n    add env prod",
+      "name record_modifier\n    match app.*\n    record env prod",
+      "name content_modifier\n    match app.*\n    action insert\n    key env\n    value prod",
+      "name rewrite_tag\n    match app.*\n    rule $log ^GET alert false")
+    val counts = filters.map { f =>
+      val outs = ClassicConfig.assemble(spark,
+        s"""[INPUT]
+           |    name lib
+           |    tag  app.web
+           |[PARSER]
+           |    name   access
+           |    format regex
+           |    regex  ^(?<method>[A-Z]+) (?<path>\\S+)
+           |[FILTER]
+           |    $f
+           |[STREAM_TASK]
+           |    name all
+           |    exec SELECT COUNT(*) AS n FROM STREAM:CONF;""".stripMargin,
+        streams = Map("app.web" -> in))
+      outs("stream_task:all").collect().head.getAs[Long]("n")
+    }
+    assert(counts == Seq(2L, 2L, 2L, 2L, 2L, 2L, 3L))
   }
 }

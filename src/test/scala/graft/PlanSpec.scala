@@ -570,4 +570,107 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"),
       "a filter+modify pipeline is map-only — no shuffle:\n" + plan.take(3000))
   }
+
+  // The access-shaped config chain: two tail inputs → parser → grep →
+  // modify → rewrite_tag → file json and loki.
+  private val accessRegex =
+    """^(?<host>[^ ]*) [^ ]* (?<user>[^ ]*) \[(?<time>[^\]]*)\] "(?<method>\S+) (?<path>[^ ]*) [^"]*" (?<code>[^ ]*) (?<size>[^ ]*) "(?<referer>[^"]*)" "(?<agent>[^"]*)"$"""
+
+  private def accessInputs(): (String, String) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_access_plan")
+    def write(name: String, lines: String*): String = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      f.toString
+    }
+    (write("access.log",
+      """10.0.0.1 - alice [10/Oct/2024:13:55:36 +0000] "GET /a HTTP/1.1" 200 12 "-" "curl"""",
+      """10.0.0.2 - bob [10/Oct/2024:13:55:37 +0000] "GET /b HTTP/1.1" 502 0 "-" "curl""""),
+     write("app.log", "started", "ready"))
+  }
+
+  test("config filter chain: one scan leaf per [INPUT] in every output's plan") {
+    import graft.config.ClassicConfig
+    val (access, app) = accessInputs()
+    val outs = ClassicConfig.assemble(spark,
+      s"""[INPUT]
+         |    name tail
+         |    path $access
+         |    tag  web.access
+         |[INPUT]
+         |    name tail
+         |    path $app
+         |    tag  app.log
+         |[PARSER]
+         |    name   apache
+         |    format regex
+         |    regex  $accessRegex
+         |[FILTER]
+         |    name     parser
+         |    match    web.*
+         |    key_name value
+         |    parser   apache
+         |[FILTER]
+         |    name    grep
+         |    match   web.*
+         |    exclude path ^/healthz
+         |[FILTER]
+         |    name   modify
+         |    match  web.*
+         |    rename host remote_addr
+         |    add    env prod
+         |[FILTER]
+         |    name  rewrite_tag
+         |    match web.*
+         |    rule  $$code ^(5..)$$ err.$$1 false
+         |[OUTPUT]
+         |    name   file
+         |    match  *
+         |    format json
+         |[OUTPUT]
+         |    name   loki
+         |    match  err.*
+         |    labels job=fluentbit,code=$$code
+         |""".stripMargin)
+    assert(outs.keySet == Set("file:*", "loki:err.*"))
+    outs.foreach { case (id, df) =>
+      val leaves = df.queryExecution.analyzed.collectLeaves()
+      assert(leaves.size == 2, s"$id: ${leaves.size} leaves")
+      val scans = df.queryExecution.optimizedPlan.collectLeaves()
+      assert(scans.size == 2, s"$id: ${scans.size} scans")
+    }
+    val tags = outs("file:*").select("tag").collect().map(_.getString(0)).sorted
+    assert(tags.toSeq == Seq("app.log", "app.log", "err.502", "web.access"))
+  }
+
+  test("rewrite_tag hops add a fixed number of regexes to the optimized plan") {
+    // the same chain from the ops the config frontend calls, since a
+    // config cannot set the hop bound
+    import org.apache.spark.sql.catalyst.expressions.{RLike, RegExpExtract}
+    import graft.functions.RegexGroups
+    import org.apache.spark.sql.functions._
+    import graft.ops.{Grep, Modify, RewriteTag}
+    import graft.route.Router
+    val (access, app) = accessInputs()
+    val in = spark.read.text(access).withColumn("tag", lit("web.access"))
+      .unionByName(spark.read.text(app).withColumn("tag", lit("app.log")))
+    val web = Router.tagMatch(col("tag"), "web.*")
+    val parsed = graft.parse.Parsers.regex(in, col("value"), accessRegex)
+    val chain = Modify(Grep(parsed, Seq(Grep.Rule(col("path"), "^/healthz", exclude = true))),
+      Seq(Modify.Rename("host", "remote_addr"), Modify.Add("env", lit("prod"))))
+    val rule = RewriteTag.Rule(col("code"), "^(5..)$",
+      concat(lit("err."), RewriteTag.capture(col("code"), "^(5..)$", 1)), keep = false, gate = web)
+    def regexes(hops: Int): Int = {
+      val routed = Router.route(RewriteTag.reinjectLoop(chain, "tag", Seq(rule), hops), "tag", "*")
+      val out = routed.select(graft.sinks.Formats.jsonLine(
+        routed.columns.filterNot(_ == "tag").toSeq.map(c => c -> col(c))))
+      out.queryExecution.optimizedPlan.map(_.expressions.map(_.collect {
+        case _: RLike | _: RegExpExtract | _: RegexGroups => 1
+      }.size).sum).sum
+    }
+    val counts = (1 to 5).map(regexes)
+    val step = counts(1) - counts(0)
+    assert(counts.zipWithIndex.forall { case (c, i) => c == counts(0) + i * step },
+      s"not linear in hops: $counts")
+  }
 }
