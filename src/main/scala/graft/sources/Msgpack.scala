@@ -37,7 +37,7 @@ object Msgpack {
     */
   final class Incomplete extends Exception
 
-  private def need(b: Array[Byte], off: Int, n: Int): Unit =
+  private def need(b: Array[Byte], off: Int, n: Long): Unit =
     if (off + n > b.length) throw new Incomplete
 
   /** Reject negative / overflowed 32-bit lengths as PROTOCOL errors —
@@ -82,7 +82,7 @@ object Msgpack {
     (MMap(entries.result()), o)
   }
   private def ext(b: Array[Byte], off: Int, n: Int): (V, Int) = {
-    need(b, off, 1 + n)
+    need(b, off, 1L + n)
     (MExt(b(off), java.util.Arrays.copyOfRange(b, off + 1, off + 1 + n)), off + 1 + n)
   }
 
@@ -135,6 +135,79 @@ object Msgpack {
       case other => throw new IllegalArgumentException(
         f"unsupported msgpack type 0x$other%02x at $off")
     }
+  }
+
+  /** Resumable state of a [[walk]]: the offset of the next header and
+    * how many objects are still to be walked past.
+    */
+  final class Walk(var pos: Int) { var left: Long = 1L }
+
+  /** Advance `w` over `b[w.pos, end)` one header at a time, decoding
+    * nothing: a container adds its children to `w.left`, a str, bin, ext
+    * or number jumps over its payload. Returns true once the object is
+    * complete (`w.pos` is then its end). Returns false when `end` cuts it
+    * short, leaving `w` at the first header not yet whole, so the next
+    * call resumes there and each byte is scanned once. Rejects exactly
+    * what [[decode]] rejects, in the same order. No recursion and no
+    * allocation.
+    */
+  def walk(b: Array[Byte], end: Int, w: Walk): Boolean = {
+    while (w.left > 0) {
+      val p = w.pos
+      if (p >= end) return false
+      val t = u8(b, p)
+      // length bytes after the type byte, then payload bytes and children
+      val h = t match {
+        case 0xc4 | 0xc7 | 0xd9 => 1
+        case 0xc5 | 0xc8 | 0xda | 0xdc | 0xde => 2
+        case 0xc6 | 0xc9 | 0xdb | 0xdd | 0xdf => 4
+        case _ => 0
+      }
+      if (p + 1 + h > end) return false
+      val n: Long = h match {
+        case 0 => 0L
+        case 1 => u8(b, p + 1).toLong
+        case 2 => u16(b, p + 1).toLong
+        case _ => len(u32(b, p + 1).toInt).toLong
+      }
+      var body = 0L
+      var kids = 0L
+      t match {
+        case x if x <= 0x7f || x >= 0xe0 || x == 0xc0 || x == 0xc2 || x == 0xc3 =>
+        case x if (x & 0xf0) == 0x80 => kids = 2L * (x & 0x0f)
+        case x if (x & 0xf0) == 0x90 => kids = x & 0x0f
+        case x if (x & 0xe0) == 0xa0 => body = x & 0x1f
+        case 0xc4 | 0xc5 | 0xc6 | 0xd9 | 0xda | 0xdb => body = n
+        case 0xc7 | 0xc8 | 0xc9 => body = 1 + n
+        case 0xcc | 0xd0 => body = 1
+        case 0xcd | 0xd1 | 0xd4 => body = 2
+        case 0xd5 => body = 3
+        case 0xca | 0xce | 0xd2 => body = 4
+        case 0xd6 => body = 5
+        case 0xcb | 0xcf | 0xd3 => body = 8
+        case 0xd7 => body = 9
+        case 0xd8 => body = 17
+        case 0xdc | 0xdd => kids = n
+        case 0xde | 0xdf => kids = 2 * n
+        case other => throw new IllegalArgumentException(
+          f"unsupported msgpack type 0x$other%02x at $p")
+      }
+      val next = p + 1L + h + body
+      if (next > end) return false
+      w.pos = next.toInt
+      w.left += kids - 1
+    }
+    true
+  }
+
+  /** End offset of the object at `off`, found by [[walk]] without
+    * decoding it. Throws [[Incomplete]] and rejects exactly where
+    * [[decode]] does.
+    */
+  def skip(b: Array[Byte], off: Int): Int = {
+    val w = new Walk(off)
+    if (!walk(b, b.length, w)) throw new Incomplete
+    w.pos
   }
 
   /** Render a value as the string form used for the schemaless body map
@@ -200,14 +273,6 @@ object Msgpack {
     out.toByteArray
   }
 
-  /** The `compressed` algorithm declared in a chunk's option map
-    * (in_forward/fw_prot.c:107): "gzip" / "zstd" / absent.
-    */
-  private def declaredCompression(rest: Seq[V]): Option[String] =
-    rest.collectFirst { case MMap(es) =>
-      es.collectFirst { case (MStr("compressed"), MStr(alg)) => alg }
-    }.flatten
-
   /** Parse one top-level Forward entry (fluent forward protocol v1):
     * `[tag, time, record]` (Message mode), `[tag, [[time, record]...]]`
     * (Forward mode), or `[tag, bin]` (PackedForward — the bin payload is
@@ -220,30 +285,14 @@ object Msgpack {
   def forwardEvents(v: V): Seq[Event] = v match {
     case MArr(MStr(tag) +: rest) => rest match {
       case (entries: MArr) +: _ =>
-        entries.items.map {
-          case MArr(Vector(t, rec)) => event(tag, t, rec)
-          case other => throw new IllegalArgumentException(s"bad entry $other")
-        }
-      case MBin(packed0) +: _ =>
-        val declared = declaredCompression(rest.drop(1))
-        // Magic bytes win over the declared option in BOTH directions
-        // (fw_prot.c:1729-1739): a gzip-magic payload is gunzipped even
-        // when undeclared, and a declared "gzip"/"zstd" whose payload
-        // carries no matching magic is passed through raw — never handed
-        // to the codec to die with a raw ZipException.
-        val packed =
-          if (sniffGzip(packed0)) gunzip(packed0)
-          else if (Zstd.sniff(packed0))
-            Zstd.decompress(packed0, MaxPackedBytes)
-          else packed0
+        entries.items.map(entry(tag, _))
+      case MBin(packed) +: _ =>
+        val payload = unpack(packed)
         var o = 0
         val out = Seq.newBuilder[Event]
-        while (o < packed.length) {
-          val (e, o2) = decode(packed, o)
-          e match {
-            case MArr(Vector(t, rec)) => out += event(tag, t, rec)
-            case other => throw new IllegalArgumentException(s"bad packed $other")
-          }
+        while (o < payload.length) {
+          val (e, o2) = decode(payload, o)
+          out += entry(tag, e)
           o = o2
         }
         out.result()
@@ -251,6 +300,24 @@ object Msgpack {
       case other => throw new IllegalArgumentException(s"bad forward array $other")
     }
     case other => throw new IllegalArgumentException(s"bad forward message $other")
+  }
+
+  /** A PackedForward payload as its entry stream. Magic bytes win over
+    * the declared `compressed` option in BOTH directions
+    * (fw_prot.c:1729-1739): a gzip-magic payload is gunzipped even when
+    * undeclared, and a declared "gzip"/"zstd" whose payload carries no
+    * matching magic is passed through raw — never handed to the codec to
+    * die with a raw ZipException.
+    */
+  private[sources] def unpack(packed: Array[Byte]): Array[Byte] =
+    if (sniffGzip(packed)) gunzip(packed)
+    else if (Zstd.sniff(packed)) Zstd.decompress(packed, MaxPackedBytes)
+    else packed
+
+  /** One `[time, record]` entry of `tag` as an [[Event]]. */
+  private[sources] def entry(tag: String, v: V): Event = v match {
+    case MArr(Vector(t, rec)) => event(tag, t, rec)
+    case other => throw new IllegalArgumentException(s"bad entry $other")
   }
 
   private def event(tag: String, t: V, rec: V): Event = {

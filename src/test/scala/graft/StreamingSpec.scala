@@ -1,8 +1,14 @@
 package graft
 
+import org.apache.spark.sql.connector.catalog.SupportsRead
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
+import graft.sources.Msgpack
 import graft.streaming._
 import graft.streaming.Multiline.{Assembled, Line}
 import graft.streaming.Stateful._
@@ -950,6 +956,297 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     val got = spark.table("sec_relay_in").as[(String, String)].collect().toSet
     assert(got == Set(("app.sec", "authed")))
+  }
+
+  // ------------------------------------------- Forward source wire contract
+
+  /** A Forward source's stream and its port, driven without a query
+    * through the public TableProvider path.
+    */
+  private def withForwardStream(body: (MicroBatchStream, Int) => Unit): Unit = {
+    val probe = new java.net.ServerSocket(0)
+    val port = probe.getLocalPort
+    probe.close()
+    val stream = new graft.sources.ForwardServerSource()
+      .getTable(graft.sources.ForwardServerSource.Schema, Array.empty[Transform],
+        java.util.Map.of("port", port.toString))
+      .asInstanceOf[SupportsRead].newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+      .toMicroBatchStream(java.nio.file.Files.createTempDirectory("fwd_ckpt").toString)
+    try body(stream, port) finally stream.stop()
+  }
+
+  private def fwdConnect(port: Int): java.net.Socket = {
+    val deadline = System.currentTimeMillis + 30000
+    var sock: java.net.Socket = null
+    while (sock == null) {
+      try sock = new java.net.Socket("127.0.0.1", port)
+      catch {
+        case e: java.net.ConnectException =>
+          if (System.currentTimeMillis > deadline) throw e
+          Thread.sleep(50)
+      }
+    }
+    sock.setTcpNoDelay(true)
+    sock
+  }
+
+  private def offsetOf(s: MicroBatchStream): Long = s.latestOffset().json().toLong
+
+  private def awaitOffset(s: MicroBatchStream, n: Long): Unit = {
+    val deadline = System.currentTimeMillis + 30000
+    while (offsetOf(s) < n && System.currentTimeMillis < deadline) Thread.sleep(5)
+    assert(offsetOf(s) == n)
+  }
+
+  private def readN(in: java.io.InputStream, n: Int): Array[Byte] = {
+    val b = new Array[Byte](n)
+    var off = 0
+    while (off < n) {
+      val r = in.read(b, off, n - off)
+      assert(r >= 0, s"connection closed after $off of $n bytes")
+      off += r
+    }
+    b
+  }
+
+  /** EOF, or the reset a close with unread bytes may turn into. */
+  private def closedByPeer(in: java.io.InputStream): Boolean =
+    try in.read() == -1 catch { case _: java.net.SocketException => true }
+
+  private def fwdPartitions(s: MicroBatchStream, from: Long, to: Long): Seq[InputPartition] =
+    s.planInputPartitions(s.deserializeOffset(from.toString), s.deserializeOffset(to.toString)).toSeq
+
+  private def javaSerialized(o: AnyRef): Array[Byte] = {
+    val bo = new java.io.ByteArrayOutputStream()
+    val oo = new java.io.ObjectOutputStream(bo)
+    oo.writeObject(o); oo.close()
+    bo.toByteArray
+  }
+
+  /** The rows of `parts`, each partition shipped as a task ships it. */
+  private def fwdRows(s: MicroBatchStream, parts: Seq[InputPartition]): Seq[ForwardCorpus.Row] = {
+    val factory = s.createReaderFactory()
+    parts.flatMap { p =>
+      val shipped = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(
+        javaSerialized(p))).readObject().asInstanceOf[InputPartition]
+      val reader = factory.createReader(shipped)
+      val out = Seq.newBuilder[ForwardCorpus.Row]
+      while (reader.next()) {
+        val r = reader.get()
+        val m = r.getMap(2)
+        out += ((r.getUTF8String(0).toString, r.getLong(1), (0 until m.numElements).map(i =>
+          m.keyArray.getUTF8String(i).toString -> m.valueArray.getUTF8String(i).toString)))
+      }
+      reader.close()
+      out.result()
+    }
+  }
+
+  private def ackedFrame(tag: String, id: String, records: Seq[Map[String, String]]): Array[Byte] = {
+    import graft.sources.Msgpack._
+    encode(MArr(Vector(MStr(tag), MArr(records.zipWithIndex.map { case (r, i) =>
+      MArr(Vector(MInt(1704067200L + i), MMap(r.toVector.map { case (k, v) =>
+        (MStr(k): V) -> (MStr(v): V) })))
+    }.toVector), MMap(Vector(MStr("chunk") -> MStr(id))))))
+  }
+
+  /** `ForwardCorpus` rows as `forwardEvents(decode(frame))` converted them
+    * before the source buffered wire bytes (generated at that commit).
+    */
+  private val corpusRows: Map[String, Seq[ForwardCorpus.Row]] = Map(
+    "message" -> Seq(
+      ("app.msg", 1704067200000000L, Seq("log" -> "hello", "level" -> "info"))),
+    "message_opt" -> Seq(
+      ("app.msg", 1704067200250000L, Seq("message" -> "bare line"))),
+    "forward" -> Seq(
+      ("app.fwd", 1704067201123456L, Seq("e" -> "ext(5,2)", "a" -> "[1,\"x\",null,true]", "b" -> "AQID", "m" -> "{\"k\":1.5,\"2\":\"two\",\"q\\\"\":\"back\\\\slash\"}", "-3" -> "-0.25")),
+      ("app.fwd", 1704067202000000L, Seq("k" -> "2", "j" -> "x")),
+      ("app.fwd", 1704067200000000L, Seq("f7" -> "77", "f6" -> "66", "f1" -> "11", "f5" -> "55", "f3" -> "last", "f4" -> "44", "f2" -> "22")),
+      ("app.fwd", 7000000L, Seq("message" -> "[1,2]"))),
+    "forward_big" -> Seq(
+      ("app.big", 1704067204000000L, Seq("log" -> ForwardCorpus.big))),
+    "forward_many" -> Seq(
+      ("app.many", 1000000000L, Seq("i" -> "0")),
+      ("app.many", 1001000000L, Seq("i" -> "1")),
+      ("app.many", 1002000000L, Seq("i" -> "2")),
+      ("app.many", 1003000000L, Seq("i" -> "3")),
+      ("app.many", 1004000000L, Seq("i" -> "4")),
+      ("app.many", 1005000000L, Seq("i" -> "5")),
+      ("app.many", 1006000000L, Seq("i" -> "6")),
+      ("app.many", 1007000000L, Seq("i" -> "7")),
+      ("app.many", 1008000000L, Seq("i" -> "8")),
+      ("app.many", 1009000000L, Seq("i" -> "9")),
+      ("app.many", 1010000000L, Seq("i" -> "10")),
+      ("app.many", 1011000000L, Seq("i" -> "11")),
+      ("app.many", 1012000000L, Seq("i" -> "12")),
+      ("app.many", 1013000000L, Seq("i" -> "13")),
+      ("app.many", 1014000000L, Seq("i" -> "14")),
+      ("app.many", 1015000000L, Seq("i" -> "15")),
+      ("app.many", 1016000000L, Seq("i" -> "16")),
+      ("app.many", 1017000000L, Seq("i" -> "17")),
+      ("app.many", 1018000000L, Seq("i" -> "18")),
+      ("app.many", 1019000000L, Seq("i" -> "19"))),
+    "packed_gzip" -> Seq(
+      ("app.gz", 1704067300000000L, Seq("log" -> "hello", "level" -> "info")),
+      ("app.gz", 1704067301000000L, Seq("k" -> "2", "j" -> "x")),
+      ("app.gz", 1704067302125000L, Seq("f7" -> "77", "f6" -> "66", "f1" -> "11", "f5" -> "55", "f3" -> "last", "f4" -> "44", "f2" -> "22")),
+      ("app.gz", 5000000L, Seq("message" -> "packed bare"))),
+    "packed_zstd" -> Seq(
+      ("app.zst", 1704067300000000L, Seq("log" -> "hello", "level" -> "info")),
+      ("app.zst", 1704067301000000L, Seq("k" -> "2", "j" -> "x")),
+      ("app.zst", 1704067302125000L, Seq("f7" -> "77", "f6" -> "66", "f1" -> "11", "f5" -> "55", "f3" -> "last", "f4" -> "44", "f2" -> "22")),
+      ("app.zst", 5000000L, Seq("message" -> "packed bare"))))
+
+  test("forward source rows equal the event conversion over a mode/time/record corpus") {
+    ForwardCorpus.frames.foreach { case (name, f) =>
+      assert(ForwardCorpus.rowsOf(f) == corpusRows(name), name)
+    }
+    withForwardStream { (stream, port) =>
+      val sock = fwdConnect(port)
+      sock.getOutputStream.write(ForwardCorpus.frames.flatMap(_._2).toArray)
+      sock.getOutputStream.flush()
+      val total = corpusRows.values.map(_.size).sum.toLong
+      awaitOffset(stream, total)
+      val parts = fwdPartitions(stream, 0, total)
+      assert(parts.size > 1)
+      assert(fwdRows(stream, parts) == ForwardCorpus.frames.flatMap(f => corpusRows(f._1)))
+      sock.close()
+    }
+  }
+
+  test("forward source: a frame split at every offset or sent bytewise acts as one write") {
+    withForwardStream { (stream, port) =>
+      val frame = ackedFrame("app.split", "s1",
+        Seq(Map("log" -> "split", "n" -> "1"), Map("log" -> "two")))
+      val ack = Msgpack.encodeAck("s1")
+      def deliver(write: java.io.OutputStream => Unit): Seq[ForwardCorpus.Row] = {
+        val before = offsetOf(stream)
+        val sock = fwdConnect(port)
+        write(sock.getOutputStream)
+        assert(readN(sock.getInputStream, ack.length).sameElements(ack))
+        val after = offsetOf(stream)
+        assert(after == before + 2)
+        sock.close()
+        fwdRows(stream, fwdPartitions(stream, before, after))
+      }
+      val whole = deliver { o => o.write(frame); o.flush() }
+      assert(whole == ForwardCorpus.rowsOf(frame))
+      assert(deliver { o => frame.foreach { b => o.write(b); o.flush(); Thread.sleep(1) } } == whole)
+      (1 until frame.length).foreach { k =>
+        val got = deliver { o =>
+          o.write(frame, 0, k); o.flush(); Thread.sleep(2)
+          o.write(frame, k, frame.length - k); o.flush()
+        }
+        assert(got == whole, s"split at $k")
+      }
+    }
+  }
+
+  test("forward source: an acked frame gets one ack, after its rows are counted") {
+    withForwardStream { (stream, port) =>
+      val sock = fwdConnect(port)
+      val (in, out) = (sock.getInputStream, sock.getOutputStream)
+      out.write(ackedFrame("app.ack", "c-7", Seq(Map("a" -> "1"), Map("a" -> "2"), Map("a" -> "3"))))
+      out.flush()
+      val ack = Msgpack.encodeAck("c-7")
+      assert(readN(in, ack.length).sameElements(ack))
+      assert(offsetOf(stream) == 3)
+      sock.setSoTimeout(300)
+      intercept[java.net.SocketTimeoutException](in.read())
+      // a frame without the chunk option gets no reply
+      out.write(Msgpack.encodeForward("app.noack", Seq((1L, 0L, Map("a" -> "4")))))
+      out.flush()
+      awaitOffset(stream, 4)
+      intercept[java.net.SocketTimeoutException](in.read())
+      sock.close()
+    }
+  }
+
+  test("forward source: a malformed frame closes its connection; earlier frames stand") {
+    import graft.sources.Msgpack._
+    withForwardStream { (stream, port) =>
+      val good = ackedFrame("app.ok", "a1", Seq(Map("log" -> "kept")))
+      val after = ackedFrame("app.after", "a2", Seq(Map("log" -> "lost")))
+      val oneElement = encode(MArr(Vector(MStr("app.bad"), MArr(Vector(MArr(Vector(MInt(1L))))))))
+      val stringTime = encode(MArr(Vector(MStr("app.bad"), MArr(Vector(MArr(Vector(
+        MStr("yesterday"), MMap(Vector(MStr("log") -> MStr("x"))))))))))
+      Seq(oneElement, stringTime).foreach { bad =>
+        val before = offsetOf(stream)
+        val sock = fwdConnect(port)
+        sock.setSoTimeout(10000)
+        sock.getOutputStream.write(good ++ bad ++ after)
+        sock.getOutputStream.flush()
+        val ack = encodeAck("a1")
+        assert(readN(sock.getInputStream, ack.length).sameElements(ack))
+        assert(closedByPeer(sock.getInputStream))
+        sock.close()
+        assert(offsetOf(stream) == before + 1)
+        assert(fwdRows(stream, fwdPartitions(stream, before, before + 1)).map(_._3) ==
+          Seq(Seq("log" -> "kept")))
+      }
+    }
+  }
+
+  test("forward source: a frame still incomplete after MaxPackedBytes closes the connection") {
+    withForwardStream { (stream, port) =>
+      // ["app.huge", [[1, {"log": <str32 declaring 1 GiB>, trickled in
+      val head = Array(0x92).map(_.toByte) ++ Msgpack.encode(Msgpack.MStr("app.huge")) ++
+        Array(0x91, 0x92, 0x01, 0x81).map(_.toByte) ++ Msgpack.encode(Msgpack.MStr("log")) ++
+        Array(0xdb, 0x40, 0x00, 0x00, 0x00).map(_.toByte)
+      val sock = fwdConnect(port)
+      sock.setSoTimeout(10000)
+      val out = sock.getOutputStream
+      out.write(head)
+      val piece = Array.fill[Byte](1 << 20)('x'.toByte)
+      var sent = 0L
+      val refused =
+        try {
+          while (sent < 2L * Msgpack.MaxPackedBytes) { out.write(piece); out.flush(); sent += piece.length }
+          false
+        } catch { case _: java.io.IOException => true }
+      assert(refused, s"sent $sent bytes of one frame without the source closing")
+      assert(sent >= Msgpack.MaxPackedBytes - (8 << 20), s"closed after only $sent bytes")
+      assert(closedByPeer(sock.getInputStream)) // and no ack
+      sock.close()
+      assert(offsetOf(stream) == 0)
+      // the source itself keeps serving
+      val next = fwdConnect(port)
+      next.getOutputStream.write(Msgpack.encodeForward("app.ok", Seq((1L, 0L, Map("a" -> "b")))))
+      next.getOutputStream.flush()
+      awaitOffset(stream, 1)
+      next.close()
+    }
+  }
+
+  test("forward source plans byte slabs: one per slot for a big frame, small frames packed") {
+    val slots = spark.sparkContext.defaultParallelism
+    withForwardStream { (stream, port) =>
+      val big = Msgpack.encodeForward("svc.metrics", (0 until 45000).map { i =>
+        (1704067200L + i / 1000, (i % 1000) * 1000000L,
+          Map("service" -> s"svc-${i % 997}", "latency_ms" -> (i % 250).toString))
+      })
+      val sock = fwdConnect(port)
+      val out = sock.getOutputStream
+      out.write(big); out.flush()
+      awaitOffset(stream, 45000)
+      val parts = fwdPartitions(stream, 0, 45000)
+      assert(parts.size == math.min(45000, slots))
+      val shipped = parts.map(p => javaSerialized(p).length.toLong).sum
+      assert(shipped <= 1.25 * big.length, s"$shipped serialized bytes for a ${big.length}-byte frame")
+      assert(fwdRows(stream, parts) == ForwardCorpus.rowsOf(big))
+      stream.commit(stream.deserializeOffset("45000"))
+      (0 until 50).foreach { f =>
+        out.write(Msgpack.encodeForward("app.small",
+          (0 until 10).map(i => (f.toLong, i.toLong, Map("i" -> i.toString)))))
+      }
+      out.flush()
+      awaitOffset(stream, 45500)
+      val small = fwdPartitions(stream, 45000, 45500)
+      assert(small.size <= slots)
+      assert(fwdRows(stream, small).map(_._3) ==
+        Seq.fill(50)((0 until 10).map(i => Seq("i" -> i.toString))).flatten)
+      sock.close()
+    }
   }
 
   test("http push source e2e: POSTed NDJSON in, tagged parsed rows out") {
