@@ -1,28 +1,28 @@
 package graft.sources
 
-import java.io.OutputStreamWriter
-import java.net.{InetSocketAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, InputStream, OutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** HTTP push source — the analogue of the reference's `plugins/in_http`
   * (and the HEC/bulk-style cousins): clients POST newline-delimited
-  * records; each body line becomes a row (value, path, ts) and the
-  * server answers `201 Created` like in_http's default success code.
-  * The request path is surfaced so callers can tag from the URI
-  * (in_http's tag_from_uri behavior).
+  * records; each non-empty body line becomes a row (value, path, ts,
+  * content_type) and the server answers `201 Created` like in_http's
+  * default success code. The request path is surfaced so callers can tag
+  * from the URI (in_http's tag_from_uri behavior).
   *
-  * Same micro-batch design (and the same at-most-once, ingest-edge
-  * delivery contract) as [[TcpServerSource]].
+  * Each request is one [[PushSource]] segment, with the same
+  * at-most-once, ingest-edge delivery contract as [[TcpServerSource]].
+  * A body over [[Msgpack.MaxPackedBytes]] is refused with `413` before
+  * it is read, and a Content-Length that is negative or not a number
+  * gets `400`; both close the connection.
   */
 class HttpServerSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -34,7 +34,10 @@ class HttpServerSource extends TableProvider {
       throw new IllegalArgumentException("http source requires option 'port'"))
     val host = Option(properties.get("host")).getOrElse("127.0.0.1")
     val rawBody = Option(properties.get("body")).exists(_ == "raw")
-    new HttpTable(host, port, rawBody)
+    new PushTable(s"http://$host:$port", HttpServerSource.Schema,
+        HttpServerSource.Rows(rawBody))(stream =>
+      stream.serve(stream.listenTcp(host, port), s"http-$port")(
+        HttpServerSource.handle(stream, rawBody)))
   }
 }
 
@@ -44,56 +47,24 @@ object HttpServerSource {
     StructField("path", StringType, nullable = false),
     StructField("ts", TimestampType, nullable = false),
     StructField("content_type", StringType, nullable = true)))
-}
 
-private[sources] class HttpTable(host: String, port: Int, rawBody: Boolean)
-    extends Table with SupportsRead {
-  override def name(): String = s"http://$host:$port"
-  override def schema(): StructType = HttpServerSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = HttpServerSource.Schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new HttpMicroBatchStream(host, port, rawBody)
-      }
+  /** A body line, or with `body=raw` the whole body as base64, under its
+    * request's (path, ms, content type); an empty content type is NULL.
+    */
+  private[sources] final case class Rows(raw: Boolean) extends EntryDecoder[(String, Long, String)] {
+    override def row(head: (String, Long, String), b: Array[Byte], from: Int, until: Int): InternalRow = {
+      val (path, tsMs, contentType) = head
+      InternalRow(if (raw) PushSource.base64(b, from, until) else PushSource.text(b, from, until),
+        UTF8String.fromString(path), tsMs * 1000L,
+        if (contentType.isEmpty) null else UTF8String.fromString(contentType))
     }
-}
-
-private[sources] class HttpMicroBatchStream(host: String, port: Int,
-                                            rawBody: Boolean = false)
-    extends MicroBatchStream {
-
-  private val buf =
-    new scala.collection.mutable.ArrayBuffer[(String, String, Long, String)]
-  @volatile private var stopped = false
-  private val server = new ServerSocket()
-  server.bind(new InetSocketAddress(host, port))
-
-  private val acceptThread = new Thread(() => {
-    while (!stopped) {
-      try {
-        val sock = server.accept()
-        val t = new Thread(() => handle(sock), "graft-http-conn")
-        t.setDaemon(true)
-        t.start()
-      } catch {
-        case _: Throwable if stopped =>
-        case e: Throwable => if (!stopped) e.printStackTrace()
-      }
-    }
-  }, s"graft-http-accept-$port")
-  acceptThread.setDaemon(true)
-  acceptThread.start()
+  }
 
   /** Read one header line (bytes up to LF, CR stripped) — headers are
     * ASCII; the BODY must be read as Content-Length BYTES (a Reader
     * would count chars and hang on multi-byte UTF-8).
     */
-  private def readLine(in: java.io.InputStream): String = {
+  private def readLine(in: InputStream): String = {
     val sb = new java.lang.StringBuilder
     var b = in.read()
     while (b >= 0 && b != '\n') { if (b != '\r') sb.append(b.toChar); b = in.read() }
@@ -103,117 +74,59 @@ private[sources] class HttpMicroBatchStream(host: String, port: Int,
   /** Minimal HTTP/1.1: request line + headers, Content-Length body,
     * NDJSON lines → records, reply 201 (in_http's success status).
     */
-  private def handle(sock: Socket): Unit = {
-    try {
-      val in = new java.io.BufferedInputStream(sock.getInputStream)
-      val out = new OutputStreamWriter(sock.getOutputStream, StandardCharsets.UTF_8)
-      var requestLine = readLine(in)
-      while (requestLine != null && requestLine.nonEmpty) {
-        val parts = requestLine.split(" ")
-        val (method, path) =
-          (parts.lift(0).getOrElse(""), parts.lift(1).getOrElse("/"))
-        var contentLength = 0
-        var contentType = ""
-        var contentEncoding = ""
-        var h = readLine(in)
-        while (h != null && h.nonEmpty) {
-          val i = h.indexOf(':')
-          if (i > 0) {
-            val name = h.substring(0, i)
-            if (name.equalsIgnoreCase("content-length"))
-              contentLength = h.substring(i + 1).trim.toInt
-            else if (name.equalsIgnoreCase("content-type"))
-              contentType = h.substring(i + 1).trim
-            else if (name.equalsIgnoreCase("content-encoding"))
-              contentEncoding = h.substring(i + 1).trim
-          }
-          h = readLine(in)
+  private def handle(stream: PushStream[(String, Long, String)], rawBody: Boolean)(
+      in0: InputStream, out0: OutputStream): Unit = {
+    val in = new BufferedInputStream(in0)
+    val out = new OutputStreamWriter(out0, StandardCharsets.UTF_8)
+    def reply(status: String, close: Boolean = false): Unit = {
+      out.write(s"HTTP/1.1 $status\r\nContent-Length: 0\r\n" +
+        (if (close) "Connection: close\r\n\r\n" else "\r\n"))
+      out.flush()
+    }
+    var requestLine = readLine(in)
+    while (requestLine != null && requestLine.nonEmpty) {
+      val parts = requestLine.split(" ")
+      val (method, path) =
+        (parts.lift(0).getOrElse(""), parts.lift(1).getOrElse("/"))
+      var contentLength = 0L // -1: not a number
+      var contentType = ""
+      var contentEncoding = ""
+      var h = readLine(in)
+      while (h != null && h.nonEmpty) {
+        val i = h.indexOf(':')
+        if (i > 0) {
+          val name = h.substring(0, i)
+          if (name.equalsIgnoreCase("content-length"))
+            contentLength = h.substring(i + 1).trim.toLongOption.getOrElse(-1L)
+          else if (name.equalsIgnoreCase("content-type"))
+            contentType = h.substring(i + 1).trim
+          else if (name.equalsIgnoreCase("content-encoding"))
+            contentEncoding = h.substring(i + 1).trim
         }
-        val rawBytes = new Array[Byte](contentLength)
-        var read = 0
-        while (read < contentLength) {
-          val n = in.read(rawBytes, read, contentLength - read)
-          if (n < 0) throw new java.io.EOFException
-          read += n
-        }
-        if (method == "POST" && contentLength > 0) {
-          val now = System.currentTimeMillis()
-          // Content-Encoding: gzip is handled at the HTTP layer like the
-          // reference (flb_http_common.c / opentelemetry_prot.c:964-965
-          // uncompress before the format decoder sees the body)
-          val body =
-            if (contentEncoding.toLowerCase(java.util.Locale.ROOT)
-                  .contains("gzip"))
-              graft.parse.OtlpProto.gunzip(rawBytes)
-            else rawBytes
-          // body=raw keeps the POST body intact as ONE base64 row — the
-          // ingest shape for binary payloads (prometheus remote-write
-          // WriteRequest protobufs are snappy blocks, not text lines)
-          val lines =
-            if (rawBody) Array(java.util.Base64.getEncoder.encodeToString(body))
-            else new String(body, StandardCharsets.UTF_8)
-              .split("\n").filter(_.nonEmpty)
-          buf.synchronized {
-            lines.foreach(l => buf += ((l, path, now, contentType)))
-          }
-          out.write("HTTP/1.1 201 Created\r\nContent-Length: 0\r\n\r\n")
-        } else {
-          out.write("HTTP/1.1 400 Bad Request\r\nContent-Length: 0\r\n\r\n")
-        }
-        out.flush()
-        requestLine = readLine(in) // keep-alive: next request or null
+        h = readLine(in)
       }
-    } catch { case _: Throwable => /* peer went away */ }
-    finally sock.close()
-  }
-
-  /** Absolute offset of buf(0) — committed entries are trimmed away. */
-  private var base = 0L
-
-  override def initialOffset(): Offset = TcpOffset(0)
-  override def latestOffset(): Offset =
-    TcpOffset(buf.synchronized(base + buf.size))
-  override def deserializeOffset(json: String): Offset = TcpOffset(json.toLong)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[TcpOffset].n
-    val e = end.asInstanceOf[TcpOffset].n
-    Array(HttpPartition(buf.synchronized {
-      buf.slice((s - base).toInt.max(0), (e - base).toInt.max(0)).toArray
-    }))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = HttpReaderFactory
-
-  override def commit(end: Offset): Unit = buf.synchronized {
-    // drop delivered entries so the receive buffer stays bounded by the
-    // uncommitted window, not the stream's lifetime
-    val drop = ((end.asInstanceOf[TcpOffset].n - base).toInt).min(buf.size).max(0)
-    if (drop > 0) { buf.remove(0, drop); base += drop }
-  }
-
-  override def stop(): Unit = {
-    stopped = true
-    try server.close() catch { case _: Throwable => }
-  }
-}
-
-private[sources] case class HttpPartition(
-    rows: Array[(String, String, Long, String)]) extends InputPartition
-
-private[sources] object HttpReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val rows = partition.asInstanceOf[HttpPartition].rows
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = {
-        val (v, p, tsMs, ct) = rows(i)
-        InternalRow(UTF8String.fromString(v), UTF8String.fromString(p),
-          tsMs * 1000L, if (ct == null || ct.isEmpty) null
-          else UTF8String.fromString(ct))
-      }
-      override def close(): Unit = {}
+      // the declared length is checked before anything is allocated for it
+      if (contentLength < 0) { reply("400 Bad Request", close = true); return }
+      if (contentLength > Msgpack.MaxPackedBytes) { reply("413 Payload Too Large", close = true); return }
+      val rawBytes = in.readNBytes(contentLength.toInt)
+      if (rawBytes.length < contentLength) throw new java.io.EOFException
+      if (method == "POST" && contentLength > 0) {
+        // Content-Encoding: gzip is handled at the HTTP layer like the
+        // reference (flb_http_common.c / opentelemetry_prot.c:964-965
+        // uncompress before the format decoder sees the body)
+        val body =
+          if (contentEncoding.toLowerCase(java.util.Locale.ROOT).contains("gzip"))
+            graft.parse.OtlpProto.gunzip(rawBytes)
+          else rawBytes
+        // body=raw keeps the POST body intact as ONE base64 row — the
+        // ingest shape for binary payloads (prometheus remote-write
+        // WriteRequest protobufs are snappy blocks, not text lines)
+        val seg = new Segment.Builder
+        if (rawBody) seg.add(body, 0, body.length) else seg.addLines(body, 0, body.length)
+        stream.append(seg.result((path, System.currentTimeMillis(), contentType)))
+        reply("201 Created")
+      } else reply("400 Bad Request")
+      requestLine = readLine(in) // keep-alive: next request or null
     }
   }
 }

@@ -1,15 +1,12 @@
 package graft.sources
 
 import java.io.{BufferedInputStream, InputStream, OutputStream}
-import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -37,7 +34,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The remaining-length varint (7 bits per byte, continuation MSB, max 4
   * bytes) follows mqtt_packet_header/:431-449; frames split across TCP
-  * segments reassemble because reads block on the stream.
+  * segments reassemble because reads block on the stream. Each accepted
+  * publish is one segment of the [[PushSource]] core.
   *
   * Usage: `spark.readStream.format("graft.sources.MqttServerSource")
   * .option("port", p).load()` → rows (topic STRING, qos INT,
@@ -52,7 +50,8 @@ class MqttServerSource extends TableProvider {
     val port = Option(properties.get("port")).map(_.toInt).getOrElse(
       throw new IllegalArgumentException("mqtt source requires option 'port'"))
     val host = Option(properties.get("host")).getOrElse("127.0.0.1")
-    new MqttTable(host, port)
+    new PushTable(s"mqtt://$host:$port", MqttServerSource.Schema, MqttServerSource.Rows)(stream =>
+      stream.serve(stream.listenTcp(host, port), s"mqtt-$port")(MqttServerSource.handle(stream)))
   }
 }
 
@@ -100,50 +99,13 @@ object MqttServerSource {
     }
     false
   }
-}
 
-private[sources] class MqttTable(host: String, port: Int)
-    extends Table with SupportsRead {
-  override def name(): String = s"mqtt://$host:$port"
-  override def schema(): StructType = MqttServerSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = MqttServerSource.Schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new MqttMicroBatchStream(host, port)
-      }
-    }
-}
-
-private[sources] class MqttMicroBatchStream(host: String, port: Int)
-    extends MicroBatchStream {
-  import MqttServerSource._
-
-  // (topic, qos, payload, tsMillis)
-  private val buf = new scala.collection.mutable.ArrayBuffer[(String, Int, String, Long)]
-  @volatile private var stopped = false
-  private val server = new ServerSocket()
-  server.bind(new InetSocketAddress(host, port))
-
-  private val acceptThread = new Thread(() => {
-    while (!stopped) {
-      try {
-        val sock = server.accept()
-        val t = new Thread(() => handle(sock), "graft-mqtt-conn")
-        t.setDaemon(true)
-        t.start()
-      } catch {
-        case _: Throwable if stopped =>
-        case e: Throwable => if (!stopped) e.printStackTrace()
-      }
-    }
-  }, s"graft-mqtt-accept-$port")
-  acceptThread.setDaemon(true)
-  acceptThread.start()
+  /** A publish's payload under its (topic, qos, ms). */
+  private[sources] object Rows extends EntryDecoder[(String, Int, Long)] {
+    override def row(head: (String, Int, Long), b: Array[Byte], from: Int, until: Int): InternalRow =
+      InternalRow(UTF8String.fromString(head._1), head._2, PushSource.text(b, from, until),
+        head._3 * 1000L)
+  }
 
   /** Remaining-length varint: 7 bits/byte, MSB continues, >4 bytes is a
     * protocol error (mqtt_prot.c:416 mult bound). Returns -1 on EOF/error.
@@ -163,49 +125,46 @@ private[sources] class MqttMicroBatchStream(host: String, port: Int)
     -1
   }
 
-  private def handle(sock: Socket): Unit = {
-    val in = new BufferedInputStream(sock.getInputStream)
-    val out = sock.getOutputStream
+  private def handle(stream: PushStream[(String, Int, Long)])(in0: InputStream, out: OutputStream): Unit = {
+    val in = new BufferedInputStream(in0)
     var connected = false // first packet must be CONNECT (mqtt_prot.c:393)
-    try {
-      var done = false
-      while (!done && !stopped) {
-        val h = in.read()
-        if (h == -1) done = true
+    var done = false
+    while (!done) {
+      val h = in.read()
+      if (h == -1) done = true
+      else {
+        val ptype = (h >> 4) & 0x0f
+        val flags = h & 0x0f
+        val len = readRemainingLength(in)
+        if (len < 0 || (!connected && ptype != CONNECT)) done = true
         else {
-          val ptype = (h >> 4) & 0x0f
-          val flags = h & 0x0f
-          val len = readRemainingLength(in)
-          if (len < 0 || (!connected && ptype != CONNECT)) done = true
-          else {
-            val frame = in.readNBytes(len)
-            if (frame.length < len) done = true
-            else ptype match {
-              case CONNECT =>
-                connected = true
-                // CONNACK: session-present bit set, return code accepted
-                out.write(Array[Byte]((CONNACK << 4).toByte, 2, 1, 0))
-                out.flush()
-              case PUBLISH =>
-                done = !publish(frame, flags, out)
-              case PINGREQ =>
-                out.write(Array[Byte]((PINGRESP << 4).toByte, 0))
-                out.flush()
-              case DISCONNECT =>
-                done = true
-              case _ => // ignored, like the reference's empty else
-            }
+          val frame = in.readNBytes(len)
+          if (frame.length < len) done = true
+          else ptype match {
+            case CONNECT =>
+              connected = true
+              // CONNACK: session-present bit set, return code accepted
+              out.write(Array[Byte]((CONNACK << 4).toByte, 2, 1, 0))
+              out.flush()
+            case PUBLISH =>
+              done = !publish(stream, frame, flags, out)
+            case PINGREQ =>
+              out.write(Array[Byte]((PINGRESP << 4).toByte, 0))
+              out.flush()
+            case DISCONNECT =>
+              done = true
+            case _ => // ignored, like the reference's empty else
           }
         }
       }
-    } catch { case _: Throwable => /* peer went away */ }
-    finally sock.close()
+    }
   }
 
   /** Parse one PUBLISH frame; returns false on a malformed frame (the
     * reference hangs up on -1 from mqtt_handle_publish).
     */
-  private def publish(frame: Array[Byte], flags: Int, out: OutputStream): Boolean = {
+  private def publish(stream: PushStream[(String, Int, Long)], frame: Array[Byte], flags: Int,
+                      out: OutputStream): Boolean = {
     val qos = (flags >> 1) & 0x03
     if (frame.length < 2) return false
     val tlen = ((frame(0) & 0xff) << 8) | (frame(1) & 0xff)
@@ -221,58 +180,10 @@ private[sources] class MqttMicroBatchStream(host: String, port: Int)
       out.write(Array[Byte]((reply << 4).toByte, 2, idHi, idLo))
       out.flush()
     }
-    val payload = new String(frame, pos, frame.length - pos, StandardCharsets.UTF_8)
+    val payload = util.Arrays.copyOfRange(frame, pos, frame.length)
     // non-map payloads are dropped, not fatal (mqtt_data_append :125-131)
-    if (MqttServerSource.isJsonObject(payload)) {
-      buf.synchronized { buf += ((topic, qos, payload, System.currentTimeMillis())) }
-    }
+    if (isJsonObject(new String(payload, StandardCharsets.UTF_8)))
+      stream.append(Segment.one((topic, qos, System.currentTimeMillis()), payload))
     true
-  }
-
-  private var base = 0L
-
-  override def initialOffset(): Offset = TcpOffset(0)
-  override def latestOffset(): Offset =
-    TcpOffset(buf.synchronized(base + buf.size))
-  override def deserializeOffset(json: String): Offset = TcpOffset(json.toLong)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[TcpOffset].n
-    val e = end.asInstanceOf[TcpOffset].n
-    val rows = buf.synchronized {
-      buf.slice((s - base).toInt.max(0), (e - base).toInt.max(0)).toArray
-    }
-    Array(MqttPartition(rows))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = MqttReaderFactory
-
-  override def commit(end: Offset): Unit = buf.synchronized {
-    val drop = ((end.asInstanceOf[TcpOffset].n - base).toInt).min(buf.size).max(0)
-    if (drop > 0) { buf.remove(0, drop); base += drop }
-  }
-
-  override def stop(): Unit = {
-    stopped = true
-    try server.close() catch { case _: Throwable => }
-  }
-}
-
-private[sources] case class MqttPartition(rows: Array[(String, Int, String, Long)])
-    extends InputPartition
-
-private[sources] object MqttReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val rows = partition.asInstanceOf[MqttPartition].rows
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = {
-        val (topic, qos, v, tsMs) = rows(i)
-        InternalRow(UTF8String.fromString(topic), qos,
-          UTF8String.fromString(v), tsMs * 1000L)
-      }
-      override def close(): Unit = {}
-    }
   }
 }

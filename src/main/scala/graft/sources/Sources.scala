@@ -7,9 +7,9 @@ import org.apache.spark.sql.types.StructType
 /** Batch file ingestion (SURVEY §2.9): the read-side counterparts of the
   * out_file formats — NDJSON, CSV, raw text lines — normalized toward
   * the log-event shape (`tag`, `ts`, body columns). Streaming twins live
-  * in [[graft.streaming.Streams]] (tailText/tailParquet); network push
-  * sources (tcp/syslog/http/forward) map to socket/Kafka sources in a
-  * real deployment and are represented by the MemoryStream-driven tests.
+  * in [[graft.streaming.Streams]] (tailText/tailParquet). The network
+  * push sources (Forward, Tcp, Udp, Unix, Http, Mqtt) are real listening
+  * servers on one core, [[PushSource]]; the helpers below read them.
   *
   * Scale note: every reader here is a plain FileScan — partition count
   * follows `spark.sql.files.maxPartitionBytes`, column pruning and

@@ -1,18 +1,13 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
-import java.net.{InetSocketAddress, ServerSocket, Socket}
-import java.nio.charset.StandardCharsets
+import java.io.{BufferedInputStream, InputStream}
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** A real TCP *server* push source — the analogue of the reference's
   * listening inputs (`plugins/in_tcp`, and the transport under
@@ -23,13 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Usage: `spark.readStream.format("graft.sources.TcpServerSource")
   * .option("port", p).load()` → rows (value STRING, ts TIMESTAMP).
   *
-  * Design mirrors Spark's own TextSocketMicroBatchStream: the accept
-  * loop runs on the driver, received lines buffer in memory, offsets are
-  * absolute line counts, and each micro-batch ships its slice inside the
-  * planned partition. Like the reference's in_tcp without filesystem
-  * storage, delivery is at-most-once and non-replayable — the ingest
-  * EDGE; durable large-scale ingestion fronts this with Kafka
-  * (SURVEY §2.9 network-push mapping).
+  * Runs on the [[PushSource]] core: each socket read's complete lines
+  * (or each octet-counted frame) become one segment, so the lines of one
+  * read share their `ts`.
   */
 class TcpServerSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -46,7 +37,10 @@ class TcpServerSource extends TableProvider {
       f.equalsIgnoreCase("octet_counting") || f.equalsIgnoreCase("octet"))
     // `tls on` + keystore: the reference's in_tcp `tls` block
     val tls = Tls.serverFromOptions(k => Option(properties.get(k)))
-    new TcpTable(host, port, octet, tls)
+    new PushTable(s"tcp://$host:$port", TcpServerSource.Schema, TcpServerSource.Lines)(stream =>
+      stream.serve(stream.listenTcp(host, port, tls), s"tcp-$port") { (in, _) =>
+        if (octet) TcpServerSource.octetFrames(in, stream) else TcpServerSource.lines(in, stream)
+      })
   }
 }
 
@@ -54,157 +48,39 @@ object TcpServerSource {
   val Schema: StructType = StructType(Seq(
     StructField("value", StringType, nullable = false),
     StructField("ts", TimestampType, nullable = false)))
-}
 
-private[sources] class TcpTable(host: String, port: Int,
-                                octet: Boolean = false,
-                                tls: Option[Tls.Server] = None)
-    extends Table with SupportsRead {
-  override def name(): String = s"tcp://$host:$port"
-  override def schema(): StructType = TcpServerSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = TcpServerSource.Schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new TcpMicroBatchStream(host, port, octet, tls)
-      }
-    }
-}
-
-private[sources] case class TcpOffset(n: Long) extends Offset {
-  override def json(): String = n.toString
-}
-
-private[sources] class TcpMicroBatchStream(host: String, port: Int,
-                                           octet: Boolean = false,
-                                           tls: Option[Tls.Server] = None)
-    extends MicroBatchStream {
-
-  private val buf = new scala.collection.mutable.ArrayBuffer[(String, Long)]
-  @volatile private var stopped = false
-  // `tls on` terminates TLS at accept; a failed handshake drops only
-  // that connection (the reference's tls layer behaves the same)
-  private val server = tls.map(Tls.serverSocket).getOrElse(new ServerSocket())
-  server.bind(new InetSocketAddress(host, port))
-
-  private val acceptThread = new Thread(() => {
-    while (!stopped) {
-      try {
-        val sock = server.accept()
-        val t = new Thread(() => handle(sock), s"graft-tcp-conn")
-        t.setDaemon(true)
-        t.start()
-      } catch {
-        case _: Throwable if stopped => // closed during shutdown
-        case e: Throwable => if (!stopped) e.printStackTrace()
-      }
-    }
-  }, s"graft-tcp-accept-$port")
-  acceptThread.setDaemon(true)
-  acceptThread.start()
-
-  private def handle(sock: Socket): Unit =
-    if (octet) handleOctet(sock) else handleNewline(sock)
-
-  private def handleNewline(sock: Socket): Unit = {
-    val in = new BufferedReader(
-      new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
-    try {
-      var line = in.readLine()
-      while (line != null && !stopped) {
-        buf.synchronized { buf += ((line, System.currentTimeMillis())) }
-        line = in.readLine()
-      }
-    } catch { case _: Throwable => /* peer went away */ }
-    finally sock.close()
+  /** A line (or frame) under the millisecond its read arrived. */
+  private[sources] object Lines extends EntryDecoder[Long] {
+    override def row(tsMs: Long, b: Array[Byte], from: Int, until: Int): InternalRow =
+      InternalRow(PushSource.text(b, from, until), tsMs * 1000L)
   }
+
+  /** Newline framing, shared with [[UnixServerSource]]. */
+  private[sources] def lines(in: InputStream, stream: PushStream[Long]): Unit =
+    PushSource.newlines(in)(lines => stream.append(lines.result(System.currentTimeMillis())))
 
   /** RFC 6587 octet-counting framing, `<len> SP <msg>`
     * (in_syslog/syslog_prot.c:236-266): digits then one space then
     * exactly len bytes. Short reads block until the frame completes
     * (the reference buffers partial frames across reads with
     * frame_have_len/frame_expected_len); a non-digit/non-space where
-    * the length belongs is a protocol error and drops the connection,
-    * matching the reference's -1 return.
+    * the length belongs, a length over [[PushSource.MaxLineBytes]] or
+    * EOF mid-frame ends the connection, matching the reference's -1
+    * return.
     */
-  private def handleOctet(sock: Socket): Unit = {
-    val in = new java.io.BufferedInputStream(sock.getInputStream)
-    try {
-      var done = false
-      while (!done && !stopped) {
-        var c = in.read()
-        if (c == -1) done = true
-        else if (c < '0' || c > '9') done = true // invalid length start
-        else {
-          var n = 0L
-          while (c >= '0' && c <= '9' && n < Int.MaxValue) {
-            n = n * 10 + (c - '0'); c = in.read()
-          }
-          if (c != ' ' || n > (1 << 20)) done = true // bad frame / oversized
-          else {
-            val bytes = in.readNBytes(n.toInt)
-            if (bytes.length < n) done = true // EOF mid-frame: discard
-            else buf.synchronized {
-              buf += ((new String(bytes, StandardCharsets.UTF_8),
-                System.currentTimeMillis()))
-            }
-          }
-        }
+  private def octetFrames(in: InputStream, stream: PushStream[Long]): Unit = {
+    val bin = new BufferedInputStream(in)
+    var c = bin.read()
+    while (c >= '0' && c <= '9') {
+      var n = 0L
+      while (c >= '0' && c <= '9' && n < Int.MaxValue) {
+        n = n * 10 + (c - '0'); c = bin.read()
       }
-    } catch { case _: Throwable => /* peer went away */ }
-    finally sock.close()
-  }
-
-  /** Absolute offset of buf(0) — committed entries are trimmed away. */
-  private var base = 0L
-
-  override def initialOffset(): Offset = TcpOffset(0)
-  override def latestOffset(): Offset =
-    TcpOffset(buf.synchronized(base + buf.size))
-  override def deserializeOffset(json: String): Offset = TcpOffset(json.toLong)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[TcpOffset].n
-    val e = end.asInstanceOf[TcpOffset].n
-    val rows = buf.synchronized {
-      buf.slice((s - base).toInt.max(0), (e - base).toInt.max(0)).toArray
-    }
-    Array(TcpPartition(rows))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = TcpReaderFactory
-
-  override def commit(end: Offset): Unit = buf.synchronized {
-    // drop delivered entries so the receive buffer stays bounded by the
-    // uncommitted window, not the stream's lifetime
-    val drop = ((end.asInstanceOf[TcpOffset].n - base).toInt).min(buf.size).max(0)
-    if (drop > 0) { buf.remove(0, drop); base += drop }
-  }
-
-  override def stop(): Unit = {
-    stopped = true
-    try server.close() catch { case _: Throwable => }
-  }
-}
-
-private[sources] case class TcpPartition(rows: Array[(String, Long)])
-    extends InputPartition
-
-private[sources] object TcpReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val rows = partition.asInstanceOf[TcpPartition].rows
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = {
-        val (v, tsMs) = rows(i)
-        InternalRow(UTF8String.fromString(v), tsMs * 1000L)
-      }
-      override def close(): Unit = {}
+      if (c != ' ' || n > PushSource.MaxLineBytes) return
+      val bytes = bin.readNBytes(n.toInt)
+      if (bytes.length < n) return
+      stream.append(Segment.one(System.currentTimeMillis(), bytes))
+      c = bin.read()
     }
   }
 }

@@ -1,14 +1,11 @@
 package graft.sources
 
 import java.net.{DatagramPacket, DatagramSocket, InetSocketAddress}
-import java.nio.charset.StandardCharsets
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -17,13 +14,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * `plugins/in_udp` (and the transport under `in_syslog`'s udp mode,
   * the legacy BSD-syslog framing still emitted by routers and
   * appliances). Each datagram's payload is split on newlines into
-  * records (a bare RFC3164 message is one datagram = one line); the
-  * sender address is surfaced like in_udp's `source_address_key`.
+  * records, empty lines dropped (a bare RFC3164 message is one datagram
+  * = one line); the sender address is surfaced like in_udp's
+  * `source_address_key`.
   *
-  * Rows: (value STRING, peer STRING, ts TIMESTAMP). Same micro-batch
-  * buffering, offset, and at-most-once ingest-edge contract as
-  * [[TcpServerSource]] — UDP itself is fire-and-forget, so dropped
-  * datagrams are a transport property, not an engine one.
+  * Rows: (value STRING, peer STRING, ts TIMESTAMP). Each datagram is one
+  * [[PushSource]] segment, with the same at-most-once ingest-edge
+  * contract as [[TcpServerSource]] — UDP itself is fire-and-forget, so
+  * dropped datagrams are a transport property, not an engine one.
   */
 class UdpServerSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -37,7 +35,19 @@ class UdpServerSource extends TableProvider {
     // body=raw keeps each datagram intact as ONE base64 row — the
     // ingest shape for binary payloads (collectd network protocol)
     val rawBody = Option(properties.get("body")).exists(_ == "raw")
-    new UdpTable(host, port, rawBody)
+    new PushTable(s"udp://$host:$port", UdpServerSource.Schema,
+        UdpServerSource.Rows(rawBody))(stream => {
+      val socket = stream.closeOnStop(new DatagramSocket(new InetSocketAddress(host, port)))
+      val data = new Array[Byte](UdpServerSource.MaxDatagram)
+      stream.loop(s"graft-udp-receive-$port") {
+        val packet = new DatagramPacket(data, data.length)
+        socket.receive(packet)
+        val seg = new Segment.Builder
+        val (from, until) = (packet.getOffset, packet.getOffset + packet.getLength)
+        if (rawBody) seg.add(data, from, until) else seg.addLines(data, from, until)
+        stream.append(seg.result((packet.getAddress.getHostAddress, System.currentTimeMillis())))
+      }
+    })
   }
 }
 
@@ -49,104 +59,13 @@ object UdpServerSource {
 
   /** in_udp's default buffer_max_size is 64 KiB — the UDP payload cap. */
   val MaxDatagram: Int = 65536
-}
 
-private[sources] class UdpTable(host: String, port: Int,
-                                rawBody: Boolean = false)
-    extends Table with SupportsRead {
-  override def name(): String = s"udp://$host:$port"
-  override def schema(): StructType = UdpServerSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = UdpServerSource.Schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new UdpMicroBatchStream(host, port, rawBody)
-      }
-    }
-}
-
-private[sources] class UdpMicroBatchStream(host: String, port: Int,
-                                           rawBody: Boolean = false)
-    extends MicroBatchStream {
-
-  private val buf = new scala.collection.mutable.ArrayBuffer[(String, String, Long)]
-  @volatile private var stopped = false
-  private val socket = new DatagramSocket(new InetSocketAddress(host, port))
-
-  private val receiveThread = new Thread(() => {
-    val data = new Array[Byte](UdpServerSource.MaxDatagram)
-    while (!stopped) {
-      try {
-        val packet = new DatagramPacket(data, data.length)
-        socket.receive(packet)
-        val now = System.currentTimeMillis()
-        val peer = packet.getAddress.getHostAddress
-        val lines =
-          if (rawBody) Array(java.util.Base64.getEncoder.encodeToString(
-            java.util.Arrays.copyOfRange(packet.getData, packet.getOffset,
-              packet.getOffset + packet.getLength)))
-          else new String(packet.getData, packet.getOffset,
-            packet.getLength, StandardCharsets.UTF_8)
-            .split("\n").filter(_.nonEmpty)
-        buf.synchronized { lines.foreach(l => buf += ((l, peer, now))) }
-      } catch {
-        case _: Throwable if stopped => // closed during shutdown
-        case e: Throwable => if (!stopped) e.printStackTrace()
-      }
-    }
-  }, s"graft-udp-receive-$port")
-  receiveThread.setDaemon(true)
-  receiveThread.start()
-
-  /** Absolute offset of buf(0) — committed entries are trimmed away. */
-  private var base = 0L
-
-  override def initialOffset(): Offset = TcpOffset(0)
-  override def latestOffset(): Offset =
-    TcpOffset(buf.synchronized(base + buf.size))
-  override def deserializeOffset(json: String): Offset = TcpOffset(json.toLong)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[TcpOffset].n
-    val e = end.asInstanceOf[TcpOffset].n
-    Array(UdpPartition(buf.synchronized {
-      buf.slice((s - base).toInt.max(0), (e - base).toInt.max(0)).toArray
-    }))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = UdpReaderFactory
-
-  override def commit(end: Offset): Unit = buf.synchronized {
-    // drop delivered entries so the receive buffer stays bounded by the
-    // uncommitted window, not the stream's lifetime
-    val drop = ((end.asInstanceOf[TcpOffset].n - base).toInt).min(buf.size).max(0)
-    if (drop > 0) { buf.remove(0, drop); base += drop }
-  }
-
-  override def stop(): Unit = {
-    stopped = true
-    try socket.close() catch { case _: Throwable => }
-  }
-}
-
-private[sources] case class UdpPartition(rows: Array[(String, String, Long)])
-    extends InputPartition
-
-private[sources] object UdpReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val rows = partition.asInstanceOf[UdpPartition].rows
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = {
-        val (v, p, tsMs) = rows(i)
-        InternalRow(UTF8String.fromString(v), UTF8String.fromString(p), tsMs * 1000L)
-      }
-      override def close(): Unit = {}
-    }
+  /** A line, or with `body=raw` the whole datagram as base64, under its
+    * datagram's (peer, ms).
+    */
+  private[sources] final case class Rows(raw: Boolean) extends EntryDecoder[(String, Long)] {
+    override def row(head: (String, Long), b: Array[Byte], from: Int, until: Int): InternalRow =
+      InternalRow(if (raw) PushSource.base64(b, from, until) else PushSource.text(b, from, until),
+        UTF8String.fromString(head._1), head._2 * 1000L)
   }
 }

@@ -1,27 +1,23 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
 import java.net.{StandardProtocolFamily, UnixDomainSocketAddress}
-import java.nio.channels.{Channels, ServerSocketChannel, SocketChannel}
-import java.nio.charset.StandardCharsets
+import java.nio.channels.{ServerSocketChannel, SocketChannel}
 import java.nio.file.{Files, Paths}
 import java.util
 
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Unix-domain-socket push source — the analogue of the reference's
   * `plugins/in_unix_socket` (stream mode, `unix_socket.c` +
   * `unix_socket_conn.c`): local peers connect to a filesystem socket
-  * path and push newline-framed records. The accept/read/buffer/offset
-  * machinery is the same shape as [[TcpServerSource]]; only the
-  * transport differs (JDK 16+ `StandardProtocolFamily.UNIX` channels).
-  * A pre-existing socket file is unlinked before bind, like the
-  * reference's server setup does for stale sockets.
+  * path and push newline-framed records. The framing, rows and core are
+  * [[TcpServerSource]]'s; only the transport differs (JDK 16+
+  * `StandardProtocolFamily.UNIX` channels). A pre-existing socket file
+  * is unlinked before bind, like the reference's server setup does for
+  * stale sockets.
   *
   * Usage: `spark.readStream.format("graft.sources.UnixServerSource")
   * .option("path", "/tmp/app.sock").load()` → rows (value STRING,
@@ -35,107 +31,23 @@ class UnixServerSource extends TableProvider {
                         properties: util.Map[String, String]): Table = {
     val path = Option(properties.get("path")).getOrElse(
       throw new IllegalArgumentException("unix source requires option 'path'"))
-    new UnixTable(path)
-  }
-}
-
-private[sources] class UnixTable(path: String)
-    extends Table with SupportsRead {
-  override def name(): String = s"unix://$path"
-  override def schema(): StructType = TcpServerSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = TcpServerSource.Schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new UnixMicroBatchStream(path)
+    new PushTable(s"unix://$path", TcpServerSource.Schema, TcpServerSource.Lines)(stream => {
+      val file = Paths.get(path)
+      // Stale-socket check before unlink (the reference probes the path
+      // the same way): if a connect succeeds, a live server owns this
+      // path — unlinking would silently steal its subsequent connections.
+      if (Files.exists(file)) {
+        val live =
+          try { SocketChannel.open(UnixDomainSocketAddress.of(path)).close(); true }
+          catch { case _: java.io.IOException => false }
+        if (live)
+          throw new IllegalStateException(s"unix source: a live server is already bound at $path")
+        Files.deleteIfExists(file) // stale socket from a dead server
       }
-    }
-}
-
-private[sources] class UnixMicroBatchStream(path: String)
-    extends MicroBatchStream {
-
-  private val buf = new scala.collection.mutable.ArrayBuffer[(String, Long)]
-  @volatile private var stopped = false
-  // Stale-socket check before unlink (the reference probes the path the
-  // same way): if a connect succeeds, a live server owns this path —
-  // unlinking would silently steal its subsequent connections.
-  if (Files.exists(Paths.get(path))) {
-    val probe =
-      try {
-        val c = SocketChannel.open(UnixDomainSocketAddress.of(path))
-        c.close(); true
-      } catch { case _: Throwable => false }
-    if (probe)
-      throw new IllegalStateException(
-        s"unix source: a live server is already bound at $path")
-    Files.deleteIfExists(Paths.get(path)) // stale socket from a dead server
-  }
-  private val server = ServerSocketChannel.open(StandardProtocolFamily.UNIX)
-  server.bind(UnixDomainSocketAddress.of(path))
-
-  private val acceptThread = new Thread(() => {
-    while (!stopped && server.isOpen) {
-      try {
-        val chan = server.accept()
-        val t = new Thread(() => handle(chan), "graft-unix-conn")
-        t.setDaemon(true)
-        t.start()
-      } catch {
-        case _: Throwable if stopped || !server.isOpen => // closed: loop exits
-        case e: Throwable => e.printStackTrace()
-      }
-    }
-  }, s"graft-unix-accept")
-  acceptThread.setDaemon(true)
-  acceptThread.start()
-
-  private def handle(chan: SocketChannel): Unit = {
-    val in = new BufferedReader(new InputStreamReader(
-      Channels.newInputStream(chan), StandardCharsets.UTF_8))
-    try {
-      var line = in.readLine()
-      while (line != null && !stopped) {
-        buf.synchronized { buf += ((line, System.currentTimeMillis())) }
-        line = in.readLine()
-      }
-    } catch { case _: Throwable => /* peer went away */ }
-    finally chan.close()
-  }
-
-  /** Absolute offset of buf(0) — committed entries are trimmed away. */
-  private var base = 0L
-
-  override def initialOffset(): Offset = TcpOffset(0)
-  override def latestOffset(): Offset =
-    TcpOffset(buf.synchronized(base + buf.size))
-  override def deserializeOffset(json: String): Offset = TcpOffset(json.toLong)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[TcpOffset].n
-    val e = end.asInstanceOf[TcpOffset].n
-    val rows = buf.synchronized {
-      buf.slice((s - base).toInt.max(0), (e - base).toInt.max(0)).toArray
-    }
-    Array(TcpPartition(rows))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = TcpReaderFactory
-
-  override def commit(end: Offset): Unit = buf.synchronized {
-    // drop delivered entries so the receive buffer stays bounded by the
-    // uncommitted window, not the stream's lifetime
-    val drop = ((end.asInstanceOf[TcpOffset].n - base).toInt).min(buf.size).max(0)
-    if (drop > 0) { buf.remove(0, drop); base += drop }
-  }
-
-  override def stop(): Unit = {
-    stopped = true
-    try server.close() catch { case _: Throwable => }
-    try Files.deleteIfExists(Paths.get(path)) catch { case _: Throwable => }
+      val server = stream.closeOnStop(ServerSocketChannel.open(StandardProtocolFamily.UNIX))
+      server.bind(UnixDomainSocketAddress.of(path))
+      stream.closeOnStop[java.io.Closeable](() => Files.deleteIfExists(file))
+      stream.serve(server, "unix")((in, _) => TcpServerSource.lines(in, stream))
+    })
   }
 }

@@ -1,13 +1,9 @@
 package graft
 
-import org.apache.spark.sql.connector.catalog.SupportsRead
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.InputPartition
-import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SourceStreams.{awaitOffset, closedByPeer, connect, javaSerialized, offsetOf, partitions, readN, withPortStream}
 import graft.sources.Msgpack
 import graft.streaming._
 import graft.streaming.Multiline.{Assembled, Line}
@@ -960,86 +956,11 @@ class StreamingSpec extends AnyFunSuite {
 
   // ------------------------------------------- Forward source wire contract
 
-  /** A Forward source's stream and its port, driven without a query
-    * through the public TableProvider path.
-    */
-  private def withForwardStream(body: (MicroBatchStream, Int) => Unit): Unit = {
-    val probe = new java.net.ServerSocket(0)
-    val port = probe.getLocalPort
-    probe.close()
-    val stream = new graft.sources.ForwardServerSource()
-      .getTable(graft.sources.ForwardServerSource.Schema, Array.empty[Transform],
-        java.util.Map.of("port", port.toString))
-      .asInstanceOf[SupportsRead].newScanBuilder(CaseInsensitiveStringMap.empty()).build()
-      .toMicroBatchStream(java.nio.file.Files.createTempDirectory("fwd_ckpt").toString)
-    try body(stream, port) finally stream.stop()
-  }
-
-  private def fwdConnect(port: Int): java.net.Socket = {
-    val deadline = System.currentTimeMillis + 30000
-    var sock: java.net.Socket = null
-    while (sock == null) {
-      try sock = new java.net.Socket("127.0.0.1", port)
-      catch {
-        case e: java.net.ConnectException =>
-          if (System.currentTimeMillis > deadline) throw e
-          Thread.sleep(50)
-      }
-    }
-    sock.setTcpNoDelay(true)
-    sock
-  }
-
-  private def offsetOf(s: MicroBatchStream): Long = s.latestOffset().json().toLong
-
-  private def awaitOffset(s: MicroBatchStream, n: Long): Unit = {
-    val deadline = System.currentTimeMillis + 30000
-    while (offsetOf(s) < n && System.currentTimeMillis < deadline) Thread.sleep(5)
-    assert(offsetOf(s) == n)
-  }
-
-  private def readN(in: java.io.InputStream, n: Int): Array[Byte] = {
-    val b = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(b, off, n - off)
-      assert(r >= 0, s"connection closed after $off of $n bytes")
-      off += r
-    }
-    b
-  }
-
-  /** EOF, or the reset a close with unread bytes may turn into. */
-  private def closedByPeer(in: java.io.InputStream): Boolean =
-    try in.read() == -1 catch { case _: java.net.SocketException => true }
-
-  private def fwdPartitions(s: MicroBatchStream, from: Long, to: Long): Seq[InputPartition] =
-    s.planInputPartitions(s.deserializeOffset(from.toString), s.deserializeOffset(to.toString)).toSeq
-
-  private def javaSerialized(o: AnyRef): Array[Byte] = {
-    val bo = new java.io.ByteArrayOutputStream()
-    val oo = new java.io.ObjectOutputStream(bo)
-    oo.writeObject(o); oo.close()
-    bo.toByteArray
-  }
-
-  /** The rows of `parts`, each partition shipped as a task ships it. */
-  private def fwdRows(s: MicroBatchStream, parts: Seq[InputPartition]): Seq[ForwardCorpus.Row] = {
-    val factory = s.createReaderFactory()
-    parts.flatMap { p =>
-      val shipped = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(
-        javaSerialized(p))).readObject().asInstanceOf[InputPartition]
-      val reader = factory.createReader(shipped)
-      val out = Seq.newBuilder[ForwardCorpus.Row]
-      while (reader.next()) {
-        val r = reader.get()
-        val m = r.getMap(2)
-        out += ((r.getUTF8String(0).toString, r.getLong(1), (0 until m.numElements).map(i =>
-          m.keyArray.getUTF8String(i).toString -> m.valueArray.getUTF8String(i).toString)))
-      }
-      reader.close()
-      out.result()
-    }
+  /** A row of the Forward source as `ForwardCorpus` spells it. */
+  private def fwdRow(r: org.apache.spark.sql.catalyst.InternalRow): ForwardCorpus.Row = {
+    val m = r.getMap(2)
+    (r.getUTF8String(0).toString, r.getLong(1), (0 until m.numElements).map(i =>
+      m.keyArray.getUTF8String(i).toString -> m.valueArray.getUTF8String(i).toString))
   }
 
   private def ackedFrame(tag: String, id: String, records: Seq[Map[String, String]]): Array[Byte] = {
@@ -1101,33 +1022,33 @@ class StreamingSpec extends AnyFunSuite {
     ForwardCorpus.frames.foreach { case (name, f) =>
       assert(ForwardCorpus.rowsOf(f) == corpusRows(name), name)
     }
-    withForwardStream { (stream, port) =>
-      val sock = fwdConnect(port)
+    withPortStream(new graft.sources.ForwardServerSource) { (stream, port) =>
+      val sock = connect(port)
       sock.getOutputStream.write(ForwardCorpus.frames.flatMap(_._2).toArray)
       sock.getOutputStream.flush()
       val total = corpusRows.values.map(_.size).sum.toLong
       awaitOffset(stream, total)
-      val parts = fwdPartitions(stream, 0, total)
+      val parts = partitions(stream, 0, total)
       assert(parts.size > 1)
-      assert(fwdRows(stream, parts) == ForwardCorpus.frames.flatMap(f => corpusRows(f._1)))
+      assert(SourceStreams.rows(stream, parts)(fwdRow) == ForwardCorpus.frames.flatMap(f => corpusRows(f._1)))
       sock.close()
     }
   }
 
   test("forward source: a frame split at every offset or sent bytewise acts as one write") {
-    withForwardStream { (stream, port) =>
+    withPortStream(new graft.sources.ForwardServerSource) { (stream, port) =>
       val frame = ackedFrame("app.split", "s1",
         Seq(Map("log" -> "split", "n" -> "1"), Map("log" -> "two")))
       val ack = Msgpack.encodeAck("s1")
       def deliver(write: java.io.OutputStream => Unit): Seq[ForwardCorpus.Row] = {
         val before = offsetOf(stream)
-        val sock = fwdConnect(port)
+        val sock = connect(port)
         write(sock.getOutputStream)
         assert(readN(sock.getInputStream, ack.length).sameElements(ack))
         val after = offsetOf(stream)
         assert(after == before + 2)
         sock.close()
-        fwdRows(stream, fwdPartitions(stream, before, after))
+        SourceStreams.rows(stream, partitions(stream, before, after))(fwdRow)
       }
       val whole = deliver { o => o.write(frame); o.flush() }
       assert(whole == ForwardCorpus.rowsOf(frame))
@@ -1143,8 +1064,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("forward source: an acked frame gets one ack, after its rows are counted") {
-    withForwardStream { (stream, port) =>
-      val sock = fwdConnect(port)
+    withPortStream(new graft.sources.ForwardServerSource) { (stream, port) =>
+      val sock = connect(port)
       val (in, out) = (sock.getInputStream, sock.getOutputStream)
       out.write(ackedFrame("app.ack", "c-7", Seq(Map("a" -> "1"), Map("a" -> "2"), Map("a" -> "3"))))
       out.flush()
@@ -1164,7 +1085,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("forward source: a malformed frame closes its connection; earlier frames stand") {
     import graft.sources.Msgpack._
-    withForwardStream { (stream, port) =>
+    withPortStream(new graft.sources.ForwardServerSource) { (stream, port) =>
       val good = ackedFrame("app.ok", "a1", Seq(Map("log" -> "kept")))
       val after = ackedFrame("app.after", "a2", Seq(Map("log" -> "lost")))
       val oneElement = encode(MArr(Vector(MStr("app.bad"), MArr(Vector(MArr(Vector(MInt(1L))))))))
@@ -1172,7 +1093,7 @@ class StreamingSpec extends AnyFunSuite {
         MStr("yesterday"), MMap(Vector(MStr("log") -> MStr("x"))))))))))
       Seq(oneElement, stringTime).foreach { bad =>
         val before = offsetOf(stream)
-        val sock = fwdConnect(port)
+        val sock = connect(port)
         sock.setSoTimeout(10000)
         sock.getOutputStream.write(good ++ bad ++ after)
         sock.getOutputStream.flush()
@@ -1181,19 +1102,19 @@ class StreamingSpec extends AnyFunSuite {
         assert(closedByPeer(sock.getInputStream))
         sock.close()
         assert(offsetOf(stream) == before + 1)
-        assert(fwdRows(stream, fwdPartitions(stream, before, before + 1)).map(_._3) ==
+        assert(SourceStreams.rows(stream, partitions(stream, before, before + 1))(fwdRow).map(_._3) ==
           Seq(Seq("log" -> "kept")))
       }
     }
   }
 
   test("forward source: a frame still incomplete after MaxPackedBytes closes the connection") {
-    withForwardStream { (stream, port) =>
+    withPortStream(new graft.sources.ForwardServerSource) { (stream, port) =>
       // ["app.huge", [[1, {"log": <str32 declaring 1 GiB>, trickled in
       val head = Array(0x92).map(_.toByte) ++ Msgpack.encode(Msgpack.MStr("app.huge")) ++
         Array(0x91, 0x92, 0x01, 0x81).map(_.toByte) ++ Msgpack.encode(Msgpack.MStr("log")) ++
         Array(0xdb, 0x40, 0x00, 0x00, 0x00).map(_.toByte)
-      val sock = fwdConnect(port)
+      val sock = connect(port)
       sock.setSoTimeout(10000)
       val out = sock.getOutputStream
       out.write(head)
@@ -1210,7 +1131,7 @@ class StreamingSpec extends AnyFunSuite {
       sock.close()
       assert(offsetOf(stream) == 0)
       // the source itself keeps serving
-      val next = fwdConnect(port)
+      val next = connect(port)
       next.getOutputStream.write(Msgpack.encodeForward("app.ok", Seq((1L, 0L, Map("a" -> "b")))))
       next.getOutputStream.flush()
       awaitOffset(stream, 1)
@@ -1220,20 +1141,20 @@ class StreamingSpec extends AnyFunSuite {
 
   test("forward source plans byte slabs: one per slot for a big frame, small frames packed") {
     val slots = spark.sparkContext.defaultParallelism
-    withForwardStream { (stream, port) =>
+    withPortStream(new graft.sources.ForwardServerSource) { (stream, port) =>
       val big = Msgpack.encodeForward("svc.metrics", (0 until 45000).map { i =>
         (1704067200L + i / 1000, (i % 1000) * 1000000L,
           Map("service" -> s"svc-${i % 997}", "latency_ms" -> (i % 250).toString))
       })
-      val sock = fwdConnect(port)
+      val sock = connect(port)
       val out = sock.getOutputStream
       out.write(big); out.flush()
       awaitOffset(stream, 45000)
-      val parts = fwdPartitions(stream, 0, 45000)
+      val parts = partitions(stream, 0, 45000)
       assert(parts.size == math.min(45000, slots))
       val shipped = parts.map(p => javaSerialized(p).length.toLong).sum
       assert(shipped <= 1.25 * big.length, s"$shipped serialized bytes for a ${big.length}-byte frame")
-      assert(fwdRows(stream, parts) == ForwardCorpus.rowsOf(big))
+      assert(SourceStreams.rows(stream, parts)(fwdRow) == ForwardCorpus.rowsOf(big))
       stream.commit(stream.deserializeOffset("45000"))
       (0 until 50).foreach { f =>
         out.write(Msgpack.encodeForward("app.small",
@@ -1241,9 +1162,9 @@ class StreamingSpec extends AnyFunSuite {
       }
       out.flush()
       awaitOffset(stream, 45500)
-      val small = fwdPartitions(stream, 45000, 45500)
+      val small = partitions(stream, 45000, 45500)
       assert(small.size <= slots)
-      assert(fwdRows(stream, small).map(_._3) ==
+      assert(SourceStreams.rows(stream, small)(fwdRow).map(_._3) ==
         Seq.fill(50)((0 until 10).map(i => Seq("i" -> i.toString))).flatten)
       sock.close()
     }

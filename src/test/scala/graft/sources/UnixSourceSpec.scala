@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SourceStreams.withStream
+
 /** Socket-path lifecycle of the unix-domain push source: a live listener
   * must never be unlinked (the reference probes the path with a connect
   * before removing what it assumes is a stale socket), while a genuinely
@@ -19,7 +21,7 @@ class UnixSourceSpec extends AnyFunSuite {
     val server = ServerSocketChannel.open(StandardProtocolFamily.UNIX)
     server.bind(UnixDomainSocketAddress.of(path))
     try {
-      intercept[IllegalStateException] { new UnixMicroBatchStream(path) }
+      intercept[IllegalStateException] { withStream(new UnixServerSource, "path" -> path)(_ => ()) }
       assert(Files.exists(Paths.get(path)), "live socket must not be unlinked")
     } finally {
       server.close()
@@ -35,8 +37,8 @@ class UnixSourceSpec extends AnyFunSuite {
     dead.bind(UnixDomainSocketAddress.of(path))
     dead.close()
     assert(Files.exists(Paths.get(path)))
-    val stream = new UnixMicroBatchStream(path)
-    try assert(Files.exists(Paths.get(path)), "rebound on the reclaimed path")
-    finally stream.stop()
+    withStream(new UnixServerSource, "path" -> path) { _ =>
+      assert(Files.exists(Paths.get(path)), "rebound on the reclaimed path")
+    }
   }
 }
