@@ -126,6 +126,7 @@ object ClassicConfig {
                mlParsers: Map[String, Seq[graft.streaming.Multiline.Rule]] = Map.empty,
                inputProcessors: Seq[Seq[Section]] = Nil,
                outputProcessors: Seq[Seq[Section]] = Nil): Map[String, DataFrame] = {
+    graft.streaming.LocalCheckpointFiles.install(spark)
     val parsers = sections.filter(_.name == "PARSER")
       .map(s => s.required("name") -> s).toMap
 

@@ -1,0 +1,111 @@
+package graft.streaming
+
+import java.io.BufferedOutputStream
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileAlreadyExistsException,
+  FileStatus, FileSystem, Path, PathFilter, UnsupportedFileSystemException}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
+  FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
+import org.apache.spark.sql.internal.SQLConf
+
+/** The streaming checkpoint store: offset, commit, sink and state files
+  * — the engine's `storage.type filesystem` chunk files
+  * (`src/flb_storage.c`), written with plain file I/O as fluent-bit
+  * writes its chunks.
+  *
+  * Spark's default manager writes through Hadoop's `FileContext`. Without
+  * libhadoop, `RawLocalFileSystem` forks a child process for metadata:
+  * `chmod` for every file and directory it creates (`setPermission`,
+  * `.crc` sidecars included) and several `readlink`s for every rename
+  * (`FileUtil.readLink`). For `file:` paths this store keeps Spark's
+  * protocol (write a hidden temp file, then rename it over the final
+  * name) but creates the temp file and directories with `java.nio` and
+  * renames with `Files.move`, so no process starts. A rename first removes
+  * a stale Hadoop `.name.crc` sidecar of the destination, as
+  * `ChecksumFileSystem`'s rename does, so a file the default manager wrote
+  * reads back after this store rewrites it. Reads, listings, `exists` and
+  * deletes stay on Spark's manager; none of them forks.
+  *
+  * Any other scheme gets Spark's default manager for every call,
+  * unchanged. Spark builds this class through
+  * `spark.sql.streaming.checkpointFileManagerClass` ([[install]]).
+  */
+final class LocalCheckpointFiles(path: Path, conf: Configuration) extends CheckpointFileManager {
+
+  /** The manager every call goes to: [[LocalCheckpointFiles.Nio]] on
+    * `file:`, else what `CheckpointFileManager.create` builds when the key
+    * is unset.
+    */
+  private[graft] val files: CheckpointFileManager =
+    if (Option(path.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file")
+      new LocalCheckpointFiles.Nio(path, conf)
+    else
+      try new FileContextBasedCheckpointFileManager(path, conf)
+      catch { case _: UnsupportedFileSystemException => new FileSystemBasedCheckpointFileManager(path, conf) }
+
+  override def createAtomic(p: Path, overwriteIfPossible: Boolean): CancellableFSDataOutputStream =
+    files.createAtomic(p, overwriteIfPossible)
+  override def open(p: Path): FSDataInputStream = files.open(p)
+  override def list(p: Path, filter: PathFilter): Array[FileStatus] = files.list(p, filter)
+  override def mkdirs(p: Path): Unit = files.mkdirs(p)
+  override def exists(p: Path): Boolean = files.exists(p)
+  override def delete(p: Path): Unit = files.delete(p)
+  override def isLocal: Boolean = files.isLocal
+  override def createCheckpointDirectory(): Path = files.createCheckpointDirectory()
+  override def close(): Unit = files.close()
+}
+
+object LocalCheckpointFiles {
+  /** Spark's session key naming the checkpoint store class. */
+  val Key: String = SQLConf.STREAMING_CHECKPOINT_FILE_MANAGER_CLASS.parent.key
+
+  /** Select this store for `spark`'s streaming queries, unless the key is
+    * already set: an explicit choice wins.
+    */
+  def install(spark: SparkSession): Unit =
+    if (spark.conf.getOption(Key).isEmpty) spark.conf.set(Key, classOf[LocalCheckpointFiles].getName)
+
+  /** Spark's `file:` manager with the temp file, the rename and the
+    * directories moved to `java.nio`; `createAtomic` is Spark's own
+    * temp-then-rename stream over them.
+    */
+  private[graft] final class Nio(path: Path, conf: Configuration)
+      extends FileContextBasedCheckpointFileManager(path, conf) {
+    private def file(p: Path) = Paths.get(fc.makeQualified(p).toUri)
+
+    override def createTempFile(p: Path): FSDataOutputStream = {
+      val f = file(p)
+      Files.createDirectories(f.getParent)
+      new FSDataOutputStream(new BufferedOutputStream(Files.newOutputStream(f), 1 << 16), null)
+    }
+
+    /** A rename that loses to an existing file deletes its temp file,
+      * which Spark's stream would leave behind.
+      */
+    override def renameTempFile(src: Path, dst: Path, overwriteIfPossible: Boolean): Unit = {
+      val (s, d) = (file(src), file(dst))
+      def lost(): Nothing = {
+        Files.deleteIfExists(s)
+        throw new FileAlreadyExistsException(s"$dst exists")
+      }
+      if (!overwriteIfPossible && Files.exists(d)) lost()
+      Files.deleteIfExists(d.resolveSibling(s".${d.getFileName}.crc"))
+      try {
+        if (overwriteIfPossible) Files.move(s, d, StandardCopyOption.ATOMIC_MOVE)
+        else Files.move(s, d)
+      } catch { case _: java.nio.file.FileAlreadyExistsException => lost() }
+    }
+
+    override def mkdirs(p: Path): Unit = Files.createDirectories(file(p))
+
+    override def createCheckpointDirectory(): Path = {
+      val q = fc.makeQualified(path)
+      mkdirs(q)
+      q
+    }
+  }
+}

@@ -154,6 +154,7 @@ object Streams {
       trigger: Option[Trigger] = None
   ) {
     def start(df: DataFrame): StreamingQuery = {
+      LocalCheckpointFiles.install(df.sparkSession)
       var w: DataStreamWriter[org.apache.spark.sql.Row] =
         df.writeStream.format(format).outputMode(outputMode)
       path.foreach(p => w = w.option("path", p))
