@@ -1,27 +1,25 @@
 package graft.config
 
-/** Clean-room YAML subset parser — exactly the structures fluent-bit's
-  * YAML config format exercises (the reference drives libyaml events in
-  * `src/config_format/flb_cf_yaml.c`; the grammar subset below covers
-  * its whole fixture corpus `tests/internal/data/config_format/yaml/`):
-  *
-  *   - block mappings (`key: value`, nested blocks by indentation)
-  *   - block sequences (`- item`), including inline-map items
-  *     (`- name: tail` followed by sibling keys at the item's column)
-  *   - plain, 'single-quoted' ('' escape) and "double-quoted"
-  *     (backslash escapes) scalars
-  *   - literal `|` and folded `>` block scalars with `-`/`+` chomping
-  *     (lua `code:` blocks, dummy JSON payloads)
-  *   - single-line flow collections `[a, b]` / `{k: v}`
-  *   - full-line and trailing ` #` comments, `---`/`...` document markers
+import scala.jdk.CollectionConverters._
+
+import org.snakeyaml.engine.v2.api.LoadSettings
+import org.snakeyaml.engine.v2.api.lowlevel.Compose
+import org.snakeyaml.engine.v2.exceptions.YamlEngineException
+import org.snakeyaml.engine.v2.nodes.{MappingNode, ScalarNode, SequenceNode, Tag}
+import org.snakeyaml.engine.v2.nodes.{Node => YamlNode}
+import org.snakeyaml.engine.v2.schema.FailsafeSchema
+
+/** fluent-bit's YAML config format, read through snakeyaml-engine as the
+  * reference reads it through libyaml events
+  * (`src/config_format/flb_cf_yaml.c`). The document is composed under
+  * the failsafe schema, so all scalars stay STRINGS — the config layer
+  * owns interpretation (`on`/`true`, numbers), matching how flb_cf
+  * stores every property as text and converts at plugin-init time.
   *
   * Out of scope because no fluent-bit config uses them: anchors/aliases,
-  * explicit tags, multi-document streams, complex (non-scalar) mapping
-  * keys. Those raise instead of mis-parsing.
-  *
-  * All scalars stay STRINGS — the config layer owns interpretation
-  * (`on`/`true`, numbers), matching how flb_cf stores every property as
-  * text and converts at plugin-init time.
+  * explicit tags other than str/seq/map/null, complex (non-scalar)
+  * mapping keys and multi-document streams. Those raise instead of
+  * mis-parsing.
   */
 object Yaml {
 
@@ -43,480 +41,46 @@ object Yaml {
     }
   }
 
-  private final case class Line(indent: Int, content: String, raw: String,
-                                num: Int)
-
-  def fail(num: Int, msg: String): Nothing =
-    throw new IllegalArgumentException(s"yaml: line ${num + 1}: $msg")
+  private val Settings = LoadSettings.builder().setSchema(new FailsafeSchema()).build()
+  private val Tags = Set(Tag.STR, Tag.SEQ, Tag.MAP, Tag.NULL)
 
   /** Parse one document to its root mapping. An empty document parses to
     * an empty mapping (flb accepts an empty config file).
     */
   def parse(text: String): YMap = {
-    // split("\n", -1) on a trailing-newline source yields one artificial
-    // empty last element; drop it so keep-chomping block scalars (|+/>+)
-    // don't count it as a blank content line (k: |+\n  a\n is "a\n",
-    // not "a\n\n")
-    val raw0 = text.split("\n", -1).toVector
-    val raw = if (raw0.nonEmpty && raw0.last.isEmpty) raw0.dropRight(1)
-              else raw0
-    val p = new Parser(raw)
-    p.parseRoot() match {
-      case m: YMap   => m
-      case YSeq(_)   => throw new IllegalArgumentException(
+    val root =
+      try new Compose(Settings).composeString(text).map[Node](walk).orElse(YStr(""))
+      catch {
+        case e: YamlEngineException =>
+          throw new IllegalArgumentException(s"yaml: ${e.getMessage}", e)
+      }
+    root match {
+      case m: YMap => m
+      case YStr("") => YMap(Vector.empty)
+      case YSeq(_) => throw new IllegalArgumentException(
         "yaml: root must be a mapping (fluent-bit configs are keyed by section)")
-      case YStr(s)   => throw new IllegalArgumentException(
+      case YStr(s) => throw new IllegalArgumentException(
         s"yaml: root must be a mapping, got scalar '$s'")
     }
   }
 
-  private final class Parser(raw: Vector[String]) {
-    // logical lines: indentation + content, comments/blanks/doc markers
-    // dropped. Raw lines kept addressable for block scalars (which must
-    // NOT have comments stripped or content trimmed).
-    private val lines: Vector[Line] = raw.zipWithIndex.flatMap {
-      case (l, i) =>
-        val indent = l.takeWhile(_ == ' ').length
-        val body = l.drop(indent)
-        if (body.isEmpty || body.startsWith("#")) None
-        else if (indent == 0 && (body == "---" || body == "...")) None
-        else Some(Line(indent, body, l, i))
-    }
-    private var pos = 0
-
-    /** Tab-in-indentation is a YAML error — but ONLY for structural
-      * lines. Checked lazily at the point a line is parsed as
-      * structure, so tab-indented CONTENT inside a block scalar (lua
-      * code is the canonical case) passes through untouched.
-      */
-    private def checkIndent(l: Line): Line = {
-      if (l.content.startsWith("\t"))
-        fail(l.num, "tab in indentation (YAML forbids it)")
-      l
-    }
-
-    def parseRoot(): Node = {
-      if (lines.isEmpty) return YMap(Vector.empty)
-      val n = parseBlock(lines(0).indent)
-      if (pos < lines.length)
-        fail(lines(pos).num,
-          s"unexpected indentation/content: '${lines(pos).content}'")
-      n
-    }
-
-    /** Parse the block starting at the cursor, whose items/keys sit at
-      * column `indent`.
-      */
-    private def parseBlock(indent: Int): Node = {
-      val l = checkIndent(lines(pos))
-      if (l.content == "-" || l.content.startsWith("- ")) parseSeq(indent)
-      else parseMap(indent)
-    }
-
-    private def parseSeq(indent: Int): YSeq = {
-      val items = Vector.newBuilder[Node]
-      while (pos < lines.length && lines(pos).indent == indent &&
-             (lines(pos).content == "-" || lines(pos).content.startsWith("- "))) {
-        val l = checkIndent(lines(pos))
-        val rest = l.content.drop(1)
-        val restTrim = rest.dropWhile(_ == ' ')
-        if (restTrim.isEmpty) {
-          // `-` alone: the item is the deeper-indented block below
-          pos += 1
-          if (pos < lines.length && lines(pos).indent > indent)
-            items += parseBlock(lines(pos).indent)
-          else items += YStr("")
-        } else {
-          // `- something`: the item starts inline at its own column
-          val itemCol = indent + 1 + (rest.length - restTrim.length)
-          if (restTrim.startsWith("[") || restTrim.startsWith("{")) {
-            // flow collection as a sequence item: `- {k: v}` / `- [a]`
-            // (must be checked BEFORE isMappingStart — the colon inside
-            // the braces would otherwise mis-key on "{k")
-            val (node, remainder) = flowParse(restTrim, l.num)
-            val after = remainder.trim
-            if (after.nonEmpty && !after.startsWith("#"))
-              fail(l.num, s"trailing content after flow item: '$after'")
-            items += node
-            pos += 1
-          } else if (isMappingStart(restTrim, l.num)) {
-            // inline map item: first entry on this line, siblings below
-            // at itemCol. Parse by treating this line as (itemCol, rest).
-            items += parseMap(itemCol, firstOverride = Some(l.copy(
-              indent = itemCol, content = restTrim)))
-          } else if (restTrim.startsWith("- ") || restTrim == "-") {
-            // fluent-bit configs never nest sequences directly
-            fail(l.num, "nested '- -' sequences unsupported")
-          } else {
-            items += YStr(scalarOf(restTrim, l.num))
-            pos += 1
-          }
+  private def walk(n: YamlNode): Node = {
+    n.getAnchor.ifPresent(a => fail(n, s"anchors and aliases are unsupported (&$a)"))
+    if (!Tags(n.getTag)) fail(n, s"tag ${n.getTag} is unsupported")
+    n match {
+      case s: ScalarNode => YStr(s.getValue)
+      case s: SequenceNode => YSeq(s.getValue.asScala.iterator.map(walk).toVector)
+      case m: MappingNode => YMap(m.getValue.asScala.iterator.map { t =>
+        walk(t.getKeyNode) match {
+          case YStr(k) => k -> walk(t.getValueNode)
+          case _ => fail(t.getKeyNode, "complex (non-scalar) mapping keys are unsupported")
         }
-      }
-      YSeq(items.result())
+      }.toVector)
     }
+  }
 
-    /** A content string opens a mapping if it has a `key:` separator at
-      * top level (outside quotes), i.e. a ':' followed by space/EOL.
-      */
-    private def isMappingStart(s: String, num: Int): Boolean =
-      keySplit(s, num).isDefined
-
-    /** Split `key: value` → (key, valuePart). Handles quoted keys; the
-      * separator is the first unquoted ':' that is followed by a space
-      * or ends the line (so `tag: app:x` keys on the first colon but
-      * URLs *inside values* are never re-split — values aren't passed
-      * here).
-      */
-    private def keySplit(s: String, num: Int): Option[(String, String)] = {
-      if (s.startsWith("\"") || s.startsWith("'")) {
-        val q = s.charAt(0)
-        var i = 1
-        val sb = new StringBuilder
-        var closed = -1
-        while (i < s.length && closed < 0) {
-          val c = s.charAt(i)
-          if (q == '\'' && c == '\'' && i + 1 < s.length && s.charAt(i + 1) == '\'') {
-            sb.append('\''); i += 2
-          } else if (q == '"' && c == '\\' && i + 1 < s.length) {
-            val (u, adv) = unescapeAt(s, i + 1, num)
-            sb.append(u); i += 1 + adv
-          } else if (c == q) { closed = i; i += 1 }
-          else { sb.append(c); i += 1 }
-        }
-        if (closed < 0) return None
-        val after = s.drop(closed + 1).dropWhile(_ == ' ')
-        if (after.startsWith(":") &&
-            (after.length == 1 || after.charAt(1) == ' '))
-          Some((sb.toString, after.drop(1).dropWhile(_ == ' ')))
-        else None
-      } else {
-        var i = 0
-        while (i < s.length) {
-          if (s.charAt(i) == ':' &&
-              (i + 1 == s.length || s.charAt(i + 1) == ' '))
-            return Some((s.take(i).trim,
-              s.drop(i + 1).dropWhile(_ == ' ')))
-          i += 1
-        }
-        None
-      }
-    }
-
-    private def parseMap(indent: Int,
-                         firstOverride: Option[Line] = None): YMap = {
-      val entries = Vector.newBuilder[(String, Node)]
-      var first = firstOverride
-      def cur: Option[Line] = first.orElse(
-        if (pos < lines.length) Some(lines(pos)) else None)
-      var done = false
-      while (!done) {
-        cur match {
-          case Some(l) if l.indent == indent &&
-                          keySplit(l.content, l.num).isDefined =>
-            checkIndent(l)
-            val (key, valuePart) = keySplit(l.content, l.num).get
-            val consumedSynthetic = first.isDefined
-            first = None
-            pos += 1 // past the key line (synthetic or real — same line)
-            entries += key -> parseValue(valuePart, indent, l.num)
-            // after an inline-map item, sibling keys continue at the
-            // synthetic column, which `indent` already is
-            if (consumedSynthetic) () // nothing special; loop continues
-          case _ => done = true
-        }
-      }
-      YMap(entries.result())
-    }
-
-    /** The value side of `key: <valuePart>` at mapping column `indent`. */
-    private def parseValue(valuePart: String, indent: Int, num: Int): Node = {
-      // flow collections are checked BEFORE comment stripping: a ' #'
-      // inside a quoted flow scalar (`[a, "x # y"]`) is content, and
-      // flowSeq itself tolerates a trailing comment after the close
-      if (valuePart.startsWith("[")) return flowSeq(valuePart, num)
-      if (valuePart.startsWith("{")) return flowMap(valuePart, num)
-      val vp = stripComment(valuePart)
-      if (vp.isEmpty) {
-        // nested block: deeper-indented lines, OR a sequence whose
-        // dashes sit at the SAME column as the key (YAML allows it)
-        if (pos < lines.length && lines(pos).indent > indent)
-          parseBlock(lines(pos).indent)
-        else if (pos < lines.length && lines(pos).indent == indent &&
-                 (lines(pos).content == "-" ||
-                  lines(pos).content.startsWith("- ")))
-          parseSeq(indent)
-        else YStr("")
-      } else if (vp == "|" || vp == "|-" || vp == "|+" ||
-                 vp == ">" || vp == ">-" || vp == ">+") {
-        blockScalar(vp, indent, num)
-      } else YStr(scalarOf(vp, num))
-    }
-
-    /** Literal/folded block scalar: consume raw source lines (comments
-      * and quoting do NOT apply inside) more-indented than the key.
-      */
-    private def blockScalar(header: String, keyIndent: Int,
-                            num: Int): YStr = {
-      val folded = header.charAt(0) == '>'
-      val chomp = if (header.length > 1) header.charAt(1) else ' '
-      // find where the block ends in RAW lines: from the key's raw line
-      // +1 until a non-blank raw line with indent <= keyIndent
-      var endRaw = num // key line; stays here if the block is empty
-      var contentIndent = -1
-      val body = Vector.newBuilder[String]
-      var i = num + 1
-      var open = true
-      while (open && i < raw.length) {
-        val l = raw(i)
-        val ind = l.takeWhile(_ == ' ').length
-        if (l.trim.isEmpty) { body += ""; i += 1 }
-        else if (ind > keyIndent) {
-          if (contentIndent < 0) contentIndent = ind
-          body += l.drop(math.min(contentIndent, ind))
-          endRaw = i
-          i += 1
-        } else open = false
-      }
-      // advance the LOGICAL cursor past every consumed raw line
-      while (pos < lines.length && lines(pos).num <= endRaw) pos += 1
-      val b0 = body.result()
-      val lastContent = b0.lastIndexWhere(_.nonEmpty)
-      if (lastContent < 0) return YStr("")
-      val trailingBlanks = b0.length - 1 - lastContent
-      val b = b0.take(lastContent + 1)
-      val text =
-        if (!folded) b.mkString("\n")
-        else {
-          // folding: adjacent non-blank lines join with a space; blank
-          // lines become newlines
-          val sb = new StringBuilder
-          var prevBlank = true
-          var firstLine = true
-          b.foreach { l =>
-            if (l.isEmpty) { sb.append('\n'); prevBlank = true }
-            else {
-              if (!firstLine && !prevBlank) sb.append(' ')
-              sb.append(l); prevBlank = false
-            }
-            firstLine = false
-          }
-          sb.toString
-        }
-      chomp match {
-        case '-' => YStr(text)
-        case '+' => YStr(text + "\n" * (trailingBlanks + 1))
-        case _   => YStr(text + "\n")
-      }
-    }
-
-    /** `[a, b, c]` — single line, scalar or nested flow items. */
-    private def flowSeq(s: String, num: Int): Node = {
-      // NOTE: the key line is already consumed by parseMap — no cursor
-      // advance here
-      val (node, rest) = flowParse(s, num)
-      if (rest.trim.nonEmpty && !rest.trim.startsWith("#"))
-        fail(num, s"trailing content after flow collection: '$rest'")
-      node
-    }
-    private def flowMap(s: String, num: Int): Node = flowSeq(s, num)
-
-    /** Recursive single-line flow parser; returns (node, remainder). */
-    private def flowParse(s: String, num: Int): (Node, String) = {
-      val t = s.dropWhile(_ == ' ')
-      if (t.startsWith("[")) {
-        var rest = t.drop(1)
-        val items = Vector.newBuilder[Node]
-        var closed = false
-        while (!closed) {
-          val r = rest.dropWhile(_ == ' ')
-          if (r.startsWith("]")) { rest = r.drop(1); closed = true }
-          else {
-            val (item, rr) = flowScalarOrNested(r, num)
-            items += item
-            val r2 = rr.dropWhile(_ == ' ')
-            if (r2.startsWith(",")) rest = r2.drop(1)
-            else if (r2.startsWith("]")) { rest = r2.drop(1); closed = true }
-            else fail(num, s"bad flow sequence near '$r2'")
-          }
-        }
-        (YSeq(items.result()), rest)
-      } else if (t.startsWith("{")) {
-        var rest = t.drop(1)
-        val entries = Vector.newBuilder[(String, Node)]
-        var closed = false
-        while (!closed) {
-          val r = rest.dropWhile(_ == ' ')
-          if (r.startsWith("}")) { rest = r.drop(1); closed = true }
-          else {
-            // quote-aware key split: a QUOTED flow key may contain ':'
-            // ({"a:b": v}) — scan past the close quote before looking
-            // for the separator, mirroring keySplit's block-context rule
-            val (k, afterColon) =
-              if (r.startsWith("\"") || r.startsWith("'")) {
-                val q = r.charAt(0)
-                var i = 1
-                val sb = new StringBuilder
-                var closed = -1
-                while (i < r.length && closed < 0) {
-                  val c = r.charAt(i)
-                  if (q == '\'' && c == '\'' && i + 1 < r.length &&
-                      r.charAt(i + 1) == '\'') { sb.append('\''); i += 2 }
-                  else if (q == '"' && c == '\\' && i + 1 < r.length) {
-                    val (u, adv) = unescapeAt(r, i + 1, num)
-                    sb.append(u); i += 1 + adv
-                  } else if (c == q) { closed = i; i += 1 }
-                  else { sb.append(c); i += 1 }
-                }
-                if (closed < 0) fail(num, "unclosed quote in flow mapping key")
-                val rest = r.drop(closed + 1).dropWhile(_ == ' ')
-                if (!rest.startsWith(":"))
-                  fail(num, s"flow mapping entry missing ':' near '$r'")
-                (sb.toString, rest.drop(1))
-              } else {
-                val ci = r.indexOf(':')
-                if (ci < 0)
-                  fail(num, s"flow mapping entry missing ':' near '$r'")
-                (r.take(ci).trim, r.drop(ci + 1))
-              }
-            val (v, rr) = flowScalarOrNested(afterColon, num)
-            entries += k -> v
-            val r2 = rr.dropWhile(_ == ' ')
-            if (r2.startsWith(",")) rest = r2.drop(1)
-            else if (r2.startsWith("}")) { rest = r2.drop(1); closed = true }
-            else fail(num, s"bad flow mapping near '$r2'")
-          }
-        }
-        (YMap(entries.result()), rest)
-      } else fail(num, s"expected flow collection at '$t'")
-    }
-
-    private def flowScalarOrNested(s: String, num: Int): (Node, String) = {
-      val t = s.dropWhile(_ == ' ')
-      if (t.startsWith("[") || t.startsWith("{")) flowParse(t, num)
-      else if (t.startsWith("\"") || t.startsWith("'")) {
-        val q = t.charAt(0)
-        var i = 1
-        val sb = new StringBuilder
-        var end = -1
-        while (i < t.length && end < 0) {
-          val c = t.charAt(i)
-          if (q == '\'' && c == '\'' && i + 1 < t.length && t.charAt(i + 1) == '\'') {
-            sb.append('\''); i += 2
-          } else if (q == '"' && c == '\\' && i + 1 < t.length) {
-            val (u, adv) = unescapeAt(t, i + 1, num)
-            sb.append(u); i += 1 + adv
-          } else if (c == q) end = i
-          else { sb.append(c); i += 1 }
-        }
-        if (end < 0) fail(num, "unclosed quote in flow scalar")
-        (YStr(sb.toString), t.drop(end + 1))
-      } else {
-        // a plain flow scalar also stops at ' #': in YAML the comment
-        // runs to end-of-line (swallowing the closing bracket), so a
-        // single-line flow like `[a # c]` is unterminated — stopping
-        // here makes the enclosing flowParse fail loudly rather than
-        // keeping "a # c" as content
-        val stop = t.indexWhere(c => c == ',' || c == ']' || c == '}')
-        val cut = if (stop < 0) t.length else stop
-        val hash = if (t.startsWith("#")) 0 else {
-          var h = -1; var i = 1
-          while (h < 0 && i < cut) {
-            if (t.charAt(i) == '#' && t.charAt(i - 1) == ' ') h = i
-            i += 1
-          }
-          h
-        }
-        val end = if (hash >= 0) hash else cut
-        (YStr(t.take(end).trim), t.drop(end))
-      }
-    }
-
-    /** Trailing comment: ` #` outside quotes cuts a plain scalar. A '#'
-      * at index 0 is ALSO a comment — `key: # note` is an empty value
-      * followed by a comment in YAML (a plain scalar cannot start with
-      * '#' after the separating space).
-      */
-    private def stripComment(s: String): String = {
-      if (s.startsWith("\"") || s.startsWith("'")) return s // scalarOf handles
-      var i = 0
-      while (i < s.length) {
-        if (s.charAt(i) == '#' && (i == 0 || s.charAt(i - 1) == ' '))
-          return s.take(i).reverse.dropWhile(_ == ' ').reverse
-        i += 1
-      }
-      s
-    }
-
-    /** One scalar value: quoted (unescaped, trailing comment after the
-      * close quote ignored) or plain (comment-stripped, trimmed).
-      */
-    private def scalarOf(s: String, num: Int): String = {
-      if (s.startsWith("\"") || s.startsWith("'")) {
-        val q = s.charAt(0)
-        var i = 1
-        val sb = new StringBuilder
-        var end = -1
-        while (i < s.length && end < 0) {
-          val c = s.charAt(i)
-          if (q == '\'' && c == '\'' && i + 1 < s.length && s.charAt(i + 1) == '\'') {
-            sb.append('\''); i += 2
-          } else if (q == '"' && c == '\\' && i + 1 < s.length) {
-            val (u, adv) = unescapeAt(s, i + 1, num)
-            sb.append(u); i += 1 + adv
-          } else if (c == q) end = i
-          else { sb.append(c); i += 1 }
-        }
-        if (end < 0) fail(num, s"unclosed quote: $s")
-        val after = s.drop(end + 1).trim
-        if (after.nonEmpty && !after.startsWith("#"))
-          fail(num, s"trailing content after quoted scalar: '$after'")
-        sb.toString
-      } else stripComment(s).trim
-    }
-
-    /** Decode the double-quoted escape whose introducing char sits at
-      * s(i) (the char AFTER the backslash). Returns (decoded text,
-      * chars consumed from i). Covers libyaml's escape set; an UNKNOWN
-      * escape fails loudly -- silently degrading \\u00e9 to the text
-      * "u00e9" is exactly the mis-parse class the parser's
-      * fail-on-out-of-scope policy exists to prevent.
-      */
-    private def unescapeAt(s: String, i: Int, num: Int): (String, Int) = {
-      def hex(n: Int): String = {
-        if (i + n >= s.length)
-          fail(num, s"truncated \\${s.charAt(i)} escape")
-        val h = s.substring(i + 1, i + 1 + n)
-        if (!h.forall(c => Character.digit(c, 16) >= 0))
-          fail(num, s"bad hex digits in \\${s.charAt(i)}$h")
-        val cp = java.lang.Long.parseLong(h, 16)
-        if (cp > 0x10FFFFL)
-          fail(num, s"escape \\${s.charAt(i)}$h beyond U+10FFFF")
-        new String(Character.toChars(cp.toInt))
-      }
-      s.charAt(i) match {
-        case 'n'   => ("\n", 1)
-        case 't'   => ("\t", 1)
-        case 'r'   => ("\r", 1)
-        case '0'   => ("\u0000", 1)
-        case 'a'   => ("\u0007", 1)
-        case 'b'   => ("\b", 1)
-        case 'e'   => ("\u001b", 1)
-        case 'f'   => ("\f", 1)
-        case 'v'   => ("\u000b", 1)
-        case '"'   => ("\"", 1)
-        case '\\'  => ("\\", 1)
-        case '/'   => ("/", 1)
-        case ' '   => (" ", 1)
-        case 'N'   => ("\u0085", 1) // next line
-        case '_'   => ("\u00a0", 1) // non-breaking space
-        case 'L'   => ("\u2028", 1) // line separator
-        case 'P'   => ("\u2029", 1) // paragraph separator
-        case 'x'   => (hex(2), 3)
-        case 'u'   => (hex(4), 5)
-        case 'U'   => (hex(8), 9)
-        case other => fail(num, s"unsupported escape '\\$other'")
-      }
-    }
+  private def fail(n: YamlNode, msg: String): Nothing = {
+    val at = n.getStartMark.map[String](m => s"line ${m.getLine + 1}: ").orElse("")
+    throw new IllegalArgumentException(s"yaml: $at$msg")
   }
 }

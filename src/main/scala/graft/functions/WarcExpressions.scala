@@ -119,9 +119,8 @@ object WarcScan {
     // (>2 GB inflated cannot fit a JVM byte array at all; such segments
     // must be split upstream.)
     val blob =
-      if (!graft.parse.OtlpProto.isGzip(raw)) raw
-      else scala.util.Try(
-        graft.parse.OtlpProto.gunzip(raw, maxBytes = Int.MaxValue - 64))
+      if (!graft.sources.Msgpack.sniffGzip(raw)) raw
+      else scala.util.Try(graft.sources.Msgpack.gunzip(raw, Int.MaxValue - 64))
         .getOrElse(Array.emptyByteArray) // corrupt gzip: no records
     val n = blob.length
     val out = scala.collection.mutable.ArrayBuffer[Any]()

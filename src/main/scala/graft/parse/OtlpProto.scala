@@ -3,6 +3,7 @@ package graft.parse
 import org.apache.spark.sql.{Column, DataFrame}
 
 import Proto.{Reader, Writer}
+import graft.sources.{Msgpack, Zstd}
 
 /** OTLP/HTTP **binary protobuf** ingest — the wire format every standard
   * otel-collector/SDK exporter sends by default. The reference accepts
@@ -620,29 +621,6 @@ object OtlpProto {
   }
 
   // ------------------------------------------------------------- transport
-  /** gzip body decompression (Content-Encoding: gzip —
-    * opentelemetry_prot.c:964-965), with a size cap so a malicious tiny
-    * body can't balloon into an OOM ("zip bomb"): the reference's
-    * flb_gzip_uncompress grows from the declared ISIZE, we cap at 256 MiB.
-    */
-  def gunzip(body: Array[Byte], maxBytes: Int = 256 * 1024 * 1024): Array[Byte] = {
-    val in = new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(body))
-    val out = new java.io.ByteArrayOutputStream(body.length * 4 max 1024)
-    val chunk = new Array[Byte](65536)
-    var n = in.read(chunk)
-    while (n >= 0) {
-      out.write(chunk, 0, n)
-      if (out.size() > maxBytes)
-        throw new IllegalArgumentException("gzip body exceeds size cap")
-      n = in.read(chunk)
-    }
-    out.toByteArray
-  }
-
-  def isGzip(body: Array[Byte]): Boolean =
-    body.length >= 2 && (body(0) & 0xff) == 0x1f && (body(1) & 0xff) == 0x8b
-
   /** Content-type dispatch, mirroring opentelemetry_utils.c:122-155:
     * `application/protobuf`, `application/x-protobuf`, and gRPC content
     * types are protobuf; otherwise sniff — a body whose first
@@ -695,9 +673,8 @@ object OtlpProto {
       // opentelemetry_prot.c:89-103)
       out.write(
         if (!compressed) msg
-        else if (graft.sources.Zstd.sniff(msg))
-          graft.sources.Zstd.decompress(msg, 256 * 1024 * 1024)
-        else gunzip(msg))
+        else if (Zstd.sniff(msg)) Zstd.decompress(msg, Msgpack.MaxInflatedBytes)
+        else Msgpack.gunzip(msg, Msgpack.MaxInflatedBytes))
       o += 5 + len
     }
     out.toByteArray
@@ -717,13 +694,7 @@ object OtlpProto {
     */
   def rawBody(body: Array[Byte], contentType: String,
               contentEncoding: String): Array[Byte] = {
-    // magic wins: a declared encoding whose payload carries no codec
-    // magic passes through raw instead of dying inside the codec
-    val unzipped =
-      if (graft.sources.Zstd.sniff(body))
-        graft.sources.Zstd.decompress(body, 256 * 1024 * 1024)
-      else if (isGzip(body)) gunzip(body)
-      else body
+    val unzipped = Msgpack.uncompress(body, Msgpack.MaxInflatedBytes)
     if (isGrpc(contentType)) stripGrpcFrame(unzipped) else unzipped
   }
 

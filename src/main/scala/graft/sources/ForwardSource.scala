@@ -116,8 +116,9 @@ object ForwardServerSource {
     */
   private def accept(stream: PushStream[String], b: Array[Byte], from: Int, out: OutputStream): Unit = {
     val (v, _) = Msgpack.decode(b, from)
-    val n = Msgpack.forwardEvents(v).size // throws on a malformed frame
-    if (n > 0) stream.append(segment(b, from, v, n))
+    val payload = Msgpack.packedPayload(v) // decompressed once, for both steps
+    val n = Msgpack.forwardEvents(v, payload).size // throws on a malformed frame
+    if (n > 0) stream.append(segment(b, from, v, payload, n))
     Msgpack.forwardChunkId(v).foreach { id =>
       out.write(Msgpack.encodeAck(id)); out.flush()
     }
@@ -125,10 +126,11 @@ object ForwardServerSource {
 
   /** The `n` entries of the validated frame `v` decoded from `b(from)`:
     * Forward mode's entries array in place, PackedForward's decompressed
-    * payload (already an entry stream), and Message mode's time and
+    * `payload` (already an entry stream), and Message mode's time and
     * record behind a fixarray(2) header.
     */
-  private def segment(b: Array[Byte], from: Int, v: Msgpack.V, n: Int): Segment[String] = {
+  private def segment(b: Array[Byte], from: Int, v: Msgpack.V, payload: Array[Byte],
+                      n: Int): Segment[String] = {
     def arrayHeader(p: Int): Int = (b(p) & 0xFF) match {
       case 0xdc => 3
       case 0xdd => 5
@@ -141,8 +143,7 @@ object ForwardServerSource {
     val p = Msgpack.skip(b, from + arrayHeader(from)) // past the tag
     second match {
       case _: Msgpack.MArr => entries(tag, b, p + arrayHeader(p), n)
-      // forwardEvents keeps no copy of the payload it validated: unpack again
-      case Msgpack.MBin(packed) => entries(tag, Msgpack.unpack(packed), 0, n)
+      case _: Msgpack.MBin => entries(tag, payload, 0, n)
       case _ =>
         val end = Msgpack.skip(b, Msgpack.skip(b, p))
         val e = new Array[Byte](1 + end - p)

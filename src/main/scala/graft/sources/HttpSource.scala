@@ -116,7 +116,7 @@ object HttpServerSource {
         // uncompress before the format decoder sees the body)
         val body =
           if (contentEncoding.toLowerCase(java.util.Locale.ROOT).contains("gzip"))
-            graft.parse.OtlpProto.gunzip(rawBytes)
+            Msgpack.gunzip(rawBytes, Msgpack.MaxInflatedBytes)
           else rawBytes
         // body=raw keeps the POST body intact as ONE base64 row — the
         // ingest shape for binary payloads (prometheus remote-write

@@ -199,8 +199,8 @@ object KafkaWire {
       bb.get(recsRaw)
       val recs = (attributes & 7) match {
         case 0 => recsRaw
-        case 1 => Msgpack.gunzip(recsRaw, 256 * 1024 * 1024)
-        case 4 => Zstd.decompress(recsRaw, 256 * 1024 * 1024)
+        case 1 => Msgpack.gunzip(recsRaw, Msgpack.MaxInflatedBytes)
+        case 4 => Zstd.decompress(recsRaw, Msgpack.MaxInflatedBytes)
         case c => throw new IllegalArgumentException(
           s"kafka: unsupported compression codec $c (none/gzip/zstd)")
       }

@@ -251,7 +251,13 @@ object Msgpack {
     */
   val MaxPackedBytes: Int = 32 * 1024 * 1024
 
-  private def sniffGzip(d: Array[Byte]): Boolean =
+  /** Decompressed-size cap for an OTLP/HTTP request body or a Kafka
+    * record batch (the reference grows its buffer from the declared size;
+    * a bomb stops here instead).
+    */
+  val MaxInflatedBytes: Int = 256 * 1024 * 1024
+
+  def sniffGzip(d: Array[Byte]): Boolean =
     d.length >= 2 && d(0) == 0x1f.toByte && d(1) == 0x8b.toByte
 
   /** Bounded gunzip. GZIPInputStream handles the concatenated-member
@@ -260,18 +266,35 @@ object Msgpack {
   def gunzip(data: Array[Byte], limit: Int = MaxPackedBytes): Array[Byte] = {
     val in = new java.util.zip.GZIPInputStream(
       new java.io.ByteArrayInputStream(data))
-    val out = new java.io.ByteArrayOutputStream(
-      math.min(math.max(data.length * 4, 4096), 1 << 16))
-    val buf = new Array[Byte](8192)
+    try readBounded(in, limit, "gzip") finally in.close()
+  }
+
+  /** Reads a decompressing stream to its end in 64 KiB steps, failing
+    * once the output passes `limit` bytes.
+    */
+  private[sources] def readBounded(in: java.io.InputStream, limit: Int, codec: String): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(1 << 16)
+    val buf = new Array[Byte](1 << 16)
     var n = in.read(buf)
     while (n >= 0) {
       out.write(buf, 0, n)
       if (out.size > limit) throw new IllegalArgumentException(
-        s"packedforward payload too large (> $limit bytes after gunzip)")
+        s"$codec: output exceeds the limit of $limit bytes")
       n = in.read(buf)
     }
     out.toByteArray
   }
+
+  /** A possibly compressed payload, decompressed by its magic bytes:
+    * zstd, then gzip, else passed through raw. Magic wins over any
+    * declared encoding in both directions (fw_prot.c:1729-1739,
+    * opentelemetry_prot.c:89-103): a declared codec whose payload
+    * carries no magic is never handed to the codec to die inside it.
+    */
+  def uncompress(data: Array[Byte], limit: Int): Array[Byte] =
+    if (Zstd.sniff(data)) Zstd.decompress(data, limit)
+    else if (sniffGzip(data)) gunzip(data, limit)
+    else data
 
   /** Parse one top-level Forward entry (fluent forward protocol v1):
     * `[tag, time, record]` (Message mode), `[tag, [[time, record]...]]`
@@ -282,12 +305,16 @@ object Msgpack {
     * other option-map keys are ignored here (ack is handled by the
     * socket layer).
     */
-  def forwardEvents(v: V): Seq[Event] = v match {
+  def forwardEvents(v: V): Seq[Event] = forwardEvents(v, packedPayload(v))
+
+  /** [[forwardEvents]] of `v` whose PackedForward payload is already
+    * decompressed to `payload` (by [[packedPayload]]).
+    */
+  def forwardEvents(v: V, payload: Array[Byte]): Seq[Event] = v match {
     case MArr(MStr(tag) +: rest) => rest match {
       case (entries: MArr) +: _ =>
         entries.items.map(entry(tag, _))
-      case MBin(packed) +: _ =>
-        val payload = unpack(packed)
+      case MBin(_) +: _ =>
         var o = 0
         val out = Seq.newBuilder[Event]
         while (o < payload.length) {
@@ -302,17 +329,14 @@ object Msgpack {
     case other => throw new IllegalArgumentException(s"bad forward message $other")
   }
 
-  /** A PackedForward payload as its entry stream. Magic bytes win over
-    * the declared `compressed` option in BOTH directions
-    * (fw_prot.c:1729-1739): a gzip-magic payload is gunzipped even when
-    * undeclared, and a declared "gzip"/"zstd" whose payload carries no
-    * matching magic is passed through raw — never handed to the codec to
-    * die with a raw ZipException.
+  /** A PackedForward message's payload as its entry stream, decompressed
+    * by [[uncompress]] (magic wins over the declared `compressed` option);
+    * null for the other modes.
     */
-  private[sources] def unpack(packed: Array[Byte]): Array[Byte] =
-    if (sniffGzip(packed)) gunzip(packed)
-    else if (Zstd.sniff(packed)) Zstd.decompress(packed, MaxPackedBytes)
-    else packed
+  def packedPayload(v: V): Array[Byte] = v match {
+    case MArr(MStr(_) +: MBin(packed) +: _) => uncompress(packed, MaxPackedBytes)
+    case _ => null
+  }
 
   /** One `[time, record]` entry of `tag` as an [[Event]]. */
   private[sources] def entry(tag: String, v: V): Event = v match {

@@ -1,826 +1,31 @@
 package graft.sources
 
-/** Zstandard frame decoder (RFC 8878), hand-rolled — the JVM ships no
-  * zstd codec and the sandbox resolves no extra dependencies, yet the
-  * reference accepts zstd-compressed Forward chunks
-  * (plugins/in_forward/fw_prot.c) and OTLP bodies
+import java.io.{ByteArrayInputStream, IOException}
+
+import com.github.luben.zstd.ZstdInputStreamNoFinalizer
+
+/** Zstandard decompression for zstd-compressed Forward chunks
+  * (plugins/in_forward/fw_prot.c), OTLP bodies
   * (plugins/in_opentelemetry/opentelemetry_prot.c:89-103
-  * `uncompress_zstd`); standard otel-collector exporters emit it by
-  * default. Decompression only — the repo never needs to produce zstd.
-  *
-  * Coverage: full frame format — raw/RLE/compressed blocks, Huffman
-  * literals (direct + FSE-compressed weight descriptions, 1-stream and
-  * 4-stream, treeless repeat), sequences with predefined / RLE /
-  * FSE-compressed / repeat symbol tables, the three-slot repeat-offset
-  * machine, skippable frames, concatenated frames, and XXH64 content
-  * checksums (verified, not skipped). Dictionaries are rejected (the
-  * reference never negotiates them on these paths).
-  *
-  * Everything here derives from the public RFC 8878 document; no code
-  * is ported. Bomb guard: `limit` caps the total regenerated size, the
-  * same contract as [[Msgpack.gunzip]].
+  * `uncompress_zstd`) and Kafka record batches. Like the reference it
+  * decodes with libzstd, here through the zstd-jni binding Spark ships:
+  * concatenated and skippable frames and XXH64 content checksums are
+  * libzstd's. Every failure is an `IllegalArgumentException("zstd: …")`,
+  * and `limit` caps the regenerated size, the same contract as
+  * [[Msgpack.gunzip]].
   */
 object Zstd {
 
-  private final val FrameMagic = 0xFD2FB528
-  private final val SkippableMask = 0xFFFFFFF0
-  private final val SkippableMagic = 0x184D2A50
-
   /** zstd frame magic: 28 B5 2F FD little-endian. */
   def sniff(d: Array[Byte]): Boolean =
-    d.length >= 4 && le32(d, 0) == FrameMagic
+    d.length >= 4 && d(0) == 0x28.toByte && d(1) == 0xB5.toByte &&
+      d(2) == 0x2F.toByte && d(3) == 0xFD.toByte
 
-  def decompress(src: Array[Byte], limit: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(
-      math.min(math.max(src.length * 4, 4096), 1 << 16))
-    var ip = 0
-    while (ip < src.length) {
-      if (ip + 4 > src.length) fail("truncated frame magic")
-      val magic = le32(src, ip)
-      if ((magic & SkippableMask) == SkippableMagic) {
-        if (ip + 8 > src.length) fail("truncated skippable frame")
-        val size = le32(src, ip + 4)
-        if (size < 0 || ip + 8 + size > src.length)
-          fail("bad skippable frame size")
-        ip += 8 + size
-      } else if (magic == FrameMagic) {
-        ip = decodeFrame(src, ip + 4, out, limit)
-      } else fail(f"not a zstd frame (magic 0x$magic%08x)")
+  def decompress(src: Array[Byte], limit: Int): Array[Byte] =
+    try {
+      val in = new ZstdInputStreamNoFinalizer(new ByteArrayInputStream(src))
+      try Msgpack.readBounded(in, limit, "zstd") finally in.close()
+    } catch {
+      case e: IOException => throw new IllegalArgumentException(s"zstd: ${e.getMessage}", e)
     }
-    out.toByteArray
-  }
-
-  private def fail(msg: String): Nothing =
-    throw new IllegalArgumentException(s"zstd: $msg")
-
-  private def le32(d: Array[Byte], o: Int): Int =
-    (d(o) & 0xff) | ((d(o + 1) & 0xff) << 8) |
-      ((d(o + 2) & 0xff) << 16) | ((d(o + 3) & 0xff) << 24)
-
-  // ------------------------------------------------------------ frames
-
-  /** Per-frame decoder state: repeat offsets, the last Huffman table
-    * (treeless literal blocks) and the last LL/OF/ML sequence tables
-    * (Repeat_Mode) all persist across blocks within one frame.
-    */
-  private final class FrameState {
-    var rep1 = 1L; var rep2 = 4L; var rep3 = 8L
-    var huff: HufTable = null
-    var llTab: FseTable = null
-    var ofTab: FseTable = null
-    var mlTab: FseTable = null
-  }
-
-  private def decodeFrame(src: Array[Byte], start: Int,
-                          out: java.io.ByteArrayOutputStream,
-                          limit: Int): Int = {
-    var ip = start
-    if (ip >= src.length) fail("truncated frame header")
-    val fhd = src(ip) & 0xff; ip += 1
-    val fcsFlag = (fhd >>> 6) & 3
-    val singleSegment = ((fhd >>> 5) & 1) == 1
-    if (((fhd >>> 3) & 1) != 0) fail("reserved frame-header bit set")
-    val checksumFlag = ((fhd >>> 2) & 1) == 1
-    val didFlag = fhd & 3
-    if (!singleSegment) ip += 1 // Window_Descriptor: output is limit-capped
-    val didBytes = Array(0, 1, 2, 4)(didFlag)
-    if (didBytes > 0) {
-      if (ip + didBytes > src.length) fail("truncated dictionary id")
-      var dictId = 0L
-      var i = 0
-      while (i < didBytes) { dictId |= (src(ip + i) & 0xffL) << (8 * i); i += 1 }
-      ip += didBytes
-      if (dictId != 0) fail(s"dictionary $dictId not supported")
-    }
-    val fcsBytes = fcsFlag match {
-      case 0 => if (singleSegment) 1 else 0
-      case 1 => 2
-      case 2 => 4
-      case _ => 8
-    }
-    if (ip + fcsBytes > src.length) fail("truncated content size")
-    var declared = -1L
-    if (fcsBytes > 0) {
-      declared = 0L
-      var i = 0
-      while (i < fcsBytes) { declared |= (src(ip + i) & 0xffL) << (8 * i); i += 1 }
-      if (fcsBytes == 2) declared += 256
-      ip += fcsBytes
-      if (declared > limit) fail(
-        s"declared content size $declared exceeds limit $limit (bomb guard)")
-    }
-
-    // the frame's output stays addressable to the end: sequences
-    // back-reference any earlier offset within the frame
-    val fout = new FrameOut(new Array[Byte](math.min(
-      math.max(if (declared >= 0) declared.toInt else 64 * 1024, 1024),
-      limit max 1024)), 0, limit)
-
-    val st = new FrameState
-    var last = false
-    while (!last) {
-      if (ip + 3 > src.length) fail("truncated block header")
-      val bh = (src(ip) & 0xff) | ((src(ip + 1) & 0xff) << 8) |
-        ((src(ip + 2) & 0xff) << 16)
-      ip += 3
-      last = (bh & 1) == 1
-      val btype = (bh >>> 1) & 3
-      val bsize = bh >>> 3
-      btype match {
-        case 0 => // raw
-          if (ip + bsize > src.length) fail("truncated raw block")
-          fout.ensure(bsize)
-          System.arraycopy(src, ip, fout.buf, fout.fo, bsize)
-          fout.fo += bsize; ip += bsize
-        case 1 => // RLE: bsize is the REGENERATED size, content one byte
-          if (ip >= src.length) fail("truncated rle block")
-          fout.ensure(bsize)
-          java.util.Arrays.fill(fout.buf, fout.fo, fout.fo + bsize, src(ip))
-          fout.fo += bsize; ip += 1
-        case 2 =>
-          if (ip + bsize > src.length) fail("truncated compressed block")
-          decodeBlock(src, ip, bsize, st, fout)
-          ip += bsize
-        case _ => fail("reserved block type")
-      }
-    }
-    if (declared >= 0 && fout.fo != declared)
-      fail(s"regenerated ${fout.fo} bytes, frame declared $declared")
-    if (checksumFlag) {
-      if (ip + 4 > src.length) fail("truncated content checksum")
-      val expect = le32(src, ip); ip += 4
-      val got = (Xxh64.hash(fout.buf, 0, fout.fo, 0L) & 0xFFFFFFFFL).toInt
-      if (got != expect)
-        fail(f"content checksum mismatch (got 0x$got%08x, want 0x$expect%08x)")
-    }
-    out.write(fout.buf, 0, fout.fo)
-    ip
-  }
-
-  // ---------------------------------------------------------- bit I/O
-
-  /** Backward bitstream (RFC 8878 §3.1.1.4): written forward, read from
-    * the last byte toward the first; the highest set bit of the final
-    * byte is a sentinel. Reads past the start return zero bits (FSE's
-    * "assume extra bits are 0" rule) and drive `bitsLeft` negative,
-    * which is the decoder's exhaustion signal.
-    */
-  private final class BackBits(buf: Array[Byte], start: Int, len: Int) {
-    private var pos: Int = {
-      if (len <= 0) fail("empty backward bitstream")
-      val lastB = buf(start + len - 1) & 0xff
-      if (lastB == 0) fail("backward bitstream missing sentinel bit")
-      len * 8 - (Integer.numberOfLeadingZeros(lastB) - 24) - 1
-    }
-
-    def bitsLeft: Int = pos
-
-    def peek(n: Int): Int = {
-      var v = 0
-      var i = pos - 1
-      val end = pos - n
-      while (i >= end) {
-        v = (v << 1) |
-          (if (i >= 0) (buf(start + (i >> 3)) >>> (i & 7)) & 1 else 0)
-        i -= 1
-      }
-      v
-    }
-
-    def consume(n: Int): Unit = pos -= n
-
-    def read(n: Int): Int = { val v = peek(n); pos -= n; v }
-
-    def readLong(n: Int): Long = {
-      var v = 0L
-      var i = pos - 1
-      val end = pos - n
-      while (i >= end) {
-        v = (v << 1) |
-          (if (i >= 0) ((buf(start + (i >> 3)) >>> (i & 7)) & 1).toLong else 0L)
-        i -= 1
-      }
-      pos -= n
-      v
-    }
-  }
-
-  /** Forward little-endian bitstream — FSE table descriptions only. */
-  private final class FwdBits(buf: Array[Byte], start: Int, end: Int) {
-    private var bitPos = 0
-
-    def read(n: Int): Int = { val v = peek(n); bitPos += n; v }
-
-    def peek(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) {
-        val i = bitPos + k
-        val byteIx = start + (i >> 3)
-        val bit = if (byteIx < end) (buf(byteIx) >>> (i & 7)) & 1 else 0
-        v |= bit << k
-        k += 1
-      }
-      v
-    }
-
-    def consume(n: Int): Unit = bitPos += n
-
-    def bytesConsumed: Int = (bitPos + 7) >> 3
-  }
-
-  // -------------------------------------------------------------- FSE
-
-  /** An FSE decoding table: `symbol(state)`, `nbBits(state)` update
-    * width, `base(state)` next-state base. accuracyLog 0 encodes an RLE
-    * "table" (single state, zero-bit updates).
-    */
-  private final class FseTable(val accuracyLog: Int, val symbol: Array[Int],
-                               val nbBits: Array[Int], val base: Array[Int])
-
-  private def rleTable(sym: Int): FseTable =
-    new FseTable(0, Array(sym), Array(0), Array(0))
-
-  /** RFC 8878 §4.1.1 normalized-count reader. Returns (counts over
-    * 0..maxSymbol, accuracyLog, bytesConsumed). Counts are probabilities
-    * in [-1, 2^AL]; -1 is the "less than 1" low-probability mark.
-    */
-  private def readNCount(src: Array[Byte], start: Int, end: Int,
-                         maxSymbol: Int, maxAccuracy: Int): (Array[Int], Int, Int) = {
-    val br = new FwdBits(src, start, end)
-    val accuracyLog = br.read(4) + 5
-    if (accuracyLog > maxAccuracy)
-      fail(s"FSE accuracy $accuracyLog exceeds max $maxAccuracy")
-    var remaining = (1 << accuracyLog) + 1
-    var threshold = 1 << accuracyLog
-    var nbBits = accuracyLog + 1
-    val norm = new Array[Int](maxSymbol + 1)
-    var charnum = 0
-    var previous0 = false
-    while (remaining > 1 && charnum <= maxSymbol) {
-      if (previous0) {
-        var rep = br.read(2)
-        while (rep == 3) {
-          charnum += 3
-          if (charnum > maxSymbol + 1) fail("FSE zero-run overruns alphabet")
-          rep = br.read(2)
-        }
-        charnum += rep
-        if (charnum > maxSymbol) {
-          if (remaining != 1) fail("FSE zero-run overruns alphabet")
-        }
-        previous0 = false
-      } else {
-        val max = (2 * threshold - 1) - remaining
-        val v = br.peek(nbBits)
-        var count =
-          if ((v & (threshold - 1)) < max) {
-            br.consume(nbBits - 1)
-            v & (threshold - 1)
-          } else {
-            br.consume(nbBits)
-            val c0 = v & (2 * threshold - 1)
-            if (c0 >= threshold) c0 - max else c0
-          }
-        count -= 1 // shift: stored value 0 means probability -1
-        remaining -= math.abs(count)
-        norm(charnum) = count
-        charnum += 1
-        previous0 = count == 0
-        while (remaining < threshold) { nbBits -= 1; threshold >>>= 1 }
-      }
-    }
-    if (remaining != 1) fail("FSE normalized counts do not sum to table size")
-    (norm, accuracyLog, br.bytesConsumed)
-  }
-
-  /** RFC 8878 §4.1.1 decoding-table construction: low-probability
-    * symbols take the table's tail cells; the rest spread with the
-    * (5/8·size + 3) step; per-cell nbBits/base from the symbol's
-    * occurrence counter.
-    */
-  private def buildFseTable(norm: Array[Int], accuracyLog: Int): FseTable = {
-    val tableSize = 1 << accuracyLog
-    val mask = tableSize - 1
-    val cellSym = new Array[Int](tableSize)
-    var highThreshold = tableSize - 1
-    var s = 0
-    while (s < norm.length) {
-      if (norm(s) == -1) { cellSym(highThreshold) = s; highThreshold -= 1 }
-      s += 1
-    }
-    val step = (tableSize >>> 1) + (tableSize >>> 3) + 3
-    var pos = 0
-    s = 0
-    while (s < norm.length) {
-      var i = 0
-      while (i < norm(s)) {
-        cellSym(pos) = s
-        pos = (pos + step) & mask
-        while (pos > highThreshold) pos = (pos + step) & mask
-        i += 1
-      }
-      s += 1
-    }
-    if (pos != 0) fail("FSE table spread did not close")
-    val next = new Array[Int](norm.length)
-    s = 0
-    while (s < norm.length) {
-      next(s) = if (norm(s) == -1) 1 else norm(s)
-      s += 1
-    }
-    val nbBits = new Array[Int](tableSize)
-    val base = new Array[Int](tableSize)
-    var u = 0
-    while (u < tableSize) {
-      val sym = cellSym(u)
-      val nextState = next(sym); next(sym) += 1
-      val nb = accuracyLog - (31 - Integer.numberOfLeadingZeros(nextState))
-      nbBits(u) = nb
-      base(u) = (nextState << nb) - tableSize
-      u += 1
-    }
-    new FseTable(accuracyLog, cellSym, nbBits, base)
-  }
-
-  // ---------------------------------------------------------- Huffman
-
-  private final class HufTable(val tableLog: Int, val symbols: Array[Byte],
-                               val lengths: Array[Int])
-
-  /** Weights → canonical decode table (RFC 8878 §4.2.1): the last
-    * weight is implied (completes the 2^(w-1) sum to a power of two);
-    * symbols of weight w occupy 2^(w-1) consecutive cells, ranked by
-    * weight then natural symbol order.
-    */
-  private def buildHufTable(weights: Array[Int]): HufTable = {
-    var total = 0L
-    var w = 0
-    while (w < weights.length) {
-      if (weights(w) > 0) total += 1L << (weights(w) - 1)
-      w += 1
-    }
-    if (total == 0) fail("huffman weights empty")
-    val tableLog = 64 - java.lang.Long.numberOfLeadingZeros(total)
-    if (tableLog > 11) fail(s"huffman tableLog $tableLog exceeds 11")
-    val rest = (1L << tableLog) - total
-    if (rest == 0 || (rest & (rest - 1)) != 0)
-      fail("huffman weights do not complete to a power of two")
-    val lastWeight = (64 - java.lang.Long.numberOfLeadingZeros(rest)).toInt
-    val all = java.util.Arrays.copyOf(weights, weights.length + 1)
-    all(weights.length) = lastWeight
-
-    val tableSize = 1 << tableLog
-    val symbols = new Array[Byte](tableSize)
-    val lengths = new Array[Int](tableSize)
-    val rankCount = new Array[Int](13)
-    var sIx = 0
-    while (sIx < all.length) { rankCount(all(sIx)) += 1; sIx += 1 }
-    val rankStart = new Array[Int](14)
-    var nextStart = 0
-    var ww = 1
-    while (ww <= 12) {
-      rankStart(ww) = nextStart
-      nextStart += rankCount(ww) << (ww - 1)
-      ww += 1
-    }
-    if (nextStart != tableSize) fail("huffman ranks do not fill the table")
-    sIx = 0
-    while (sIx < all.length) {
-      val wt = all(sIx)
-      if (wt > 0) {
-        val len = 1 << (wt - 1)
-        val from = rankStart(wt)
-        java.util.Arrays.fill(symbols, from, from + len, sIx.toByte)
-        java.util.Arrays.fill(lengths, from, from + len, tableLog + 1 - wt)
-        rankStart(wt) += len
-      }
-      sIx += 1
-    }
-    new HufTable(tableLog, symbols, lengths)
-  }
-
-  /** Huffman_Tree_Description (RFC 8878 §4.2.1.1): header < 128 → the
-    * next `header` bytes FSE-compress the weights (two interleaved
-    * states, accuracy ≤ 6, stop on bitstream exhaustion); header ≥ 128 →
-    * (header − 127) direct 4-bit weights. Returns (table, bytes
-    * consumed including the header byte).
-    */
-  private def readHufTable(src: Array[Byte], start: Int, end: Int): (HufTable, Int) = {
-    if (start >= end) fail("missing huffman description")
-    val h = src(start) & 0xff
-    if (h >= 128) {
-      val nWeights = h - 127
-      val nBytes = (nWeights + 1) / 2
-      if (start + 1 + nBytes > end) fail("truncated huffman weights")
-      val ws = new Array[Int](nWeights)
-      var i = 0
-      while (i < nWeights) {
-        val b = src(start + 1 + i / 2) & 0xff
-        ws(i) = if (i % 2 == 0) b >>> 4 else b & 15
-        if (ws(i) > 12) fail(s"huffman weight ${ws(i)} exceeds 12")
-        i += 1
-      }
-      (buildHufTable(ws), 1 + nBytes)
-    } else {
-      val compSize = h
-      if (start + 1 + compSize > end) fail("truncated huffman FSE weights")
-      val (norm, al, ncBytes) =
-        readNCount(src, start + 1, start + 1 + compSize, 255, 6)
-      val table = buildFseTable(norm, al)
-      val bitLen = compSize - ncBytes
-      if (bitLen <= 0) fail("huffman FSE weights have no bitstream")
-      val br = new BackBits(src, start + 1 + ncBytes, bitLen)
-      var s1 = br.read(al)
-      var s2 = br.read(al)
-      val ws = new Array[Int](256)
-      var n = 0
-      var done = false
-      while (!done) {
-        if (n + 2 > 255) fail("huffman weight stream too long")
-        ws(n) = table.symbol(s1); n += 1
-        if (br.bitsLeft < table.nbBits(s1)) {
-          ws(n) = table.symbol(s2); n += 1; done = true
-        } else {
-          s1 = table.base(s1) + br.read(table.nbBits(s1))
-          ws(n) = table.symbol(s2); n += 1
-          if (br.bitsLeft < table.nbBits(s2)) {
-            ws(n) = table.symbol(s1); n += 1; done = true
-          } else {
-            s2 = table.base(s2) + br.read(table.nbBits(s2))
-          }
-        }
-      }
-      var i = 0
-      while (i < n) {
-        if (ws(i) > 12) fail(s"huffman weight ${ws(i)} exceeds 12")
-        i += 1
-      }
-      (buildHufTable(java.util.Arrays.copyOf(ws, n)), 1 + compSize)
-    }
-  }
-
-  private def hufDecodeStream(src: Array[Byte], start: Int, len: Int,
-                              count: Int, tab: HufTable,
-                              out: Array[Byte], outPos: Int): Unit = {
-    val br = new BackBits(src, start, len)
-    var i = 0
-    while (i < count) {
-      val idx = br.peek(tab.tableLog)
-      out(outPos + i) = tab.symbols(idx)
-      br.consume(tab.lengths(idx))
-      i += 1
-    }
-    if (br.bitsLeft < 0) fail("huffman literal stream over-read")
-  }
-
-  // ----------------------------------------------- sequence code tables
-
-  // RFC 8878 §3.1.1.3.2.1.1 — literals-length codes
-  private val LlBase = Array(
-    0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15,
-    16, 18, 20, 22, 24, 28, 32, 40, 48, 64, 128, 256, 512, 1024, 2048,
-    4096, 8192, 16384, 32768, 65536)
-  private val LlBits = Array(
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    1, 1, 1, 1, 2, 2, 3, 3, 4, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
-
-  // §3.1.1.3.2.1.1 — match-length codes
-  private val MlBase = Array(
-    3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16, 17, 18,
-    19, 20, 21, 22, 23, 24, 25, 26, 27, 28, 29, 30, 31, 32, 33, 34,
-    35, 37, 39, 41, 43, 47, 51, 59, 67, 83, 99, 131, 259, 515, 1027,
-    2051, 4099, 8195, 16387, 32771, 65539)
-  private val MlBits = Array(
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    1, 1, 1, 1, 2, 2, 3, 3, 4, 4, 5, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
-
-  // §3.1.1.3.2.2 — predefined distributions
-  private val LlDefault = Array(
-    4, 3, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 1, 1, 1,
-    2, 2, 2, 2, 2, 2, 2, 2, 2, 3, 2, 1, 1, 1, 1, 1,
-    -1, -1, -1, -1)
-  private val MlDefault = Array(
-    1, 4, 3, 2, 2, 2, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, -1, -1, -1,
-    -1, -1, -1, -1)
-  private val OfDefault = Array(
-    1, 1, 1, 1, 1, 1, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, -1, -1, -1, -1, -1)
-
-  private lazy val LlPredef = buildFseTable(LlDefault, 6)
-  private lazy val MlPredef = buildFseTable(MlDefault, 6)
-  private lazy val OfPredef = buildFseTable(OfDefault, 5)
-
-  // ------------------------------------------------------------ blocks
-
-  /** Writable view over the frame's growable output buffer: ensure()
-    * must run before every write because it may swap the array.
-    */
-  private final class FrameOut(var buf: Array[Byte], var fo: Int,
-                               limit: Int) {
-    def ensure(extra: Int): Unit = {
-      if (fo + extra > limit) fail(
-        s"regenerated size exceeds limit $limit (bomb guard)")
-      if (fo + extra > buf.length) {
-        var cap = buf.length
-        while (cap < fo + extra) cap =
-          math.min(math.max(cap * 2, 1024), limit max (fo + extra))
-        buf = java.util.Arrays.copyOf(buf, cap)
-      }
-    }
-  }
-
-  private def decodeBlock(src: Array[Byte], start: Int, bsize: Int,
-                          st: FrameState, fout: FrameOut): Unit = {
-    var ip = start
-    val end = start + bsize
-
-    // ---- literals section ------------------------------------------
-    if (ip >= end) fail("empty compressed block")
-    val b0 = src(ip) & 0xff
-    val litType = b0 & 3
-    val sizeFormat = (b0 >>> 2) & 3
-    var literals: Array[Byte] = null
-
-    if (litType <= 1) { // Raw / RLE
-      val (regen, hdr) = sizeFormat match {
-        case 0 | 2 => (b0 >>> 3, 1)
-        case 1 =>
-          if (ip + 2 > end) fail("truncated literals header")
-          ((b0 >>> 4) | ((src(ip + 1) & 0xff) << 4), 2)
-        case _ =>
-          if (ip + 3 > end) fail("truncated literals header")
-          ((b0 >>> 4) | ((src(ip + 1) & 0xff) << 4) |
-            ((src(ip + 2) & 0xff) << 12), 3)
-      }
-      ip += hdr
-      literals = new Array[Byte](regen)
-      if (litType == 0) {
-        if (ip + regen > end) fail("truncated raw literals")
-        System.arraycopy(src, ip, literals, 0, regen)
-        ip += regen
-      } else {
-        if (ip >= end) fail("truncated rle literal")
-        java.util.Arrays.fill(literals, src(ip))
-        ip += 1
-      }
-    } else { // Compressed / Treeless
-      var regen = 0
-      var comp = 0
-      var streams = 4
-      sizeFormat match {
-        case 0 | 1 =>
-          if (ip + 3 > end) fail("truncated literals header")
-          val h = b0 | ((src(ip + 1) & 0xff) << 8) | ((src(ip + 2) & 0xff) << 16)
-          regen = (h >>> 4) & 0x3FF
-          comp = (h >>> 14) & 0x3FF
-          if (sizeFormat == 0) streams = 1
-          ip += 3
-        case 2 =>
-          if (ip + 4 > end) fail("truncated literals header")
-          val h = b0.toLong | ((src(ip + 1) & 0xffL) << 8) |
-            ((src(ip + 2) & 0xffL) << 16) | ((src(ip + 3) & 0xffL) << 24)
-          regen = ((h >>> 4) & 0x3FFF).toInt
-          comp = ((h >>> 18) & 0x3FFF).toInt
-          ip += 4
-        case _ =>
-          if (ip + 5 > end) fail("truncated literals header")
-          val h = b0.toLong | ((src(ip + 1) & 0xffL) << 8) |
-            ((src(ip + 2) & 0xffL) << 16) | ((src(ip + 3) & 0xffL) << 24) |
-            ((src(ip + 4) & 0xffL) << 32)
-          regen = ((h >>> 4) & 0x3FFFF).toInt
-          comp = ((h >>> 22) & 0x3FFFF).toInt
-          ip += 5
-      }
-      if (ip + comp > end) fail("literals overrun block")
-      var sp = ip
-      var sLen = comp
-      val table =
-        if (litType == 2) {
-          val (t, used) = readHufTable(src, sp, sp + comp)
-          st.huff = t
-          sp += used; sLen -= used
-          t
-        } else {
-          if (st.huff == null) fail("treeless literals with no prior table")
-          st.huff
-        }
-      literals = new Array[Byte](regen)
-      if (streams == 1) {
-        hufDecodeStream(src, sp, sLen, regen, table, literals, 0)
-      } else {
-        if (sLen < 6) fail("truncated 4-stream jump table")
-        val s1 = (src(sp) & 0xff) | ((src(sp + 1) & 0xff) << 8)
-        val s2 = (src(sp + 2) & 0xff) | ((src(sp + 3) & 0xff) << 8)
-        val s3 = (src(sp + 4) & 0xff) | ((src(sp + 5) & 0xff) << 8)
-        val s4 = sLen - 6 - s1 - s2 - s3
-        if (s4 <= 0) fail("bad 4-stream jump table")
-        val c13 = (regen + 3) / 4
-        val c4 = regen - 3 * c13
-        if (c4 < 0) fail("bad 4-stream literal counts")
-        var p = sp + 6
-        hufDecodeStream(src, p, s1, c13, table, literals, 0); p += s1
-        hufDecodeStream(src, p, s2, c13, table, literals, c13); p += s2
-        hufDecodeStream(src, p, s3, c13, table, literals, 2 * c13); p += s3
-        hufDecodeStream(src, p, s4, c4, table, literals, 3 * c13)
-      }
-      ip += comp
-    }
-
-    // ---- sequences section ------------------------------------------
-    if (ip >= end) fail("missing sequences section")
-    var nbSeq = 0
-    val sb0 = src(ip) & 0xff
-    if (sb0 == 0) { nbSeq = 0; ip += 1 }
-    else if (sb0 < 128) { nbSeq = sb0; ip += 1 }
-    else if (sb0 < 255) {
-      if (ip + 2 > end) fail("truncated sequence count")
-      nbSeq = ((sb0 - 128) << 8) + (src(ip + 1) & 0xff); ip += 2
-    } else {
-      if (ip + 3 > end) fail("truncated sequence count")
-      nbSeq = (src(ip + 1) & 0xff) + ((src(ip + 2) & 0xff) << 8) + 0x7F00
-      ip += 3
-    }
-
-    if (nbSeq == 0) {
-      fout.ensure(literals.length)
-      System.arraycopy(literals, 0, fout.buf, fout.fo, literals.length)
-      fout.fo += literals.length
-      return
-    }
-
-    if (ip >= end) fail("truncated compression modes")
-    val modes = src(ip) & 0xff; ip += 1
-    if ((modes & 3) != 0) fail("reserved compression-mode bits set")
-
-    def loadTable(mode: Int, predef: => FseTable, prev: FseTable,
-                  maxSym: Int, maxAL: Int,
-                  set: FseTable => Unit): FseTable = mode match {
-      case 0 => val t = predef; set(t); t
-      case 1 =>
-        if (ip >= end) fail("truncated RLE table symbol")
-        val sym = src(ip) & 0xff; ip += 1
-        if (sym > maxSym) fail(s"RLE symbol $sym exceeds alphabet $maxSym")
-        val t = rleTable(sym); set(t); t
-      case 2 =>
-        val (norm, al, used) = readNCount(src, ip, end, maxSym, maxAL)
-        ip += used
-        val t = buildFseTable(norm, al); set(t); t
-      case _ =>
-        if (prev == null) fail("repeat mode with no prior table")
-        prev
-    }
-
-    val llTab = loadTable((modes >>> 6) & 3, LlPredef, st.llTab, 35, 9,
-      st.llTab = _)
-    val ofTab = loadTable((modes >>> 4) & 3, OfPredef, st.ofTab, 31, 8,
-      st.ofTab = _)
-    val mlTab = loadTable((modes >>> 2) & 3, MlPredef, st.mlTab, 52, 9,
-      st.mlTab = _)
-
-    if (ip >= end) fail("missing sequence bitstream")
-    val br = new BackBits(src, ip, end - ip)
-    var llState = br.read(llTab.accuracyLog)
-    var ofState = br.read(ofTab.accuracyLog)
-    var mlState = br.read(mlTab.accuracyLog)
-
-    var litPos = 0
-    var seq = 0
-    while (seq < nbSeq) {
-      val ofCode = ofTab.symbol(ofState)
-      val mlCode = mlTab.symbol(mlState)
-      val llCode = llTab.symbol(llState)
-      if (ofCode > 31) fail(s"offset code $ofCode out of range")
-      if (mlCode > 52 || llCode > 35) fail("sequence code out of range")
-      val offsetValue = (1L << ofCode) + br.readLong(ofCode)
-      val ml = MlBase(mlCode) + br.read(MlBits(mlCode))
-      val ll = LlBase(llCode) + br.read(LlBits(llCode))
-      if (br.bitsLeft < 0) fail("sequence bitstream over-read")
-
-      var offset = 0L
-      if (offsetValue > 3) {
-        offset = offsetValue - 3
-        st.rep3 = st.rep2; st.rep2 = st.rep1; st.rep1 = offset
-      } else {
-        var ix = offsetValue.toInt
-        if (ll == 0) ix += 1
-        ix match {
-          case 1 => offset = st.rep1
-          case 2 =>
-            offset = st.rep2; st.rep2 = st.rep1; st.rep1 = offset
-          case 3 =>
-            offset = st.rep3; st.rep3 = st.rep2; st.rep2 = st.rep1
-            st.rep1 = offset
-          case _ =>
-            offset = st.rep1 - 1
-            if (offset <= 0) fail("repeat offset underflow")
-            st.rep3 = st.rep2; st.rep2 = st.rep1; st.rep1 = offset
-        }
-      }
-
-      if (litPos + ll > literals.length) fail("literal run overruns buffer")
-      fout.ensure(ll + ml)
-      System.arraycopy(literals, litPos, fout.buf, fout.fo, ll)
-      fout.fo += ll; litPos += ll
-      if (offset > fout.fo) fail("match offset reaches before frame start")
-      var m = 0
-      val off = offset.toInt
-      while (m < ml) { // byte-wise: overlapping matches self-extend
-        fout.buf(fout.fo) = fout.buf(fout.fo - off)
-        fout.fo += 1; m += 1
-      }
-
-      seq += 1
-      if (seq < nbSeq) {
-        llState = llTab.base(llState) + br.read(llTab.nbBits(llState))
-        mlState = mlTab.base(mlState) + br.read(mlTab.nbBits(mlState))
-        ofState = ofTab.base(ofState) + br.read(ofTab.nbBits(ofState))
-        if (br.bitsLeft < 0) fail("sequence state update over-read")
-      }
-    }
-    val rem = literals.length - litPos
-    if (rem > 0) {
-      fout.ensure(rem)
-      System.arraycopy(literals, litPos, fout.buf, fout.fo, rem)
-      fout.fo += rem
-    }
-  }
-
-  // --------------------------------------------------------------- xxh64
-
-  /** XXH64 (public one-shot variant) — zstd's content checksum is its
-    * low 32 bits.
-    */
-  private[sources] object Xxh64 {
-    private final val P1 = 0x9E3779B185EBCA87L
-    private final val P2 = 0xC2B2AE3D27D4EB4FL
-    private final val P3 = 0x165667B19E3779F9L
-    private final val P4 = 0x85EBCA77C2B2AE63L
-    private final val P5 = 0x27D4EB2F165667C5L
-
-    private def le64(d: Array[Byte], o: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 8) { v |= (d(o + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
-
-    private def le32l(d: Array[Byte], o: Int): Long =
-      (d(o) & 0xffL) | ((d(o + 1) & 0xffL) << 8) |
-        ((d(o + 2) & 0xffL) << 16) | ((d(o + 3) & 0xffL) << 24)
-
-    private def round(acc: Long, input: Long): Long =
-      java.lang.Long.rotateLeft(acc + input * P2, 31) * P1
-
-    private def merge(acc0: Long, v: Long): Long =
-      (acc0 ^ round(0L, v)) * P1 + P4
-
-    def hash(d: Array[Byte], off: Int, len: Int, seed: Long): Long = {
-      var p = off
-      val end = off + len
-      var h =
-        if (len >= 32) {
-          var v1 = seed + P1 + P2
-          var v2 = seed + P2
-          var v3 = seed
-          var v4 = seed - P1
-          while (p + 32 <= end) {
-            v1 = round(v1, le64(d, p))
-            v2 = round(v2, le64(d, p + 8))
-            v3 = round(v3, le64(d, p + 16))
-            v4 = round(v4, le64(d, p + 24))
-            p += 32
-          }
-          var acc = java.lang.Long.rotateLeft(v1, 1) +
-            java.lang.Long.rotateLeft(v2, 7) +
-            java.lang.Long.rotateLeft(v3, 12) +
-            java.lang.Long.rotateLeft(v4, 18)
-          acc = merge(acc, v1); acc = merge(acc, v2)
-          acc = merge(acc, v3); acc = merge(acc, v4)
-          acc
-        } else seed + P5
-      h += len
-      while (p + 8 <= end) {
-        h = java.lang.Long.rotateLeft(h ^ round(0L, le64(d, p)), 27) * P1 + P4
-        p += 8
-      }
-      if (p + 4 <= end) {
-        h = java.lang.Long.rotateLeft(h ^ (le32l(d, p) * P1), 23) * P2 + P3
-        p += 4
-      }
-      while (p < end) {
-        h = java.lang.Long.rotateLeft(h ^ ((d(p) & 0xffL) * P5), 11) * P1
-        p += 1
-      }
-      h ^= h >>> 33
-      h *= P2
-      h ^= h >>> 29
-      h *= P3
-      h ^= h >>> 32
-      h
-    }
-  }
 }

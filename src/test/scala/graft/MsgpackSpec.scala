@@ -94,7 +94,7 @@ class MsgpackSpec extends AnyFunSuite {
     val txt = fixarr(fixstr("t"), bin8(packed),
       fixmap(fixstr("compressed") -> fixstr("text")))
     assert(forwardEvents(decode(txt, 0)._1).map(_.sec) == Seq(3L, 4L))
-    // zstd-compressed chunk: the magic routes to the RFC 8878 decoder
+    // zstd-compressed chunk: the magic routes to the zstd codec
     // regardless of the option map (fw_prot.c zstd acceptance)
     val zstBytes = {
       val in = getClass.getResourceAsStream("/zstd/fw_packed.zst")

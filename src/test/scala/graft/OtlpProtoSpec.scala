@@ -342,7 +342,7 @@ class OtlpProtoSpec extends AnyFunSuite {
     val g = new java.util.zip.GZIPOutputStream(bos)
     g.write(big); g.close()
     intercept[IllegalArgumentException] {
-      OtlpProto.gunzip(bos.toByteArray, maxBytes = 1024 * 1024)
+      graft.sources.Msgpack.gunzip(bos.toByteArray, 1024 * 1024)
     }
   }
 

@@ -266,6 +266,26 @@ class YamlSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Yaml.parse("a: \"trunc\\u00\"\n"))
   }
 
+  test("parse: anchors, aliases, non-string tags, complex keys and extra documents raise") {
+    for (doc <- Seq("a: &x 1\nb: *x", "a: !!int 5", "a: !custom v", "? [a, b]\n: v",
+                    "a: 1\n---\nb: 2"))
+      intercept[IllegalArgumentException](Yaml.parse(doc))
+  }
+
+  test("parse: a multi-line quoted scalar folds its line break like libyaml") {
+    assert(Yaml.parse("x: \"multi\n  line\"").str("x").contains("multi line"))
+  }
+
+  test("parse: booleans, octals and nulls stay the strings they were written as") {
+    val m = Yaml.parse("a: on\nb: 010\nc: ~\n")
+    assert(m.entries == Vector("a" -> YStr("on"), "b" -> YStr("010"), "c" -> YStr("~")))
+  }
+
+  test("parse: an empty or comment-only document is an empty mapping") {
+    for (doc <- Seq("", "# only a comment\n", "---\n"))
+      assert(Yaml.parse(doc) == YMap(Vector.empty))
+  }
+
   // -------------------------------------------------------- translation
 
   test("load: sections, env, service, multiline parsers, stream tasks") {

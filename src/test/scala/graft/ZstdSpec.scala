@@ -3,14 +3,14 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Zstd
 
-/** RFC 8878 decoder against reference-encoder fixtures: every .zst in
-  * test resources was produced by the zstandard CLI (v1.5.7) from the
-  * sibling .bin, across levels 1/3/19 — covering raw, RLE and
-  * compressed blocks, 1- and 4-stream Huffman literals (direct and
-  * FSE-described weights), predefined/FSE/repeat sequence tables, and
-  * repeat offsets. Level-default frames carry XXH64 content checksums
-  * (verified by the decoder); the `.l1nc` variants were written with
-  * --no-check.
+/** The zstd codec (libzstd through zstd-jni) against reference-encoder
+  * fixtures: every .zst in test resources was produced by the zstandard
+  * CLI (v1.5.7) from the sibling .bin, across levels 1/3/19 — covering
+  * raw, RLE and compressed blocks, 1- and 4-stream Huffman literals
+  * (direct and FSE-described weights), predefined/FSE/repeat sequence
+  * tables, and repeat offsets. Level-default frames carry XXH64 content
+  * checksums (verified by the decoder); the `.l1nc` variants were
+  * written with --no-check.
   */
 class ZstdSpec extends AnyFunSuite {
 
@@ -60,7 +60,7 @@ class ZstdSpec extends AnyFunSuite {
 
   test("hostile input: bomb guard trips on the declared size") {
     // rep.bin is 22.2 KB from an 85-byte frame; a 1 KB limit must fail
-    // before allocating the output
+    // instead of returning it
     val e = intercept[IllegalArgumentException] {
       Zstd.decompress(res("rep.l3.zst"), 1024)
     }
