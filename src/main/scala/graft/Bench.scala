@@ -83,6 +83,9 @@ object Bench {
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // streaming twins checkpoint through the fork-free store whatever the
+    // query order, not only after a config gate has installed it
+    graft.streaming.LocalCheckpointFiles.install(spark)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       onlyMatches(n)
     }

@@ -53,6 +53,9 @@ object Verify {
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // streaming twins checkpoint through the fork-free store whatever the
+    // query order, not only after a config gate has installed it
+    graft.streaming.LocalCheckpointFiles.install(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -269,15 +269,14 @@ object ClassicConfig {
     * Match and union the halves back.
     *
     * A record whose tag is NULL matches no pattern and is dropped,
-    * uncounted, by every filter but rewrite_tag; under Match `*` so is
-    * one whose tag `^.*$` does not match.
+    * uncounted, by every filter but rewrite_tag.
     */
   private def applyFilter(df: DataFrame, s: Section,
                           parsers: Map[String, Section],
                           mlParsers: Map[String, Seq[graft.streaming.Multiline.Rule]] = Map.empty): DataFrame = {
     val pat = s.get("match").getOrElse("*")
     val cond = Router.tagMatch(col("tag"), pat)
-    val admitted = if (pat == "*") cond else col("tag").isNotNull
+    val admitted = col("tag").isNotNull // Match `*` is exactly this test
     lazy val matched = df.filter(cond)
     def rejoin(out: DataFrame): DataFrame =
       if (pat == "*") out else out.unionByName(df.filter(!cond), allowMissingColumns = true)
@@ -386,11 +385,11 @@ object ClassicConfig {
         // (filter_parser returns FLB_FILTER_NOTOUCH on failure); only
         // successful parses get the reserve/preserve projection. The
         // routing tag is always kept — parsing never re-tags.
-        // the match gets its own column so the text is matched once a
-        // record: inside each group's `when` it would be matched per group
+        // the match gets its own column, computed once a record and only
+        // for records Match admits: inside each group's `when`, or inlined
+        // into a later grep's filter, it would run once per reference
         val hit = col("__parsed")
-        val withHit = df.withColumn("__parsed",
-          graft.parse.Parsers.regexMatch(col(keyName), pattern))
+        val withHit = graft.parse.Parsers.matchOnce(df, col(keyName), pattern, "__parsed", cond)
         val groups = graft.parse.Parsers.regexColumns(hit, pattern)
         val parsed = groups.foldLeft(in) { case (f, (n, v)) => f.set(n, v) }
         val projected =

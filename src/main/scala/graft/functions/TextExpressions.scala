@@ -1135,11 +1135,18 @@ object RegexGroups {
   def compute(p: java.util.regex.Pattern, s: UTF8String, groups: Array[Int]): ArrayData = {
     val m = p.matcher(s.toString)
     if (!m.find()) return null
+    // an ASCII line's char offsets are its byte offsets: a group is a copy
+    // of its bytes, not a String decoded and encoded back
+    val ascii = s.isFullAscii
     val out = new Array[Any](groups.length)
     var i = 0
     while (i < groups.length) {
-      val v = m.group(groups(i))
-      out(i) = UTF8String.fromString(if (v == null) "" else v)
+      val g = groups(i)
+      val start = m.start(g)
+      out(i) =
+        if (start < 0) UTF8String.EMPTY_UTF8
+        else if (ascii) s.copyUTF8String(start, m.end(g) - 1)
+        else UTF8String.fromString(m.group(g))
       i += 1
     }
     new GenericArrayData(out)

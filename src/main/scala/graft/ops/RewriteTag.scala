@@ -54,6 +54,11 @@ object RewriteTag {
     * Records still matching after `maxHops` are emitted as-is — the
     * bounded analogue of the reference's emitter backlog.
     *
+    * Only the records the previous hop re-tagged are tested again, as
+    * only re-emitted records re-enter the reference's flow: a record no
+    * rule matched keeps its tag and fields, so it would not match the
+    * next hop either.
+    *
     * The `explode` also keeps an output's route filter on the tag above
     * the hops: pushed through them, Catalyst would inline every hop's tag
     * expression into the filter, doubling the rule regexes per hop.
@@ -63,27 +68,30 @@ object RewriteTag {
     require(rules.nonEmpty, "reinjectLoop needs at least one rule")
     val matches = rules.map(r =>
       coalesce(r.gate, lit(false)) && coalesce(r.field.rlike(r.pattern), lit(false)))
-    val anyMatch = matches.reduce(_ || _)
-    // First-match-wins when-chains: rule i applies iff no earlier matched.
-    val newTag = rules.zip(matches).foldRight(col(tagCol)) {
-      case ((r, m), els) => when(m, r.newTagTemplate).otherwise(els)
-    }
-    val keepOriginal = rules.zip(matches).foldRight(lit(false)) {
-      case ((r, m), els) => when(m, lit(r.keep)).otherwise(els)
-    }
-    // the tags a record's kept originals settle under, hop by hop
+    // the tags a record's kept originals settle under, hop by hop, and
+    // whether the last hop re-tagged it
     val kept = "__rewrite_tag_kept"
-    val start = df.withColumn(kept,
-      array().cast(ArrayType(df.schema(tagCol).dataType)))
+    val live = "__rewrite_tag_live"
+    val hit = col(live) && matches.reduce(_ || _)
+    // First-match-wins when-chains, read only where `hit` holds: rule i
+    // applies iff no earlier matched, so the last needs no test.
+    def firstMatch(of: Rule => Column): Column =
+      rules.zip(matches).init.foldRight(of(rules.last)) {
+        case ((r, m), els) => when(m, of(r)).otherwise(els)
+      }
+    val start = df
+      .withColumn(kept, array().cast(ArrayType(df.schema(tagCol).dataType)))
+      .withColumn(live, lit(true))
     val hopped = (1 to maxHops).foldLeft(start) { (d, _) =>
       d.select(d.columns.toSeq.map {
-        case `tagCol` => when(anyMatch, newTag).otherwise(col(tagCol)).as(tagCol)
-        case `kept` => when(anyMatch && keepOriginal,
+        case `tagCol` => when(hit, firstMatch(_.newTagTemplate)).otherwise(col(tagCol)).as(tagCol)
+        case `kept` => when(hit && firstMatch(r => lit(r.keep)),
           concat(col(kept), array(col(tagCol)))).otherwise(col(kept)).as(kept)
+        case `live` => hit.as(live)
         case c => col(c)
       }: _*)
     }
     hopped.withColumn(tagCol, explode(concat(col(kept), array(col(tagCol)))))
-      .drop(kept)
+      .drop(kept, live)
   }
 }

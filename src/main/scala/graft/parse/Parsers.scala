@@ -60,10 +60,13 @@ object Parsers {
     * in the caller (filter_parser semantics, filter_parser.c:174).
     */
   def regex(df: DataFrame, source: Column, pattern: String,
-            types: Map[String, String] = Map.empty): DataFrame =
-    regexColumns(regexMatch(source, pattern), pattern, types).foldLeft(df) {
-      case (d, (name, v)) => d.withColumn(name, v)
-    }
+            types: Map[String, String] = Map.empty): DataFrame = {
+    val matched = "__parsed"
+    regexColumns(col(matched), pattern, types)
+      .foldLeft(matchOnce(df, source, pattern, matched)) {
+        case (d, (name, v)) => d.withColumn(name, v)
+      }.drop(matched)
+  }
 
   /** One match of `pattern` against `source`: each named group's text,
     * in group order, or NULL when the pattern does not match. The text is
@@ -73,6 +76,17 @@ object Parsers {
     val idx = groupIndexes(pattern)
     graft.functions.TextFunctions.regexGroups(source, pattern, groupNames(pattern).map(idx))
   }
+
+  /** `df` plus `as`, the [[regexMatch]] of `source` on the records `gate`
+    * holds for (NULL on the others), computed once a record. The match
+    * sits under a one-element `explode`, which predicate pushdown cannot
+    * inline through: a filter on a parsed field stays above it instead
+    * of re-running the match once per reference (`FilterExec` has no
+    * subexpression elimination).
+    */
+  def matchOnce(df: DataFrame, source: Column, pattern: String, as: String,
+                gate: Column = lit(true)): DataFrame =
+    df.withColumn(as, explode(array(when(gate, regexMatch(source, pattern)))))
 
   /** The named groups of `matched`, a [[regexMatch]] of `pattern`, as
     * (name, value) expressions in group order; NULL where it is NULL.

@@ -7,9 +7,12 @@ import org.apache.spark.sql.functions._
   *
   * fluent-bit matches chunk tags against output `Match` patterns with `*`
   * wildcards (recursive matcher, `src/flb_router.c:38-137`) or full regex
-  * when the pattern is wrapped in slashes. We compile the wildcard pattern
-  * once, at plan build time, into an anchored regex evaluated by Spark's
-  * codegen'd `RLike` — no per-row interpretation, pushdown-friendly.
+  * when the pattern is wrapped in slashes. A wildcard pattern becomes, at
+  * plan build time, the string test it amounts to: `*` a null check,
+  * `prefix*` a `StartsWith`, `*suffix` an `EndsWith`, `*infix*` a
+  * `Contains`, a pattern without `*` an equality, and any other an
+  * escaped `LIKE`. None runs java.util.regex, and like the reference's
+  * matcher, `*` matches line terminators too.
   */
 object Router {
 
@@ -32,7 +35,23 @@ object Router {
   def tagMatch(tag: Column, pattern: String): Column =
     if (pattern.length > 1 && pattern.startsWith("/") && pattern.endsWith("/"))
       tag.rlike(pattern.substring(1, pattern.length - 1))
-    else tag.rlike(wildcardToRegex(pattern))
+    else pattern.split("\\*+", -1) match {
+      case Array(exact) => tag === exact
+      case Array("", "") => tag.isNotNull
+      case Array(prefix, "") => tag.startsWith(prefix)
+      case Array("", suffix) => tag.endsWith(suffix)
+      case Array("", infix, "") => tag.contains(infix)
+      case _ => tag.like(wildcardToLike(pattern))
+    }
+
+  /** A wildcard pattern as a `LIKE` pattern: `*` is `%`, and `%`, `_` and
+    * the escape character `\` match themselves.
+    */
+  private def wildcardToLike(pattern: String): String = pattern.flatMap {
+    case '*' => "%"
+    case c @ ('%' | '_' | '\\') => "\\" + c
+    case c => c.toString
+  }
 
   /** `$TAG[n]` — nth dot-separated tag part (record accessor §2.7). */
   def tagPart(tag: Column, n: Int): Column =

@@ -419,4 +419,64 @@ class ConfigSpec extends AnyFunSuite {
     }
     assert(counts == Seq(2L, 2L, 2L, 2L, 2L, 2L, 3L))
   }
+
+  test("rewrite_tag two-rule chain: a hop-1 tag matches the second rule at hop 2") {
+    // rule 1 re-tags app.web (keeping the original) to stage.web; only
+    // that re-emitted copy meets rule 2 on the next hop. The sys input
+    // starts under a tag only rule 2 matches.
+    val web = Seq(("error", 1L), ("info", 2L)).toDF("level", "id")
+    val sys = Seq(("error", 3L)).toDF("level", "id")
+      .withColumn("tag", lit("stage.sys"))
+    val outs = webAndSys(web, sys,
+      """[FILTER]
+        |    name  rewrite_tag
+        |    match *
+        |    rule  $tag ^app\.(web)$ stage.$1 true
+        |    rule  $tag ^stage\.(.*)$ done.$1 false""".stripMargin,
+      """[OUTPUT]
+        |    name   file
+        |    match  done.*
+        |    format json""".stripMargin)
+    assert(tagged(outs, "file:*") == Seq(
+      "app.web {\"level\":\"error\",\"id\":1}",
+      "app.web {\"level\":\"info\",\"id\":2}",
+      "done.sys {\"level\":\"error\",\"id\":3}",
+      "done.web {\"level\":\"error\",\"id\":1}",
+      "done.web {\"level\":\"info\",\"id\":2}"))
+    assert(tagged(outs, "file:done.*") == Seq(
+      "done.sys {\"level\":\"error\",\"id\":3}",
+      "done.web {\"level\":\"error\",\"id\":1}",
+      "done.web {\"level\":\"info\",\"id\":2}"))
+  }
+
+  test("parse then grep over non-ASCII lines; an optional group that did not match reads \"\"") {
+    val web = Seq(("GET /naïve/日本 ok", 1L), ("GET /a", 2L), ("PUT /ü 🙂", 3L),
+      ("GET /healthz 😀", 4L), ("DELETE /b", 5L), ("ÄÖ not an access line", 6L),
+      ("GET /x 日本", 8L))
+      .toDF("log", "id")
+    val sys = Seq(("GET /c é", 7L)).toDF("log", "id")
+    val outs = webAndSys(web, sys,
+      """[PARSER]
+        |    name   access
+        |    format regex
+        |    regex  ^(?<method>[A-Z]+) (?<path>\S+)(?: (?<note>.+))?$
+        |[FILTER]
+        |    name         parser
+        |    match        app.*
+        |    key_name     log
+        |    parser       access
+        |    reserve_data on
+        |[FILTER]
+        |    name    grep
+        |    match   app.*
+        |    exclude path ^/healthz
+        |    exclude note ^日本$""".stripMargin)
+    assert(tagged(outs, "file:*") == Seq(
+      "app.web {\"id\":1,\"method\":\"GET\",\"path\":\"/naïve/日本\",\"note\":\"ok\"}",
+      "app.web {\"id\":2,\"method\":\"GET\",\"path\":\"/a\",\"note\":\"\"}",
+      "app.web {\"id\":3,\"method\":\"PUT\",\"path\":\"/ü\",\"note\":\"🙂\"}",
+      "app.web {\"id\":5,\"method\":\"DELETE\",\"path\":\"/b\",\"note\":\"\"}",
+      "app.web {\"id\":6,\"log\":\"ÄÖ not an access line\"}",
+      "sys.log {\"id\":7,\"log\":\"GET /c é\"}"))
+  }
 }

@@ -589,10 +589,11 @@ class PlanSpec extends AnyFunSuite {
      write("app.log", "started", "ready"))
   }
 
-  test("config filter chain: one scan leaf per [INPUT] in every output's plan") {
+  /** The access chain's outputs, assembled from the config frontend. */
+  private def accessChain(): Map[String, org.apache.spark.sql.DataFrame] = {
     import graft.config.ClassicConfig
     val (access, app) = accessInputs()
-    val outs = ClassicConfig.assemble(spark,
+    ClassicConfig.assemble(spark,
       s"""[INPUT]
          |    name tail
          |    path $access
@@ -632,6 +633,10 @@ class PlanSpec extends AnyFunSuite {
          |    match  err.*
          |    labels job=fluentbit,code=$$code
          |""".stripMargin)
+  }
+
+  test("config filter chain: one scan leaf per [INPUT] in every output's plan") {
+    val outs = accessChain()
     assert(outs.keySet == Set("file:*", "loki:err.*"))
     outs.foreach { case (id, df) =>
       val leaves = df.queryExecution.analyzed.collectLeaves()
@@ -641,6 +646,47 @@ class PlanSpec extends AnyFunSuite {
     }
     val tags = outs("file:*").select("tag").collect().map(_.getString(0)).sorted
     assert(tags.toSeq == Seq("app.log", "app.log", "err.502", "web.access"))
+  }
+
+  test("config filter chain: one Apache match per output, gated by Match, no filter on it") {
+    import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Expression, Literal, StartsWith}
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    import graft.functions.RegexGroups
+    def matches(e: Expression): Int = e.collect { case _: RegexGroups => 1 }.size
+    accessChain().foreach { case (id, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      val holders = plan.collect { case n if n.expressions.exists(matches(_) > 0) => n }
+      assert(holders.map(_.expressions.map(matches).sum) == Seq(1),
+        s"$id: regex_groups outside one node\n$plan")
+      // the match is the generator's, so no filter holds it: pushdown
+      // would inline one match per reference into the grep's filter
+      val gen = holders.head
+      assert(gen.isInstanceOf[Generate], s"$id: match in ${gen.nodeName}\n$plan")
+      // app.log records fail the gate, so they never run the match
+      val gates = gen.expressions.flatMap(_.collect {
+        case CaseWhen(Seq((StartsWith(_, Literal(p, _)), v)), _) if matches(v) > 0 => p.toString
+      })
+      assert(gates == Seq("web."), s"$id: match not gated by Match web.*\n$plan")
+    }
+  }
+
+  test("wildcard routes run no regex: Match * is a null check, prefix.* a StartsWith") {
+    import org.apache.spark.sql.catalyst.expressions.{IsNotNull, Like, RLike, StartsWith}
+    accessChain().foreach { case (id, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      val onTag = plan.flatMap(_.expressions.flatMap(_.collect {
+        case e @ (_: RLike | _: Like) if e.references.exists(_.name == "tag") => e
+      }))
+      assert(onTag.isEmpty, s"$id: $onTag")
+    }
+    import org.apache.spark.sql.functions.col
+    import graft.route.Router
+    def expr(pattern: String) = spark.range(1).selectExpr("'a.b' AS tag")
+      .filter(Router.tagMatch(col("tag"), pattern)).queryExecution.analyzed
+      .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }.get
+    assert(expr("*").isInstanceOf[IsNotNull])
+    assert(expr("web.*").isInstanceOf[StartsWith])
+    assert(expr("/^web.*/").isInstanceOf[RLike])
   }
 
   test("rewrite_tag hops add a fixed number of regexes to the optimized plan") {
@@ -672,5 +718,9 @@ class PlanSpec extends AnyFunSuite {
     val step = counts(1) - counts(0)
     assert(counts.zipWithIndex.forall { case (c, i) => c == counts(0) + i * step },
       s"not linear in hops: $counts")
+    // a hop holds the rule's RLIKE twice (in the new tag's condition and
+    // the re-test flag, one common subexpression at run time) and its
+    // capture once; the Match gate is a StartsWith
+    assert(step == 3, s"regexes per hop: $counts")
   }
 }

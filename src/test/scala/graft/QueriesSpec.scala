@@ -87,4 +87,46 @@ class RouterSpec extends AnyFunSuite {
     assert(matched("app") == Set("app"))
     assert(matched("/^app$/") == Set("app"))
   }
+
+  test("property: tagMatch == a recursive wildcard matcher, NULL tags match nothing") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import org.apache.spark.sql.functions.col
+    import TestSpark._
+    import spark.implicits._
+    // flb_router.c's router_match: `*` takes any run of characters,
+    // line terminators included; every other character is itself
+    def model(tag: String, p: String): Boolean =
+      if (p.isEmpty) tag.isEmpty
+      else if (p.head == '*') (0 to tag.length).exists(i => model(tag.substring(i), p.tail))
+      else tag.nonEmpty && tag.head == p.head && model(tag.tail, p.tail)
+    val token = Gen.oneOf("a", "b", ".", "_", "%", "\\", "[", "]", "é", "日", "😀", "\n", "\r")
+    val tagGen = Gen.choose(0, 6).flatMap(Gen.listOfN(_, token)).map(_.mkString)
+    // half the patterns are a tag with spans replaced by `*`, so they
+    // match often; the other half are random
+    val sometimes = Gen.frequency(3 -> false, 1 -> true)
+    val derived = for {
+      t <- Gen.choose(0, 6).flatMap(Gen.listOfN(_, token))
+      edits <- Gen.listOfN(t.length, Gen.zip(sometimes, sometimes))
+      last <- Gen.oneOf("", "", "", "*")
+    } yield t.zip(edits).map { case (tok, (star, drop)) =>
+      (if (star) "*" else "") + (if (drop) "" else tok)
+    }.mkString + last
+    val random = Gen.choose(0, 5).flatMap(Gen.listOfN(_, Gen.frequency(4 -> token, 1 -> Gen.const("*"))))
+      .map(_.mkString)
+    def sample[T](g: Gen[T], n: Int, seed: Long): Seq[T] =
+      Gen.listOfN(n, g).apply(Gen.Parameters.default, Seed(seed)).get
+    val tags = (sample(tagGen, 80, 11L) ++ sample(derived, 40, 12L)).distinct
+    val patterns = (sample(derived, 150, 13L) ++ sample(random, 150, 14L) ++ Seq("*", "**", ""))
+      .distinct
+    val df = (tags.map(Option(_)) :+ None).toDF("tag")
+    patterns.grouped(50).foreach { batch =>
+      val rows = df.select(col("tag") +: batch.map(p => Router.tagMatch(col("tag"), p)): _*).collect()
+      for (r <- rows; (p, i) <- batch.zipWithIndex) {
+        val tag = Option(r.getString(0))
+        val got = !r.isNullAt(i + 1) && r.getBoolean(i + 1)
+        assert(got == tag.exists(model(_, p)), s"tag ${tag.map(_.map(_.toInt))} pattern ${p.map(_.toInt)}")
+      }
+    }
+  }
 }
