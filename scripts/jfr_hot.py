@@ -12,11 +12,13 @@ Scala library.
 A sample's bucket is decided by its innermost frame that one of these
 rules claims, walking outward from the sampled frame:
 
-  regex_groups    graft.functions.RegexGroups, or java.util.regex called
-                  from it (the regex parser's one match per record)
+  regex_groups    graft.functions.RegexGroups and its byte scanner
+                  graft.functions.RegexScanner, or java.util.regex called
+                  from them (the regex parser's one match per record)
   other regex     any other java.util.regex caller (RLIKE, regexp_extract,
                   regexp_replace, grep rules, rewrite_tag rules)
-  json            Spark's JSON generator and parser, Jackson
+  json            Spark's JSON generator and parser, Jackson, and the
+                  byte writer of string-only JSON lines (graft.functions.JsonLine*)
   scan            reading input files (FileScanRDD, Hadoop line readers)
   write           writing output files (Spark's file writers, Hadoop's
                   output streams, the commit protocol)
@@ -43,6 +45,7 @@ EXECUTOR = "Executor task launch worker"
 # (bucket, name prefixes or substrings), tried in order on each frame
 RULES = [
     ("json", ("org.apache.spark.sql.catalyst.json.", "com.fasterxml.jackson.",
+              "org.apache.spark.sql.catalyst.expressions.json.", "graft.functions.JsonLine",
               "org.apache.spark.sql.catalyst.expressions.StructsToJson",
               "org.apache.spark.sql.catalyst.expressions.JsonToStructs")),
     ("scan", ("org.apache.spark.sql.execution.datasources.FileScanRDD",
@@ -84,14 +87,17 @@ def frames(event):
             for f in stack.get("frames", [])]
 
 
+PARSER = ("graft.functions.RegexGroups", "graft.functions.RegexScanner")
+
+
 def bucket(names):
     """The bucket of a stack given innermost frame first."""
     for i, name in enumerate(names):
-        if name.startswith("graft.functions.RegexGroups"):
+        if name.startswith(PARSER):
             return "regex_groups"
         if name.startswith("java.util.regex."):
             caller = next((n for n in names[i:] if not n.startswith("java.util.regex.")), "")
-            return "regex_groups" if caller.startswith("graft.functions.RegexGroups") else "other regex"
+            return "regex_groups" if caller.startswith(PARSER) else "other regex"
         for b, keys in RULES:
             if any(name.startswith(k) for k in keys):
                 return b

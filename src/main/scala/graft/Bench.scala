@@ -113,7 +113,9 @@ object Bench {
     // against DuckDB (which always materializes the result set) the
     // hash action forces the full computation on both sides.
     val action = sys.env.getOrElse("SPARK_GRAFT_ACTION", "count")
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // A row that throws reads -1 here; it is reported as failed and kept
+    // out of every total and of bench_full.json.
+    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try {
         val df = fn(spark, sfDir)
@@ -125,7 +127,10 @@ object Bench {
           // summing 64-bit hashes overflows under ANSI mode.
           df.select(bit_xor(xxhash64(struct(df.columns.map(col): _*)))).collect()
         } else df.count()
-      } catch { case _: Throwable => return -1.0 }
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
     // The planted-graph fixture cache interacts with median timing: only
@@ -143,7 +148,8 @@ object Bench {
         try {
           graft.graph.GraphFixtures.buildAll(spark, sfDir)
           Seq("x_graph_fixture_build" -> (System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable =>
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] x_graph_fixture_build failed: $e")
           Seq("x_graph_fixture_build" -> -1.0)
         }
       } else Seq.empty
@@ -196,10 +202,10 @@ object Bench {
     // collect the previous query's garbage so pauses bill to their
     // owner; quick queries (<1 s first run) also get extra runs so one
     // stray pause can't own the median.
-    val results = fixtureRow ++ selected.map { case (name, fn) =>
+    val timed = fixtureRow ++ selected.map { case (name, fn) =>
       System.gc()
-      val first = timeOnce(fn)
-      val extra = if (first >= 0 && first < 1.0) (runs + 2) else (runs - 1)
+      val first = timeOnce(name, fn)
+      val extra = if (first < 0) 0 else if (first < 1.0) (runs + 2) else (runs - 1)
       // 1-5s tier: a predecessor's GC pause is a visible fraction of the
       // measurement but the run count is small, so one pause can own the
       // median — collect before EVERY run, not just the first (the r7
@@ -209,9 +215,9 @@ object Bench {
       val midTier = first >= 1.0 && first < 5.0
       val times = (first +: (1 to extra).map { _ =>
         if (midTier) System.gc()
-        timeOnce(fn)
+        timeOnce(name, fn)
       }).sorted
-      val med = times(times.size / 2)
+      val med = if (times.head < 0) -1.0 else times(times.size / 2)
       val retried =
         // pins are COUNT-action medians; a hash-action run does strictly
         // more work per query, so comparing it against them would burn
@@ -224,9 +230,9 @@ object Bench {
             " - one storm-retry window")
           System.gc()
           val t2 = (0 until math.max(runs, 3)).map { _ =>
-            System.gc(); timeOnce(fn)
+            System.gc(); timeOnce(name, fn)
           }.sorted
-          math.min(med, t2(t2.size / 2))
+          if (t2.head < 0) -1.0 else math.min(med, t2(t2.size / 2))
         } else med
       // Annotation is broader than the retry gate: a >2x reading with
       // >1 s absolute excess (the retry class) OR a >4x relative blowup
@@ -239,6 +245,8 @@ object Bench {
         stormRows += name
       name -> retried
     }
+    val failedRows = timed.collect { case (n, t) if t < 0 => n }
+    val results = timed.filter(_._2 >= 0)
     // Locale-pinned: the default-locale f"%.3f" emits "1,234" under
     // comma-decimal locales, which would make both JSON outputs unparseable.
     def r3(v: Double): String =
@@ -316,7 +324,8 @@ object Bench {
         val names = stormRows.take(5).map("\"" + _ + "\"").mkString(",")
         s""","n_storms":${stormRows.size},"storms":[$names]"""
       }
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$runs,"n_queries":${results.size},"load1":${r3(load1)},"queries":$qs,"groups":${jmap(family)},"sf":"$sfDir","cpus":$cpus$stormJson}"""
+    val failedJson = failedRows.map("\"" + _ + "\"").mkString(s""","failed":${failedRows.size},"failed_rows":[""", ",", "]")
+    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","runs":$runs,"n_queries":${results.size}$failedJson,"load1":${r3(load1)},"queries":$qs,"groups":${jmap(family)},"sf":"$sfDir","cpus":$cpus$stormJson}"""
     println(line)
     // The driver captures stdout through sbt, which prefixes every line
     // with "[info] " — its JSON parse has failed every round (BENCH_r*:

@@ -1103,24 +1103,33 @@ object HtmlUnescape {
   * Semantics per group match `regexp_extract(s, pattern, g)` after a
   * successful `rlike(s, pattern)` (first `find()`; a group that did not
   * take part reads ""); NULL when the pattern does not match.
+  *
+  * A pattern in [[RegexScanner]]'s subset is matched over the line's
+  * bytes in place; any other pattern, and any line the scanner cannot
+  * match exactly, goes through `java.util.regex`.
   */
 case class RegexGroups(child: Expression, pattern: String, groups: Seq[Int])
     extends UnaryExpression {
   @transient private lazy val compiled = java.util.regex.Pattern.compile(pattern)
+
+  /** The byte scanner for `pattern`, or null outside its subset; built
+    * once, on first use, after `java.util.regex` has accepted the pattern.
+    */
+  @transient lazy val scanner: RegexScanner = { compiled; RegexScanner.compile(pattern).orNull }
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   override def nullable: Boolean = true
 
   override def nullSafeEval(input: Any): Any =
-    RegexGroups.compute(compiled, input.asInstanceOf[UTF8String], groups.toArray)
+    RegexGroups.compute(scanner, compiled, input.asInstanceOf[UTF8String], groups.toArray)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val p = ctx.addReferenceObj("pattern", java.util.regex.Pattern.compile(pattern),
-      "java.util.regex.Pattern")
+    val p = ctx.addReferenceObj("pattern", compiled, "java.util.regex.Pattern")
+    val sc = ctx.addReferenceObj("scanner", scanner, classOf[RegexScanner].getName)
     val g = ctx.addReferenceObj("groups", groups.toArray, "int[]")
     nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.RegexGroups.compute($p, $c, $g);
+      s"""${ev.value} = graft.functions.RegexGroups.compute($sc, $p, $c, $g);
          |${ev.isNull} = ${ev.value} == null;""".stripMargin)
   }
 
@@ -1131,8 +1140,13 @@ case class RegexGroups(child: Expression, pattern: String, groups: Seq[Int])
 }
 
 object RegexGroups {
-  /** Static entry shared by eval and generated code. */
-  def compute(p: java.util.regex.Pattern, s: UTF8String, groups: Array[Int]): ArrayData = {
+  /** Static entry shared by eval and generated code; `scanner` may be null. */
+  def compute(scanner: RegexScanner, p: java.util.regex.Pattern, s: UTF8String,
+              groups: Array[Int]): ArrayData = {
+    if (scanner != null) {
+      val r = scanner.groups(s, groups)
+      if (r ne RegexScanner.Fallback) return r
+    }
     val m = p.matcher(s.toString)
     if (!m.find()) return null
     // an ASCII line's char offsets are its byte offsets: a group is a copy

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * config :220-236): keep records whose field matches `regex` rules, drop
   * those matching `exclude` rules, combined with AND/OR.
   *
-  * Spark-first: each rule compiles to a codegen'd `RLike` predicate; the
+  * Spark-first: each rule compiles to a codegen'd `RLike` predicate, or
+  * to `StartsWith`/`Contains` when the regex is a plain literal; the
   * whole filter is one Catalyst `Filter` node, so it pushes down/fuses
   * with adjacent operators — no per-row interpreter.
   */
@@ -19,9 +20,28 @@ object Grep {
       * absent record-accessor path fails the rule.
       */
     def satisfied: Column =
-      if (exclude) !coalesce(field.rlike(pattern), lit(false))
-      else coalesce(field.rlike(pattern), lit(false))
+      if (exclude) !coalesce(matches, lit(false))
+      else coalesce(matches, lit(false))
+
+    /** `field RLIKE pattern`, or the string test it amounts to: `^` and a
+      * literal is a `StartsWith`, a bare literal a `Contains`.
+      */
+    private def matches: Column = {
+      val anchored = pattern.startsWith("^")
+      val text = if (anchored) pattern.substring(1) else pattern
+      if (!text.forall(Grep.literal)) field.rlike(pattern)
+      else if (anchored) field.startsWith(text)
+      else field.contains(text)
+    }
   }
+
+  /** A character that matches only itself in a regex, and in the UTF-8
+    * bytes of any line as in its decoding (not U+FFFD, which stands for a
+    * malformed byte, nor a lone surrogate).
+    */
+  private def literal(c: Char): Boolean =
+    if (c < 128) c >= ' ' && c != 127 && !"\\^$.|?*+()[]{}".contains(c)
+    else c != '\uFFFD' && !Character.isSurrogate(c)
 
   sealed trait LogicalOp
   case object And extends LogicalOp

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.shim
 
 /** Sink-side record serialization (SURVEY.md §2.10): the out_file formats
   * (reference `plugins/out_file/file.c:472-580,987-1020` — json / csv /
@@ -15,10 +16,12 @@ import org.apache.spark.sql.functions._
 object Formats {
 
   /** out_file `Format json` — one JSON object per line. Field order is
-    * the struct order, as in msgpack→JSON (flb_pack.c:1156).
+    * the struct order, as in msgpack→JSON (flb_pack.c:1156). The text is
+    * `to_json(struct(...))`'s; string-only records are written as bytes
+    * ([[graft.functions.JsonLine]]).
     */
   def jsonLine(fields: Seq[(String, Column)]): Column =
-    to_json(struct(fields.map { case (n, c) => c.as(n) }: _*))
+    shim.column(graft.functions.JsonLine(fields.map(_._1), fields.map(f => shim.expression(f._2))))
 
   /** out_file `Format csv` (file.c:472): delimiter-joined values. NULLs
     * serialize as empty fields (concat_ws would silently SKIP them,

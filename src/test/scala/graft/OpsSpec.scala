@@ -76,4 +76,47 @@ class OpsSpec extends AnyFunSuite {
       .orderBy("k").select("f").collect().map(r => Option(r.get(0)))
     assert(out.toSeq == Seq(None, Some("hit"), None))
   }
+
+  test("property: grep literal rules (StartsWith/Contains) == RLIKE, NULL never matches") {
+    import org.apache.spark.sql.catalyst.expressions.{Contains, RLike, StartsWith}
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    def sample[T](g: Gen[T], n: Int, seed: Long): Seq[T] =
+      Gen.listOfN(n, g).apply(Gen.Parameters.default, Seed(seed)).get
+    val piece = Gen.oneOf("/", "a", "b", "healthz", "-", " ", "é", "日", "\u0085")
+    // patterns: mostly literals, some with a metacharacter, `$` or a class
+    val pattern = for {
+      anchor <- Gen.oneOf("", "^")
+      ps <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, Gen.frequency(8 -> piece,
+        1 -> Gen.oneOf(".", "$", "\\d", "[a/]", "a*", "(?i)A", "😀"))))
+    } yield anchor + ps.mkString
+    val text = Gen.choose(0, 5).flatMap(Gen.listOfN(_, Gen.frequency(6 -> piece,
+      2 -> Gen.oneOf("\n", "\r", "\r\n", "A", "\uFFFD", "😀")))).map(_.mkString)
+    val values = (sample(text, 150, 31L).map(t => Option(t.getBytes("UTF-8"))) ++
+      Seq(None, Some(Array[Byte]('/', 'a', 0x80.toByte)), Some(Array[Byte](0xE2.toByte, '/', 'a')),
+        Some(Array[Byte](0xC3.toByte, 0xA9.toByte, 0xFF.toByte)))).distinct
+    val df = values.toDF("b").select(col("b").cast("string").as("s"))
+    val patterns = (sample(pattern, 300, 32L) ++ Seq("", "^", "^/healthz", "healthz")).distinct
+    patterns.grouped(40).foreach { batch =>
+      val cols = batch.flatMap { p =>
+        Seq(false, true).flatMap { ex =>
+          val oracle = coalesce(col("s").rlike(p), lit(false))
+          Seq(Grep.Rule(col("s"), p, ex).satisfied, if (ex) !oracle else oracle)
+        }
+      }
+      df.select(col("s") +: cols: _*).collect().foreach { r =>
+        for (i <- 1 until r.length by 2)
+          assert(r.getBoolean(i) == r.getBoolean(i + 1),
+            s"pattern ${batch((i - 1) / 4)} exclude ${(i - 1) % 4 == 2} on ${Option(r.getString(0)).map(_.map(_.toInt))}")
+      }
+    }
+    // the access chain's rule is a StartsWith; `$`, a class or a flag keep RLIKE
+    def condition(p: String) = df.filter(Grep.Rule(col("s"), p).satisfied).queryExecution.analyzed
+      .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }.get
+    assert(condition("^/healthz").exists(_.isInstanceOf[StartsWith]))
+    assert(condition("healthz").exists(_.isInstanceOf[Contains]))
+    Seq("^/healthz$", "^/h[a]", "(?i)^/healthz", "^/healthz.").foreach { p =>
+      assert(condition(p).exists(_.isInstanceOf[RLike]), p)
+    }
+  }
 }

@@ -670,6 +670,45 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("byte kernels: the access parser and the [A-Z]+ shapes scan bytes, an optional group keeps java.util.regex") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.RegexGroups
+    accessChain().foreach { case (id, df) =>
+      val scanners = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case r: RegexGroups => r.scanner != null
+      }))
+      assert(scanners == Seq(true), s"$id: $scanners")
+    }
+    def scans(pattern: String) = RegexGroups(Literal(""), pattern, Seq(1)).scanner != null
+    assert(scans("""^(?<method>[A-Z]+) (?<uri>\S+) (?<status>\d+) (?<bytes>\d+)$"""))
+    assert(scans("""^(?<method>[A-Z]+) (?<path>\S+)"""))
+    assert(!scans("""^(?<method>[A-Z]+) (?<path>\S+)(?: (?<note>.+))?$"""))
+  }
+
+  test("json outputs: Match * writes its line as bytes with no to_json, the loki body is unchanged") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, StructsToJson}
+    import org.apache.spark.sql.catalyst.expressions.json.StructsToJsonEvaluator
+    import org.apache.spark.sql.catalyst.expressions.objects.Invoke
+    import graft.functions.JsonLineBytes
+    def count(df: org.apache.spark.sql.DataFrame)(pf: PartialFunction[Expression, Unit]): Int =
+      df.queryExecution.optimizedPlan.map(_.expressions.map(_.collect(pf).size).sum).sum
+    def toJson(df: org.apache.spark.sql.DataFrame) = count(df) {
+      case _: StructsToJson => ()
+      case Invoke(Literal(_: StructsToJsonEvaluator, _), _, _, _, _, _, _, _) => ()
+    }
+    def bytes(df: org.apache.spark.sql.DataFrame) = count(df) { case _: JsonLineBytes => () }
+    val outs = accessChain()
+    assert(toJson(outs("file:*")) == 0 && bytes(outs("file:*")) == 1, outs("file:*").queryExecution.optimizedPlan)
+    // the loki line is written as bytes inside today's to_json entry and label encoders
+    val loki = outs("loki:err.*")
+    assert(bytes(loki) == 1 && toJson(loki) == 2, loki.queryExecution.optimizedPlan)
+    assert(loki.collect().map(_.getString(0)).toSeq == Seq(
+      """{"streams":[{"stream":{"job":"fluentbit","code":"502"},"values":[["0",""" +
+        """"{\"remote_addr\":\"10.0.0.2\",\"user\":\"bob\",\"time\":\"10/Oct/2024:13:55:37 +0000\",""" +
+        """\"method\":\"GET\",\"path\":\"/b\",\"code\":\"502\",\"size\":\"0\",\"referer\":\"-\",""" +
+        """\"agent\":\"curl\",\"env\":\"prod\"}"]]}]}"""))
+  }
+
   test("wildcard routes run no regex: Match * is a null check, prefix.* a StartsWith") {
     import org.apache.spark.sql.catalyst.expressions.{IsNotNull, Like, RLike, StartsWith}
     accessChain().foreach { case (id, df) =>
