@@ -29,7 +29,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     // suite variance is ±15% single-shot; report the median of N runs
     // per query so round-over-round regressions are detectable
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
@@ -40,52 +40,11 @@ object Bench {
     def onlyMatches(n: String): Boolean = only.forall(_.exists(p =>
       if (p.endsWith("$")) n == p.dropRight(1) else n.startsWith(p)))
     // SPARK_GRAFT_MASTER=local-cluster[n,c,mem_mb] benches multi-JVM
-    // (see Verify) — pins/records stay local[N]-only: the committed
+    // (see GraftSession) — pins/records stay local[N]-only: the committed
     // bench_full.json is a local-mode record and a local-cluster run
     // must never overwrite it (guarded below via the master check).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // wide MinHash aggregates (k=128 min-columns) must stay inside
-      // whole-stage codegen; the default maxFields=100 silently drops them
-      .config("spark.sql.codegen.maxFields", "256")
-      // bound the per-task sorter footprint: with a large heap the sort
-      // under user-keyed windows otherwise hoards the whole pool before
-      // spilling, and the long-lived pages turn into GC copy cost that
-      // more than erases the avoided spill (sf10 events-window gates
-      // measured 2.4 s at 8g vs 5.2 s at 24g before this cap)
-      .config("spark.shuffle.spill.numElementsForceSpillThreshold",
-        "4000000")
-      // co-partitioning on a subset of the join keys is sufficient when
-      // both sides explicitly cluster by it (serviceGraph joins spans
-      // by trace; one exchange instead of two composite reshuffles)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      builder.config("spark.executor.extraClassPath",
-        sys.props("java.class.path"))
-      builder.config("spark.executorEnv.SPARK_SCALA_VERSION", "2.13")
-      // local-cluster's third argument sizes the WORKER; the executor
-      // JVM still defaults to 1g — size it explicitly or state-heavy
-      // streaming stages OOM off-JVM while local[N] (one big heap)
-      // sails through
-      builder.config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "3g"))
-      builder.config("spark.executor.extraJavaOptions",
-        Seq("java.lang", "java.lang.invoke", "java.lang.reflect",
-          "java.io", "java.net", "java.nio", "java.util",
-          "java.util.concurrent", "java.util.concurrent.atomic",
-          "sun.nio.ch", "sun.nio.cs", "sun.security.action",
-          "sun.util.calendar")
-          .map(p => s"--add-opens=java.base/$p=ALL-UNNAMED")
-          .mkString(" "))
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // streaming twins checkpoint through the fork-free store whatever the
-    // query order, not only after a config gate has installed it
-    graft.streaming.LocalCheckpointFiles.install(spark)
+    val master = GraftSession.master
+    val spark = GraftSession()
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       onlyMatches(n)
     }
@@ -153,24 +112,26 @@ object Bench {
           Seq("x_graph_fixture_build" -> -1.0)
         }
       } else Seq.empty
-    // Committed medians from the previous full-suite run at the SAME
-    // scale factor — the reference for the host-storm retry below. The
-    // file is overwritten only at the END of a full default-action run,
-    // so reading it here always sees the prior run's record.
-    val pins: Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("bench_full.json")), "UTF-8")
-      val sfOk = """"sf":"([^"]*)"""".r.findFirstMatchIn(txt)
-        .exists(_.group(1) == sfDir)
-      // pins from a different core count are not comparable (the r16
-      // driver's 8-core scaling run was ~15% FASTER than its stormy
-      // 32-core run); a legacy record without the field is accepted
-      val cpusOk = """"cpus":([0-9]+)""".r.findFirstMatchIn(txt)
-        .forall(_.group(1) == cpus)
-      if (!sfOk || !cpusOk) Map.empty
-      else """"([^"]+)":([0-9]+\.[0-9]+)""".r.findAllMatchIn(txt)
+    // The committed record of the previous full-suite run, read once:
+    // its sf and cpus fields gate both the storm-retry pins below and
+    // the overwrite at the end. The file is overwritten only at the END
+    // of a full default-action run, so this always sees the prior run.
+    val record: Option[String] = try Some(new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("bench_full.json")),
+      "UTF-8")) catch { case _: Throwable => None }
+    def field(re: scala.util.matching.Regex): Option[String] =
+      record.flatMap(re.findFirstMatchIn(_)).map(_.group(1))
+    val recordSf = field(""""sf":"([^"]*)"""".r)
+    // pins from a different core count are not comparable (an 8-core
+    // scaling run read ~15% FASTER than a stormy 32-core run); a legacy
+    // record without the field is accepted
+    val cpusMatches = field(""""cpus":([0-9]+)""".r).forall(_ == cpus.toString)
+    // Committed medians at the SAME scale factor and core count — the
+    // reference for the host-storm retry below.
+    val pins: Map[String, Double] =
+      if (!recordSf.contains(sfDir) || !cpusMatches) Map.empty
+      else """"([^"]+)":([0-9]+\.[0-9]+)""".r.findAllMatchIn(record.get)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
     def load1: Double = try {
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
@@ -266,23 +227,12 @@ object Bench {
     val stormHeavy = stormRows.size > math.max(3, pins.size / 10)
     // ...and never let a full run at a DIFFERENT scale factor clobber
     // the committed record (the r14 hazard: a local sf0.01 iteration
-    // run overwrote the sf0.1 pins the driver-round storm retry and
-    // the judge's regression read both anchor on)
-    val sfMatches = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("bench_full.json")), "UTF-8")
-      """"sf":"([^"]*)"""".r.findFirstMatchIn(txt)
-        .forall(_.group(1) == sfDir)
-    } catch { case _: Throwable => true } // no record yet: establish one
-    // ...or at a DIFFERENT core count (the r16 hazard: the driver's
-    // 8-core scaling run silently overwrote the 32-core calm pins).
-    // Legacy records without the field are upgradable.
-    val cpusMatches = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("bench_full.json")), "UTF-8")
-      """"cpus":([0-9]+)""".r.findFirstMatchIn(txt)
-        .forall(_.group(1) == cpus)
-    } catch { case _: Throwable => true }
+    // run overwrote the sf0.1 pins the storm retry and regression
+    // reads anchor on), nor one at a
+    // DIFFERENT core count (the r16 hazard: an 8-core scaling run
+    // silently overwrote the 32-core calm pins). No record yet, or
+    // a legacy one without the field: establish or upgrade it.
+    val sfMatches = recordSf.forall(_ == sfDir)
     val localMaster = master.startsWith("local[")
     if (only.isEmpty && action == "count" && !stormHeavy && sfMatches &&
         cpusMatches && localMaster) {

@@ -3,11 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import graft.queries.Registry
 
-/** Dumps `explain("formatted")` for representative queries into
-  * EXPLAIN.md — the human-readable record of the plan shapes PlanSpec
-  * asserts (pushdown, pruning, broadcast joins, codegen spans).
+/** Dumps `explain("formatted")` of registry queries, planned in the
+  * shared [[GraftSession]] so the plan is the one the bench runs.
   *
-  * Usage: `sbt "runMain graft.Explain /root/testdata/sf0.01 EXPLAIN.md"`
+  * Usage:
+  *   - `sbt "runMain graft.Explain <sfDir> EXPLAIN.md"`
+  *     writes the headline queries into EXPLAIN.md — the human-readable
+  *     record of the plan shapes PlanSpec asserts (pushdown, pruning,
+  *     broadcast joins, codegen spans);
+  *   - `sbt "runMain graft.Explain <sfDir> <outDir> <suffix> q1,q2,..."`
+  *     writes `<outDir>/<q>_<suffix>.txt` for each named query — the
+  *     optimization evidence trail (`plans/r16/<query>_before.txt`).
   */
 object Explain {
   private val Headline = Seq(
@@ -90,33 +96,37 @@ object Explain {
     "x_search_hybrid_rrf" -> "hybrid RRF retrieval (two bounded top-k legs union → integer-contribution aggregate → global order on ≤ legs·k rows — fusion is corpus-size-free)"
   )
 
+  private def plan(spark: SparkSession, sfDir: String, name: String): String =
+    Registry.queries(name)(spark, sfDir).queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+
+  private def write(file: java.io.File, text: String): Unit = {
+    val w = new java.io.PrintWriter(file, "UTF-8")
+    try w.write(text) finally w.close()
+    println(s"wrote $file")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val out = args.lift(1).getOrElse("EXPLAIN.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // wide MinHash aggregates (k=128 min-columns) must stay inside
-      // whole-stage codegen; the default maxFields=100 silently drops them
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb.append("# EXPLAIN — physical plans of headline queries\n\n")
-    sb.append(s"Generated by `graft.Explain` at `$sfDir` (plan shapes are\n")
-    sb.append("scale-independent; sizes only affect AQE thresholds).\n")
-    Headline.foreach { case (name, desc) =>
-      val df = Registry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name — $desc\n\n```\n")
-      sb.append(plan.linesIterator.take(80).mkString("\n"))
-      sb.append("\n```\n")
+    val spark = GraftSession()
+    if (args.length >= 4) {
+      val (outDir, suffix) = (new java.io.File(args(1)), args(2))
+      outDir.mkdirs()
+      args(3).split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
+        write(new java.io.File(outDir, s"${name}_$suffix.txt"), plan(spark, sfDir, name))
+      }
+    } else {
+      val sb = new StringBuilder
+      sb.append("# EXPLAIN — physical plans of headline queries\n\n")
+      sb.append(s"Generated by `graft.Explain` at `$sfDir` (plan shapes are\n")
+      sb.append("scale-independent; sizes only affect AQE thresholds).\n")
+      Headline.foreach { case (name, desc) =>
+        sb.append(s"\n## $name — $desc\n\n```\n")
+        sb.append(plan(spark, sfDir, name).linesIterator.take(80).mkString("\n"))
+        sb.append("\n```\n")
+      }
+      write(new java.io.File(args.lift(1).getOrElse("EXPLAIN.md")), sb.toString)
     }
-    val w = new java.io.PrintWriter(out, "UTF-8")
-    try w.write(sb.toString) finally w.close()
-    println(s"wrote $out")
     spark.stop()
   }
 }

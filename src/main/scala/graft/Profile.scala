@@ -1,11 +1,10 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import graft.queries.Registry
 
 /** Per-stage attribution for ONE query (optimization-round tooling,
-  * guide §1/§7): runs the named query with the Bench session confs and
+  * guide §1/§7): runs the named query in the shared [[GraftSession]] with
   * a stage listener, then prints per-stage wall time, task time, shuffle
   * read/write bytes and record counts — the local[N] stand-in for the
   * Spark UI's stage table. `runs` repeats (first run includes codegen
@@ -18,16 +17,7 @@ object Profile {
     val sfDir = args(0)
     val name = args(1)
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.shuffle.spill.numElementsForceSpillThreshold", "4000000")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
 
     case class St(id: Int, nameLine: String, wallMs: Long, taskMs: Long,
                   gcMs: Long, inRec: Long, srBytes: Long, srRec: Long,

@@ -88,40 +88,11 @@ object StreamBench {
   private val nameCtr = new java.util.concurrent.atomic.AtomicLong(0)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     // SPARK_GRAFT_MASTER=local-cluster[n,c,mem_mb] measures the
     // multi-JVM throughput cell: spans serialize driver->executor, the
     // keyed-state shuffle crosses process boundaries, and state stores
-    // commit in executor JVMs (same plumbing as graft.Verify)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      // stateful shuffles: one state store per partition per operator —
-      // cpus-many, not 200
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      builder.config("spark.executor.extraClassPath",
-        sys.props("java.class.path"))
-      builder.config("spark.executorEnv.SPARK_SCALA_VERSION", "2.13")
-      // local-cluster's third argument sizes the WORKER; the executor
-      // JVM still defaults to 1g — size it explicitly or state-heavy
-      // streaming stages OOM off-JVM while local[N] (one big heap)
-      // sails through
-      builder.config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "3g"))
-      builder.config("spark.executor.extraJavaOptions",
-        Seq("java.lang", "java.lang.invoke", "java.lang.reflect",
-          "java.io", "java.net", "java.nio", "java.util",
-          "java.util.concurrent", "java.util.concurrent.atomic",
-          "sun.nio.ch", "sun.nio.cs", "sun.security.action",
-          "sun.util.calendar")
-          .map(p => s"--add-opens=java.base/$p=ALL-UNNAMED")
-          .mkString(" "))
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // commit in executor JVMs (see GraftSession)
+    val spark = GraftSession()
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

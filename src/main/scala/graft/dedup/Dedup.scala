@@ -94,15 +94,6 @@ object Dedup {
       }: _*).as("mhs"))
   }
 
-  /** xxhash64-seeded MinHash family — the fast production path (one
-    * 64-bit hash per (seed, shingle), no digest slicing, not oracle-
-    * portable). Same output shape as [[minhash]]: (doc_id, mhs ARRAY<BIGINT>).
-    */
-  def minhashFast(sh: DataFrame, k: Int = 128): DataFrame =
-    sh.groupBy(col("doc_id"))
-      .agg(array((0 until k).map(i =>
-        min(xxhash64(lit(i), col("shingle")))): _*).as("mhs"))
-
   /** LSH banding over wide signatures: band b's signature = md5 of the
     * ordered concat of its `rowsPerBand` minhashes. Docs sharing any
     * (band, signature) are candidates. Bands are built from explicit

@@ -32,6 +32,9 @@ object SelfTelemetry {
                              labels: Map[String, String], ts_ms: Long,
                              batch_id: Long, value: Double)
 
+  /** A series: metric name and labels. */
+  private type Series = (String, Map[String, String])
+
   /** Flatten a batch-ordered progress sequence (one query's
     * `recentProgress`, or several queries' concatenated) to metric rows.
     *
@@ -51,54 +54,58 @@ object SelfTelemetry {
   def progressRows(spark: SparkSession,
                    progresses: Seq[StreamingQueryProgress]): DataFrame = {
     import spark.implicits._
-    // cumulative counter state per (query, series) — cmetrics counters
-    // are monotone totals, not per-interval readings
-    val inTotals = scala.collection.mutable.Map[(String, String), Double]()
-    val outTotals = scala.collection.mutable.Map[String, Double]()
+    val totals = scala.collection.mutable.Map[Series, Double]()
+    progresses.flatMap(flatten(_, totals)).toDF()
+  }
+
+  /** One progress event as metric rows — the flattener both
+    * [[progressRows]] and [[Listener]] use. Counter rows carry the
+    * running total over the events seen so far, kept in `totals` per
+    * (series name, labels) and updated here: cmetrics counters are
+    * monotone totals, not per-interval readings. Gauges are the
+    * event's own reading; NaN and infinite ones are left out.
+    */
+  private def flatten(p: StreamingQueryProgress,
+      totals: scala.collection.mutable.Map[Series, Double])
+      : Seq[MetricRow] = {
+    val ts = java.time.Instant.parse(p.timestamp).toEpochMilli
+    val base = Map("query" -> Option(p.name).getOrElse(p.id.toString))
     val rows = Vector.newBuilder[MetricRow]
-    progresses.foreach { p =>
-      val q = Option(p.name).getOrElse(p.id.toString)
-      val ts = java.time.Instant.parse(p.timestamp).toEpochMilli
-      val base = Map("query" -> q)
-      def gauge(name: String, v: Double, extra: (String, String)*): Unit =
-        if (!v.isNaN && !v.isInfinite)
-          rows += MetricRow(name, "gauge", base ++ extra, ts, p.batchId, v)
-      // per-source input counters (fluentbit_input_records_total shape)
-      p.sources.zipWithIndex.foreach { case (src, i) =>
-        if (src.numInputRows >= 0) {
-          val key = (q, i.toString)
-          val tot = inTotals.getOrElse(key, 0.0) + src.numInputRows
-          inTotals(key) = tot
-          rows += MetricRow("graft_input_records_total", "counter",
-            base + ("source" -> i.toString), ts, p.batchId, tot)
-        }
-        gauge("graft_input_rows_per_sec", src.inputRowsPerSecond,
-          "source" -> i.toString)
-      }
-      // sink output counter (fluentbit_output_proc_records_total shape);
-      // -1 means the sink does not report — skip, never count it
-      if (p.sink != null && p.sink.numOutputRows >= 0) {
-        val tot = outTotals.getOrElse(q, 0.0) + p.sink.numOutputRows
-        outTotals(q) = tot
-        rows += MetricRow("graft_output_records_total", "counter",
-          base, ts, p.batchId, tot)
-      }
-      gauge("graft_processed_rows_per_sec", p.processedRowsPerSecond)
-      // per-stage batch durations (triggerExecution, addBatch, ...)
-      p.durationMs.forEach { (stage, ms) =>
-        gauge("graft_batch_duration_ms", ms.toDouble, "stage" -> stage)
-      }
-      // stateful-operator footprint — the state-store scale signal
-      p.stateOperators.zipWithIndex.foreach { case (op, i) =>
-        val opLabel = "operator" ->
-          (if (op.operatorName != null && op.operatorName.nonEmpty)
-             op.operatorName else i.toString)
-        gauge("graft_state_rows", op.numRowsTotal.toDouble, opLabel)
-        gauge("graft_state_rows_updated", op.numRowsUpdated.toDouble, opLabel)
-        gauge("graft_state_memory_bytes", op.memoryUsedBytes.toDouble, opLabel)
-      }
+    def counter(name: String, by: Double, extra: (String, String)*): Unit = {
+      val labels = base ++ extra
+      val tot = totals.getOrElse((name, labels), 0.0) + by
+      totals((name, labels)) = tot
+      rows += MetricRow(name, "counter", labels, ts, p.batchId, tot)
     }
-    rows.result().toDF()
+    def gauge(name: String, v: Double, extra: (String, String)*): Unit =
+      if (!v.isNaN && !v.isInfinite)
+        rows += MetricRow(name, "gauge", base ++ extra, ts, p.batchId, v)
+    // per-source input counters (fluentbit_input_records_total shape)
+    p.sources.zipWithIndex.foreach { case (src, i) =>
+      if (src.numInputRows >= 0)
+        counter("graft_input_records_total", src.numInputRows, "source" -> i.toString)
+      gauge("graft_input_rows_per_sec", src.inputRowsPerSecond,
+        "source" -> i.toString)
+    }
+    // sink output counter (fluentbit_output_proc_records_total shape);
+    // -1 means the sink does not report — skip, never count it
+    if (p.sink != null && p.sink.numOutputRows >= 0)
+      counter("graft_output_records_total", p.sink.numOutputRows)
+    gauge("graft_processed_rows_per_sec", p.processedRowsPerSecond)
+    // per-stage batch durations (triggerExecution, addBatch, ...)
+    p.durationMs.forEach { (stage, ms) =>
+      gauge("graft_batch_duration_ms", ms.toDouble, "stage" -> stage)
+    }
+    // stateful-operator footprint — the state-store scale signal
+    p.stateOperators.zipWithIndex.foreach { case (op, i) =>
+      val opLabel = "operator" ->
+        (if (op.operatorName != null && op.operatorName.nonEmpty)
+           op.operatorName else i.toString)
+      gauge("graft_state_rows", op.numRowsTotal.toDouble, opLabel)
+      gauge("graft_state_rows_updated", op.numRowsUpdated.toDouble, opLabel)
+      gauge("graft_state_memory_bytes", op.memoryUsedBytes.toDouble, opLabel)
+    }
+    rows.result()
   }
 
   /** Live snapshot over every active query in the session. Exact for
@@ -128,13 +135,11 @@ object SelfTelemetry {
     * series' latest batch/timestamp).
     */
   final class Listener extends StreamingQueryListener {
-    // keyed by query name (falling back to id) + series labels; all
-    // access synchronized on `this` — progress events arrive on the
-    // listener bus thread, snapshots from caller threads
-    private val counters =
-      scala.collection.mutable.Map[(String, String, String), MetricRow]()
-    private val gauges =
-      scala.collection.mutable.Map[(String, String, Map[String, String]), MetricRow]()
+    // the latest row per series (name, labels) plus the counters' running
+    // totals; all access synchronized on `this` — progress events arrive
+    // on the listener bus thread, snapshots from caller threads
+    private val totals = scala.collection.mutable.Map[Series, Double]()
+    private val latest = scala.collection.mutable.Map[Series, MetricRow]()
 
     override def onQueryStarted(
         e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -142,47 +147,12 @@ object SelfTelemetry {
         e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(
         e: StreamingQueryListener.QueryProgressEvent): Unit = synchronized {
-      val p = e.progress
-      val q = Option(p.name).getOrElse(p.id.toString)
-      val ts = java.time.Instant.parse(p.timestamp).toEpochMilli
-      val base = Map("query" -> q)
-      def bump(name: String, source: String, by: Double): Unit = {
-        val key = (q, name, source)
-        val tot = counters.get(key).map(_.value).getOrElse(0.0) + by
-        val labels =
-          if (source.isEmpty) base else base + ("source" -> source)
-        counters(key) =
-          MetricRow(name, "counter", labels, ts, p.batchId, tot)
-      }
-      def gauge(name: String, v: Double, extra: (String, String)*): Unit =
-        if (!v.isNaN && !v.isInfinite)
-          gauges((q, name, extra.toMap)) =
-            MetricRow(name, "gauge", base ++ extra, ts, p.batchId, v)
-      p.sources.zipWithIndex.foreach { case (src, i) =>
-        if (src.numInputRows >= 0)
-          bump("graft_input_records_total", i.toString, src.numInputRows)
-        gauge("graft_input_rows_per_sec", src.inputRowsPerSecond,
-          "source" -> i.toString)
-      }
-      if (p.sink != null && p.sink.numOutputRows >= 0)
-        bump("graft_output_records_total", "", p.sink.numOutputRows)
-      gauge("graft_processed_rows_per_sec", p.processedRowsPerSecond)
-      p.durationMs.forEach { (stage, ms) =>
-        gauge("graft_batch_duration_ms", ms.toDouble, "stage" -> stage)
-      }
-      p.stateOperators.zipWithIndex.foreach { case (op, i) =>
-        val opLabel = "operator" ->
-          (if (op.operatorName != null && op.operatorName.nonEmpty)
-             op.operatorName else i.toString)
-        gauge("graft_state_rows", op.numRowsTotal.toDouble, opLabel)
-        gauge("graft_state_rows_updated", op.numRowsUpdated.toDouble, opLabel)
-        gauge("graft_state_memory_bytes", op.memoryUsedBytes.toDouble, opLabel)
-      }
+      flatten(e.progress, totals).foreach(r => latest((r.name, r.labels)) = r)
     }
 
     /** Current register set (lifetime counters + latest gauges). */
     def currentRows: Seq[MetricRow] = synchronized {
-      (counters.values.toVector ++ gauges.values.toVector)
+      latest.values.toVector
         .sortBy(r => (r.name, r.labels.toSeq.sorted.mkString(",")))
     }
 

@@ -88,12 +88,4 @@ object Modify {
 
   private def gated(gate: Option[Column], value: Column, orElse: Column): Column =
     gate.map(g => when(g, value).otherwise(orElse)).getOrElse(value)
-
-  /** Map-residue variants for the schemaless part of a log record. */
-  def mapRemoveWildcard(m: Column, prefix: String): Column =
-    map_filter(m, (k, _) => !k.startsWith(prefix))
-  def mapRemoveRegex(m: Column, pattern: String): Column =
-    map_filter(m, (k, _) => !k.rlike(pattern))
-  def mapSet(m: Column, key: String, value: Column): Column =
-    map_concat(map_filter(m, (k, _) => k =!= key), map(lit(key), value))
 }

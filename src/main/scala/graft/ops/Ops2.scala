@@ -61,10 +61,6 @@ object AlterSize {
   /** `operation head`: keep the first `n` per key. */
   def head(df: DataFrame, keyCols: Seq[Column], orderCols: Seq[Column], n: Int): DataFrame =
     ranked(df, keyCols, orderCols).filter(col("__rn") <= n).drop("__rn")
-
-  /** `operation drop`: drop the first `n` per key. */
-  def dropHead(df: DataFrame, keyCols: Seq[Column], orderCols: Seq[Column], n: Int): DataFrame =
-    ranked(df, keyCols, orderCols).filter(col("__rn") > n).drop("__rn")
 }
 
 /** filter_expect (reference `plugins/filter_expect/expect.c:398`): assertion
@@ -165,10 +161,6 @@ object TailSampling {
     */
   def latencyPolicy(latencyCol: Column, thresholdMs: Double): Column =
     latencyCol >= thresholdMs
-
-  /** status_code policy (sampling_cond_status_code.c). */
-  def statusPolicy(statusCol: Column, codes: Seq[Int]): Column =
-    statusCol.isin(codes.map(_.asInstanceOf[Any]): _*)
 
   /** string_attribute policy (sampling_cond_string_attribute.c):
     * match_type strict (value ∈ list) / exists / regex (any pattern).

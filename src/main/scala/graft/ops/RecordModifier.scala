@@ -5,16 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** filter_record_modifier (reference
   * `plugins/filter_record_modifier/filter_modifier.h:44-57`, exec
-  * filter_modifier.c:298): project-away (`remove_key`), project-keep
-  * (`allowlist_key`), append static k/v (`record`).
+  * filter_modifier.c:298): project-keep (`allowlist_key`) and append
+  * static k/v (`record`); `remove_key` is a plain `drop`.
   *
   * Pure column pruning — Catalyst pushes the projection into the scan
   * (ReadSchema shrinks), which is exactly what you want at 100 TB.
   */
 object RecordModifier {
-  def removeKeys(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.drop(keys.toIndexedSeq: _*)
-
   def allowlistKeys(df: DataFrame, keys: Seq[String]): DataFrame =
     df.select(keys.filter(df.columns.contains).map(col).toIndexedSeq: _*)
 

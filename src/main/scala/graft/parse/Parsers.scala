@@ -107,11 +107,6 @@ object Parsers {
   def json(df: DataFrame, source: Column, schema: String, outCol: String): DataFrame =
     df.withColumn(outCol, from_json(source, org.apache.spark.sql.types.StructType.fromDDL(schema)))
 
-  /** JSON body as a string map — the schemaless residue form. */
-  def jsonAsMap(df: DataFrame, source: Column, outCol: String): DataFrame =
-    df.withColumn(outCol, from_json(source, org.apache.spark.sql.types.MapType(
-      org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType)))
-
   /** CSV helper (`src/flb_csv.c`) via Spark's from_csv. */
   def csv(df: DataFrame, source: Column, schema: String, outCol: String): DataFrame =
     df.withColumn(outCol, from_csv(source, org.apache.spark.sql.types.StructType.fromDDL(schema),
@@ -198,13 +193,6 @@ object Parsers {
     val q = regexp_replace(r, "\\\\\"", "\"")
     regexp_replace(q, "\\\\\\\\", "\\\\")
   }
-
-  /** `json` decoder: re-parse a field that itself contains JSON
-    * (do_next/as chaining, flb_parser_decoder.c:677-690).
-    */
-  def decodeJson(source: Column): Column =
-    from_json(source, org.apache.spark.sql.types.MapType(
-      org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType))
 
   /** `escaped_utf8` decoder (flb_parser_decoder.c:392-468 →
     * flb_unescape_string_utf8): full escape grammar incl. \uXXXX with

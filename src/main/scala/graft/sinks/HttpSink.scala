@@ -118,21 +118,6 @@ object HttpSink {
     }
   }
 
-  /** Elasticsearch `_bulk` body shape (out_es `plugins/out_es/es.c`):
-    * each record line is preceded by an `{"index":{"_index":…}}` action
-    * line; POST to `<url>/_bulk` with x-ndjson content type.
-    */
-  def writeEsBulk(df: DataFrame, url: String, index: String,
-                  lineCol: String = "value", batchLines: Int = 1000,
-                  maxRetries: Int = 3, baseMs: Int = 100,
-                  capMs: Int = 5000): Unit = {
-    val action = s"""{"index":{"_index":"$index"}}"""
-    val lines = df.select(
-      concat(lit(action + "\n"), col(lineCol).cast("string")).as("value"))
-    write(lines, url.stripSuffix("/") + "/_bulk", "value",
-      batchLines, maxRetries, baseMs, capMs)
-  }
-
   /** Ship pre-built whole request bodies (one per row — e.g.
     * [[Formats.lokiPush]] payloads), one POST per body, one client per
     * partition. The per-stream batching already happened upstream in the

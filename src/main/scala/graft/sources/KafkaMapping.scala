@@ -49,23 +49,6 @@ object KafkaMapping {
     base ++ opt ++ passthrough
   }
 
-  /** out_kafka config keys → kafka writer options (kafka.c config map:
-    * brokers/topic_key/message_key_field/queue_full_retries).
-    */
-  def sinkOptions(props: Map[String, String]): Map[String, String] = {
-    val base = Map("kafka.bootstrap.servers" -> props.getOrElse("brokers",
-      throw new IllegalArgumentException("out_kafka requires 'brokers'")))
-    val opt = Seq(
-      props.get("topics").map("topic" -> _),
-      props.get("client_id").map("kafka.client.id" -> _)
-    ).flatten.toMap
-    val passthrough = props.collect {
-      case (k, v) if k.startsWith("rdkafka.") =>
-        "kafka." + k.stripPrefix("rdkafka.") -> v
-    }
-    base ++ opt ++ passthrough
-  }
-
   /** Kafka record frame → the engine's (tag, ts, record) model, the
     * adapter in_kafka applies per message (in_kafka.c:58-120: topic/
     * partition/offset/key as metadata next to the payload). `format

@@ -25,14 +25,6 @@ object Sources {
   def ndjson(spark: SparkSession, path: String, ddl: String): DataFrame =
     spark.read.schema(StructType.fromDDL(ddl)).json(path)
 
-  /** CSV file(s) with an explicit schema (in_tail + csv parser). */
-  def csvFile(spark: SparkSession, path: String, ddl: String,
-              header: Boolean = false, delimiter: String = ","): DataFrame =
-    spark.read.schema(StructType.fromDDL(ddl))
-      .option("header", header.toString)
-      .option("delimiter", delimiter)
-      .csv(path)
-
   /** Raw text lines (in_tail without a parser): one `value` column plus
     * the source file path as the tag seed (≙ tail's tag-from-path).
     */
@@ -92,38 +84,6 @@ object Sources {
       .option("body", "raw").load()
     graft.parse.OtlpProto.decodeLogsBodies(raw, unbase64(col("value")),
       col("content_type"), lit(null))
-  }
-
-  /** /v1/metrics twin of [[otlpLogsHttp]] — one row per data point. */
-  def otlpMetricsHttp(spark: SparkSession, port: Int,
-                      host: String = "127.0.0.1"): DataFrame = {
-    val raw = spark.readStream.format("graft.sources.HttpServerSource")
-      .option("port", port).option("host", host)
-      .option("body", "raw").load()
-    graft.parse.OtlpProto.decodeMetricsBodies(raw, unbase64(col("value")),
-      col("content_type"), lit(null))
-  }
-
-  /** /v1/traces twin of [[otlpLogsHttp]] — one row per span. */
-  def otlpTracesHttp(spark: SparkSession, port: Int,
-                     host: String = "127.0.0.1"): DataFrame = {
-    val raw = spark.readStream.format("graft.sources.HttpServerSource")
-      .option("port", port).option("host", host)
-      .option("body", "raw").load()
-    graft.parse.OtlpProto.decodeTracesBodies(raw, unbase64(col("value")),
-      col("content_type"), lit(null))
-  }
-
-  /** in_prometheus_textfile (plugins/in_prometheus_textfile): tail
-    * `*.prom` exposition files from a directory and parse each line with
-    * the scrape-text parser — node-exporter's textfile-collector drop
-    * pattern. New files are picked up by the file stream source;
-    * offsets ride the checkpoint.
-    */
-  def promTextfile(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.readStream.format("text")
-      .option("pathGlobFilter", "*.prom").load(dir)
-    graft.parse.Parsers.promText(raw, col("value")).drop("value")
   }
 
   /** in_collectd (plugins/in_collectd): LISTENING datagram source for

@@ -56,12 +56,7 @@ object Multiline {
       */
     val ruby: Seq[Rule] = Seq(
       Rule(Set("cont"), "^\\s+from\\s+.*:\\d+:in\\s+", "cont")
-    )
-    /** CRI partial lines: `P` tag means continuation follows; `F` is the
-      * final chunk (flb_ml_parser_cri.c concept).
-      */
-    val criPartialFlag = "P"
-  }
+    )  }
 
   /** Is this line a continuation under the rule set? Only rules firing
     * FROM the cont state continue a record — a start-state opener

@@ -275,6 +275,24 @@ class PlanSpec extends AnyFunSuite {
           plan.take(2000))
   }
 
+  test("service graph: trace-only co-partitioned join under the shared session") {
+    // both sides cluster by trace alone (Observability.serviceGraph), so
+    // with requireAllClusterKeysForCoPartition=false the join reuses
+    // those exchanges instead of reshuffling on (trace_id, parent_span_id).
+    // Broadcast off: at sf0.001 the child side would fit a broadcast,
+    // while at bench scale the join is a shuffle join.
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    val plan = try planOf("x_obs_service_graph") finally spark.conf.set(key, saved)
+    assert(plan.contains("SortMergeJoin"), plan.take(3000))
+    val exchanges = plan.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
+    assert(!exchanges.exists(e => e.contains("parent_span_id") || e.contains("p_span")),
+      plan.take(3000))
+    // the window's trace exchange, the parents' repartition, the edge agg
+    assert(exchanges.size == 3, s"hash exchanges ${exchanges.size}:\n" + plan.take(3000))
+  }
+
   test("token-budget mix shuffles once on the group key") {
     val plan = planOf("x_mix_budget")
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length

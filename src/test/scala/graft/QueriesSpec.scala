@@ -4,23 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.codegen.maxFields", "256") // k=128 minhash agg stays codegen'd
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bucketed-table specs saveAsTable into a throwaway warehouse
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .withExtensions(new GraftExtensions) // SQL surface under test too
-      .getOrCreate()
-    // session-wide, so every streaming spec writes its checkpoints
-    // through the same store whatever the test order
-    graft.streaming.LocalCheckpointFiles.install(s)
-    s
-  }
+  // the shared planner settings at a fixed local[4], whatever the host;
+  // bucketed-table specs saveAsTable into a throwaway warehouse
+  lazy val spark: SparkSession = GraftSession.local(4, Map(
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
   val sf: String = "/root/testdata/sf0.001"
 }
 

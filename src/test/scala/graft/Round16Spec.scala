@@ -226,6 +226,52 @@ class Round16Spec extends AnyFunSuite {
     }
   }
 
+  test("self-telemetry: progressRows and the listener flatten one history " +
+       "alike — each series' last row is the listener's register") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    import graft.obs.SelfTelemetry
+    import graft.streaming.Stateful
+    implicit val sqlCtx = spark.sqlContext
+    val listener = new SelfTelemetry.Listener
+    spark.streams.addListener(listener)
+    val in = MemoryStream[Stateful.HashedDoc]
+    val q = Stateful.dedupStream(spark, in.toDS())
+      .writeStream.format("memory").queryName("flatten_probe")
+      .outputMode("append").start()
+    try {
+      var id = 0L
+      Seq(7, 0, 12, 5).foreach { n =>
+        in.addData((0 until n).map { _ =>
+          id += 1; Stateful.HashedDoc(s"fp${id % 15}", id)
+        })
+        q.processAllAvailable()
+      }
+      q.stop()
+      val history = q.recentProgress.toSeq
+      assert(history.nonEmpty)
+      val lastTs = java.time.Instant.parse(history.last.timestamp).toEpochMilli
+      def registers = listener.currentRows
+        .filter(_.labels.get("query").contains("flatten_probe"))
+      // the listener bus is async: await the history's last event
+      val deadline = System.currentTimeMillis + 30000
+      while (!registers.exists(_.ts_ms == lastTs) &&
+             System.currentTimeMillis < deadline) Thread.sleep(50)
+      val rows = SelfTelemetry.progressRows(spark, history)
+        .as[SelfTelemetry.MetricRow].collect().toSeq
+      val lastPerSeries = rows.groupBy(r => (r.name, r.labels))
+        .map(_._2.last).toSeq
+        .sortBy(r => (r.name, r.labels.toSeq.sorted.mkString(",")))
+      assert(lastPerSeries.exists(_.mtype == "counter") &&
+        lastPerSeries.exists(_.name == "graft_state_rows"), lastPerSeries)
+      assert(lastPerSeries == registers)
+    } finally {
+      q.stop()
+      spark.streams.removeListener(listener)
+      spark.catalog.dropTempView("flatten_probe")
+    }
+  }
+
   // --------------------------------------------- the monitoring endpoint
 
   test("monitoring endpoint serves the listener registers as prometheus " +
