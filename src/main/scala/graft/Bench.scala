@@ -236,13 +236,9 @@ object Bench {
     val localMaster = master.startsWith("local[")
     if (only.isEmpty && action == "count" && !stormHeavy && sfMatches &&
         cpusMatches && localMaster) {
-      try {
-        val w = new java.io.PrintWriter("bench_full.json")
-        // sf and cpus ride along so the storm-retry pins only ever
-        // compare same-scale, same-core-count readings
-        try w.println(s"""{"sf":"$sfDir","cpus":$cpus,"queries":${jmap(results)}}""")
-        finally w.close()
-      } catch { case _: Throwable => () }
+      // sf and cpus ride along so the storm-retry pins only ever
+      // compare same-scale, same-core-count readings
+      writeRecord("bench_full.json", s"""{"sf":"$sfDir","cpus":$cpus,"queries":${jmap(results)}}""")
     } else if (stormHeavy) {
       System.err.println(s"[bench] storm-heavy run (${stormRows.size} rows " +
         s"past 2x pin after retries) - bench_full.json NOT overwritten")
@@ -282,11 +278,22 @@ object Bench {
     // parsed null since r01). Write the SAME line to a file as a clean
     // second channel; the stdout contract above is unchanged. Full
     // default-action runs only — a local subset iteration must not
-    // clobber the record of the last full run.
-    if (only.isEmpty && action == "count") try {
-      val w = new java.io.PrintWriter("bench_line.json")
-      try w.println(line) finally w.close()
-    } catch { case _: Throwable => () }
+    // clobber the record of the last full run — and, as for
+    // bench_full.json, only at the record's core count (the r16 hazard
+    // again: the 8-core scaling run overwrote this line).
+    if (only.isEmpty && action == "count") {
+      if (cpusMatches) writeRecord("bench_line.json", line)
+      else System.err.println(s"[bench] cpus $cpus differs from the committed " +
+        "bench_full.json record - bench_line.json NOT overwritten")
+    }
     spark.stop()
   }
+
+  /** Overwrite `file` with `text`; a failed write is reported on stderr. */
+  private def writeRecord(file: String, text: String): Unit =
+    try {
+      val w = new java.io.PrintWriter(file)
+      try w.println(text) finally w.close()
+      if (w.checkError()) System.err.println(s"[bench] writing $file failed")
+    } catch { case e: java.io.IOException => System.err.println(s"[bench] writing $file failed: $e") }
 }

@@ -75,8 +75,8 @@ object GraftSession {
     deployment.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // streaming checkpoints go through the fork-free store whatever the
-    // query order, not only after a config gate has installed it
+    // streaming checkpoints and batch file writes go fork-free whatever
+    // the query order, not only after a config gate has installed it
     graft.streaming.LocalCheckpointFiles.install(spark)
     spark
   }

@@ -63,11 +63,31 @@ object LocalCheckpointFiles {
   /** Spark's session key naming the checkpoint store class. */
   val Key: String = SQLConf.STREAMING_CHECKPOINT_FILE_MANAGER_CLASS.parent.key
 
-  /** Select this store for `spark`'s streaming queries, unless the key is
-    * already set: an explicit choice wins.
+  /** Hadoop's key naming the `file:` file system class. */
+  val FileImplKey: String = "fs.file.impl"
+
+  /** Hadoop's key that keeps `file:` instances out of its JVM-wide cache. */
+  val FileNoCacheKey: String = "fs.file.impl.disable.cache"
+
+  /** Select this store for `spark`'s streaming queries and bind `file:` to
+    * [[NioLocalFileSystem]] for its batch writers and output committer,
+    * each unless its key is already set: an explicit choice wins.
+    *
+    * Both go in the session conf, which `sessionState.newHadoopConf()`
+    * copies into the Hadoop conf that file writers ship to their tasks
+    * and hand to the committer. Hadoop caches file systems JVM-wide by
+    * scheme and user, not by class, so once any stock `file:` instance
+    * is cached, `fs.file.impl` alone would be ignored; the binding
+    * therefore also turns that cache off for this session's `file:`
+    * lookups. Spark's own conf, and with it every other `file:` user in
+    * the JVM, keeps the cached stock instance.
     */
-  def install(spark: SparkSession): Unit =
-    if (spark.conf.getOption(Key).isEmpty) spark.conf.set(Key, classOf[LocalCheckpointFiles].getName)
+  def install(spark: SparkSession): Unit = {
+    def setIfUnset(k: String, v: String): Boolean =
+      spark.conf.getOption(k).isEmpty && { spark.conf.set(k, v); true }
+    setIfUnset(Key, classOf[LocalCheckpointFiles].getName)
+    if (setIfUnset(FileImplKey, classOf[NioLocalFileSystem].getName)) setIfUnset(FileNoCacheKey, "true")
+  }
 
   /** Spark's `file:` manager with the temp file, the rename and the
     * directories moved to `java.nio`; `createAtomic` is Spark's own

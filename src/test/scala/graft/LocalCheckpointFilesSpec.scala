@@ -3,12 +3,10 @@ package graft
 import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import jdk.jfr.consumer.{RecordedEvent, RecordingStream}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path, RawLocalFileSystem}
 import org.apache.hadoop.util.NativeCodeLoader
@@ -39,12 +37,6 @@ class NonLocalFs extends RawLocalFileSystem {
 object NonLocalFs {
   val renames = new AtomicInteger()
 }
-
-/** Marks the end of a recorded span, so every event before it has been
-  * delivered when it arrives.
-  */
-@jdk.jfr.Name("graft.test.SpanEnd")
-class SpanEnd extends jdk.jfr.Event
 
 class LocalCheckpointFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
   import TestSpark._
@@ -247,37 +239,6 @@ class LocalCheckpointFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ------------------------------------------------------------- fork guard
 
-  /** A `jdk.ProcessStart`: the command and its stack, innermost frame first. */
-  private final case class ProcessStart(command: String, frames: Seq[String]) {
-    /** Run by a `java.lang.ref.Cleaner`: Spark's `ArtifactManager` shells
-      * out `rm -rf` when the garbage collector reclaims an earlier query's
-      * cloned session, whenever that happens.
-      */
-    def fromCleaner: Boolean = frames.exists(_.startsWith("jdk.internal.ref.CleanerImpl"))
-    override def toString: String = command + " <- " + frames
-      .find(f => f.startsWith("org.apache.spark.") || f.startsWith("org.apache.hadoop.fs.")).getOrElse("?")
-  }
-
-  /** The `jdk.ProcessStart` events of this JVM during `body`. */
-  private def processStarts(body: => Unit): Seq[ProcessStart] = {
-    val seen = new ConcurrentLinkedQueue[ProcessStart]()
-    val end = new CountDownLatch(1)
-    val rs = new RecordingStream()
-    try {
-      rs.enable("jdk.ProcessStart").withStackTrace()
-      rs.enable(classOf[SpanEnd])
-      rs.onEvent("jdk.ProcessStart", (e: RecordedEvent) => seen.add(ProcessStart(e.getString("command"),
-        Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
-          .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}"))))
-      rs.onEvent("graft.test.SpanEnd", (_: RecordedEvent) => end.countDown())
-      rs.startAsync()
-      body
-      new SpanEnd().commit()
-      assert(end.await(60, TimeUnit.SECONDS), "the recording never delivered its end mark")
-    } finally rs.close()
-    seen.asScala.toSeq
-  }
-
   /** Forks while the config's window query, started under `store`,
     * runs five micro-batches.
     */
@@ -287,7 +248,7 @@ class LocalCheckpointFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val in = MemoryStream[(Long, String, Double)]
     val q = Streams.DataFrameWriterConfig(format = "memory", queryName = Some("ckpt_forks"),
       checkpoint = Some(tempDir("ckpt_forks").toString)).start(windowed(in))
-    try processStarts {
+    try ProcessStarts.during {
       (0 until 5).foreach { i => in.addData(events(1000 + 100 * i until 1030 + 100 * i)); q.processAllAvailable() }
     } finally {
       q.stop()
@@ -297,8 +258,7 @@ class LocalCheckpointFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("no child process starts while a checkpointed query runs") {
     val forks = queryForks(classOf[LocalCheckpointFiles].getName).filterNot(_.fromCleaner)
-    assert(forks.isEmpty, s"${forks.size} process starts:\n" +
-      forks.groupBy(_.toString).map { case (k, v) => s"${v.size} × $k" }.mkString("\n"))
+    assert(forks.isEmpty, ProcessStarts.report(forks))
     // the guard sees forks: without libhadoop Spark's default manager
     // shells out for chmod and readlink
     if (!NativeCodeLoader.isNativeCodeLoaded) {

@@ -88,6 +88,25 @@ class ObsSpec extends AnyFunSuite {
       !plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
   }
 
+  test("serviceGraph: the co-partitioned shuffle join gives the broadcast join's rows") {
+    // at the tested scales the default plans a broadcast join; broadcast
+    // off runs the trace-keyed shuffle join written for scale
+    def run(): (String, Seq[String]) = {
+      val q = Registry.queries("x_obs_service_graph")(spark, sf)
+      val rows = q.collect().map(_.toString).sorted.toSeq
+      (q.queryExecution.executedPlan.toString, rows)
+    }
+    val (broadcastPlan, broadcast) = run()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    val (shufflePlan, shuffled) = try run() finally spark.conf.set(key, saved)
+    assert(broadcastPlan.contains("BroadcastHashJoin"), broadcastPlan.take(3000))
+    assert(shufflePlan.contains("SortMergeJoin") && !shufflePlan.contains("BroadcastHashJoin"),
+      shufflePlan.take(3000))
+    assert(broadcast.nonEmpty && shuffled == broadcast)
+  }
+
   // --- SLO burn ----------------------------------------------------------
 
   test("sloBurn: page implies both windows burn; rolling ≥ bucket counts") {
