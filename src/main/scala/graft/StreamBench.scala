@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.streaming.Stateful
 
@@ -85,6 +85,17 @@ object StreamBench {
     n
   }
 
+  /** Stops `q` between two triggers: a stop that lands inside a batch
+    * interrupts its state store commit, which the provider logs as
+    * `CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT`, and a query with a
+    * processing-time timeout runs a batch on every trigger. The gap
+    * between two triggers is short, so this polls without sleeping.
+    */
+  private def stopBetweenBatches(q: StreamingQuery): Unit = {
+    while (q.isActive && q.status.isTriggerActive) Thread.onSpinWait()
+    q.stop()
+  }
+
   private val nameCtr = new java.util.concurrent.atomic.AtomicLong(0)
 
   def main(args: Array[String]): Unit = {
@@ -126,7 +137,7 @@ object StreamBench {
       chunks.foreach(in.addData(_))
       q.processAllAvailable()
       val elapsed = (System.nanoTime() - t0) / 1e9
-      q.stop()
+      stopBetweenBatches(q)
       val kept = spark.table(name).count()
       spark.catalog.dropTempView(name)
       (elapsed, kept)
@@ -151,7 +162,7 @@ object StreamBench {
       chunks.foreach(in.addData(_))
       val got = drainCount(spark, name, expected, deadlineMs = 300000)
       val elapsed = (System.nanoTime() - t0) / 1e9
-      q.stop()
+      stopBetweenBatches(q)
       spark.catalog.dropTempView(name)
       require(got == expected,
         s"tail drain incomplete: $got of $expected kept spans")
@@ -188,7 +199,7 @@ object StreamBench {
       in.addData(flush)
       val got = drainCount(spark, name, expected, deadlineMs = 300000)
       val elapsed = (System.nanoTime() - t0) / 1e9
-      q.stop()
+      stopBetweenBatches(q)
       spark.catalog.dropTempView(name)
       require(got == expected,
         s"window drain incomplete: $got of $expected closed windows")

@@ -362,44 +362,15 @@ object Msgpack {
     * emit a corrupt header for a ≥64 KiB log line and desync the
     * receiver).
     */
-  def encodeForward(tag: String, events: Seq[(Long, Long, Map[String, String])]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def wU16(v: Int): Unit = { out.write((v >> 8) & 0xFF); out.write(v & 0xFF) }
-    def wU32(v: Long): Unit = {
-      out.write(((v >> 24) & 0xFF).toInt); out.write(((v >> 16) & 0xFF).toInt)
-      out.write(((v >> 8) & 0xFF).toInt); out.write((v & 0xFF).toInt)
-    }
-    def wArrHeader(n: Int): Unit =
-      if (n < 16) out.write(0x90 | n)
-      else if (n < 65536) { out.write(0xdc); wU16(n) }
-      else { out.write(0xdd); wU32(n.toLong) }
-    def wMapHeader(n: Int): Unit =
-      if (n < 16) out.write(0x80 | n)
-      else if (n < 65536) { out.write(0xde); wU16(n) }
-      else { out.write(0xdf); wU32(n.toLong) }
-    def wStr(s: String): Unit = {
-      val b = s.getBytes("UTF-8")
-      if (b.length < 32) out.write(0xa0 | b.length)
-      else if (b.length < 256) { out.write(0xd9); out.write(b.length) }
-      else if (b.length < 65536) { out.write(0xda); wU16(b.length) }
-      else { out.write(0xdb); wU32(b.length.toLong) }
-      out.write(b)
-    }
-    wArrHeader(2)
-    wStr(tag)
-    wArrHeader(events.size)
-    events.foreach { case (sec, nsec, record) =>
-      wArrHeader(2)
-      out.write(0xd7); out.write(0x00); wU32(sec); wU32(nsec) // EventTime ext
-      wMapHeader(record.size)
-      record.foreach { case (k, v) => wStr(k); wStr(v) }
-    }
-    out.toByteArray
-  }
+  def encodeForward(tag: String, events: Seq[(Long, Long, Map[String, String])]): Array[Byte] =
+    encode(MArr(Vector(MStr(tag), MArr(events.iterator.map { case (sec, nsec, record) =>
+      val time = java.nio.ByteBuffer.allocate(8).putInt(sec.toInt).putInt(nsec.toInt).array()
+      MArr(Vector(MExt(0, time), MMap(record.iterator.map { case (k, v) => (MStr(k), MStr(v)) }.toVector)))
+    }.toVector))))
 
-  /** Generic single-object encoder (inverse of [[decode]]) — used by the
-    * secure-Forward handshake frames; record batches keep the
-    * specialized [[encodeForward]] writer.
+  /** Generic single-object encoder (inverse of [[decode]]) — the
+    * secure-Forward handshake frames and the Forward record batches
+    * ([[encodeForward]]).
     */
   def encode(v: V): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()

@@ -1,11 +1,8 @@
 package graft.streaming
 
-import java.io.BufferedOutputStream
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileAlreadyExistsException,
-  FileStatus, FileSystem, Path, PathFilter, UnsupportedFileSystemException}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, Path, PathFilter,
+  UnsupportedFileSystemException}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
@@ -14,21 +11,20 @@ import org.apache.spark.sql.internal.SQLConf
 
 /** The streaming checkpoint store: offset, commit, sink and state files
   * — the engine's `storage.type filesystem` chunk files
-  * (`src/flb_storage.c`), written with plain file I/O as fluent-bit
-  * writes its chunks.
+  * (`src/flb_storage.c`), written through the same `file:` layer as the
+  * batch writers, as fluent-bit writes its chunks through one storage
+  * layer.
   *
-  * Spark's default manager writes through Hadoop's `FileContext`. Without
-  * libhadoop, `RawLocalFileSystem` forks a child process for metadata:
-  * `chmod` for every file and directory it creates (`setPermission`,
-  * `.crc` sidecars included) and several `readlink`s for every rename
-  * (`FileUtil.readLink`). For `file:` paths this store keeps Spark's
-  * protocol (write a hidden temp file, then rename it over the final
-  * name) but creates the temp file and directories with `java.nio` and
-  * renames with `Files.move`, so no process starts. A rename first removes
-  * a stale Hadoop `.name.crc` sidecar of the destination, as
-  * `ChecksumFileSystem`'s rename does, so a file the default manager wrote
-  * reads back after this store rewrites it. Reads, listings, `exists` and
-  * deletes stay on Spark's manager; none of them forks.
+  * Spark's default manager writes through Hadoop's `FileContext`, whose
+  * local file system is a stock `RawLocalFileSystem`: without libhadoop
+  * it forks `chmod` for every file and directory it creates and several
+  * `readlink`s for every rename (`FileUtil.readLink`). For `file:` paths
+  * this store is Spark's `FileSystemBasedCheckpointFileManager`
+  * instead, which goes through the `FileSystem` that `fs.file.impl`
+  * names: [[NioLocalFileSystem]], bound by the same [[install]]. It keeps
+  * Spark's protocol (write a hidden temp file, then rename it over the
+  * final name) and Hadoop's `.crc` sidecars, so a checkpoint directory
+  * has stock Spark's layout, and no process starts.
   *
   * Any other scheme gets Spark's default manager for every call,
   * unchanged. Spark builds this class through
@@ -36,13 +32,13 @@ import org.apache.spark.sql.internal.SQLConf
   */
 final class LocalCheckpointFiles(path: Path, conf: Configuration) extends CheckpointFileManager {
 
-  /** The manager every call goes to: [[LocalCheckpointFiles.Nio]] on
+  /** The manager every call goes to: Spark's `FileSystem`-based one on
     * `file:`, else what `CheckpointFileManager.create` builds when the key
     * is unset.
     */
   private[graft] val files: CheckpointFileManager =
     if (Option(path.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file")
-      new LocalCheckpointFiles.Nio(path, conf)
+      new FileSystemBasedCheckpointFileManager(path, conf)
     else
       try new FileContextBasedCheckpointFileManager(path, conf)
       catch { case _: UnsupportedFileSystemException => new FileSystemBasedCheckpointFileManager(path, conf) }
@@ -70,8 +66,9 @@ object LocalCheckpointFiles {
   val FileNoCacheKey: String = "fs.file.impl.disable.cache"
 
   /** Select this store for `spark`'s streaming queries and bind `file:` to
-    * [[NioLocalFileSystem]] for its batch writers and output committer,
-    * each unless its key is already set: an explicit choice wins.
+    * [[NioLocalFileSystem]] for its batch writers, output committer and
+    * `file:` checkpoints, each unless its key is already set: an explicit
+    * choice wins.
     *
     * Both go in the session conf, which `sessionState.newHadoopConf()`
     * copies into the Hadoop conf that file writers ship to their tasks
@@ -87,45 +84,5 @@ object LocalCheckpointFiles {
       spark.conf.getOption(k).isEmpty && { spark.conf.set(k, v); true }
     setIfUnset(Key, classOf[LocalCheckpointFiles].getName)
     if (setIfUnset(FileImplKey, classOf[NioLocalFileSystem].getName)) setIfUnset(FileNoCacheKey, "true")
-  }
-
-  /** Spark's `file:` manager with the temp file, the rename and the
-    * directories moved to `java.nio`; `createAtomic` is Spark's own
-    * temp-then-rename stream over them.
-    */
-  private[graft] final class Nio(path: Path, conf: Configuration)
-      extends FileContextBasedCheckpointFileManager(path, conf) {
-    private def file(p: Path) = Paths.get(fc.makeQualified(p).toUri)
-
-    override def createTempFile(p: Path): FSDataOutputStream = {
-      val f = file(p)
-      Files.createDirectories(f.getParent)
-      new FSDataOutputStream(new BufferedOutputStream(Files.newOutputStream(f), 1 << 16), null)
-    }
-
-    /** A rename that loses to an existing file deletes its temp file,
-      * which Spark's stream would leave behind.
-      */
-    override def renameTempFile(src: Path, dst: Path, overwriteIfPossible: Boolean): Unit = {
-      val (s, d) = (file(src), file(dst))
-      def lost(): Nothing = {
-        Files.deleteIfExists(s)
-        throw new FileAlreadyExistsException(s"$dst exists")
-      }
-      if (!overwriteIfPossible && Files.exists(d)) lost()
-      Files.deleteIfExists(d.resolveSibling(s".${d.getFileName}.crc"))
-      try {
-        if (overwriteIfPossible) Files.move(s, d, StandardCopyOption.ATOMIC_MOVE)
-        else Files.move(s, d)
-      } catch { case _: java.nio.file.FileAlreadyExistsException => lost() }
-    }
-
-    override def mkdirs(p: Path): Unit = Files.createDirectories(file(p))
-
-    override def createCheckpointDirectory(): Path = {
-      val q = fc.makeQualified(path)
-      mkdirs(q)
-      q
-    }
   }
 }

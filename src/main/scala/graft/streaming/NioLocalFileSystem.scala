@@ -9,9 +9,9 @@ import org.apache.hadoop.fs.permission.FsPermission
 
 /** Hadoop's checksummed local file system for `file:` paths, with the
   * permission step on `java.nio`: the batch writers' part files, `.crc`
-  * sidecars, `_SUCCESS` markers and output-committer directories are
-  * created the way fluent-bit's `out_file` creates its files, with no
-  * child process.
+  * sidecars, `_SUCCESS` markers and output-committer directories, and
+  * the streaming checkpoints ([[LocalCheckpointFiles]]), are created the
+  * way fluent-bit's `out_file` creates its files, with no child process.
   *
   * Without libhadoop, `RawLocalFileSystem.setPermission` forks `chmod`,
   * and its `create` and `mkdirs` call it for every file and directory.

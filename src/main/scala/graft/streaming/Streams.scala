@@ -87,53 +87,6 @@ object Streams {
         lit(message).as("message"),
         col("value").as("seq"))
 
-  /** out_counter / out_flowcounter analogue: running record count per
-    * tag (complete-mode aggregate — the sink IS the aggregation).
-    */
-  def counterSink(df: DataFrame, tagCol: String): DataFrame =
-    df.groupBy(col(tagCol)).agg(count(lit(1)).as("records"))
-
-  /** Event-time tumbling/hopping window aggregation with watermark —
-    * the streaming twin of the FQL WINDOW clause (correct mode per
-    * SURVEY §7.4(2); watermark bounds state).
-    */
-  def windowedAgg(df: DataFrame, tsCol: String, watermark: String,
-                  size: String, advance: Option[String],
-                  groupKeys: Seq[String], aggs: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    val win = advance match {
-      case Some(adv) => window(col(tsCol), size, adv)
-      case None => window(col(tsCol), size)
-    }
-    df.withWatermark(tsCol, watermark)
-      .groupBy((win +: groupKeys.map(col)): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Event-time session windows with a gap timeout (beyond the
-    * reference's tumbling/hopping SP windows): state per (keys, open
-    * session) merges on arrival and closes — and emits, in append
-    * mode — once the watermark passes `gap` behind the last event.
-    * Batch twin gated by `x_sessionize`.
-    */
-  def sessionAgg(df: DataFrame, tsCol: String, watermark: String,
-                 gap: String, groupKeys: Seq[String],
-                 aggs: Seq[org.apache.spark.sql.Column]): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      .groupBy((session_window(col(tsCol), gap) +: groupKeys.map(col)): _*)
-      .agg(aggs.head, aggs.tail: _*)
-
-  /** Streaming exact dedup with BOUNDED state — the streaming twin of
-    * the batch `x_dedup_exact` operator: duplicates of a key are
-    * dropped while the key is within the watermark horizon, and its
-    * state is evicted once the watermark passes (so a re-ingested
-    * at-least-once replay inside the horizon dedups, while state never
-    * grows with stream lifetime — the property that matters at 100 TB).
-    */
-  def dedupWithinWatermark(df: DataFrame, tsCol: String, watermark: String,
-                           keyCols: Seq[String]): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
-
   /** Tag-routed fan-out: one writeStream per sink pattern
     * (§2.8 routing; each sink gets its own checkpoint = independent
     * delivery progress, like per-output task queues).

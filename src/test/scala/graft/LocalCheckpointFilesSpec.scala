@@ -8,11 +8,11 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileAlreadyExistsException, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.util.NativeCodeLoader
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
-  FileContextBasedCheckpointFileManager}
+  FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -68,10 +68,21 @@ class LocalCheckpointFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 
+  /** `p` read back through Hadoop's checksummed local file system, which
+    * verifies it against its `.crc` sidecar: a missing sidecar fails the
+    * first assertion, a stale one the read.
+    */
+  private def readChecked(p: Path): String = {
+    val local = FileSystem.getLocal(conf())
+    assert(local.exists(local.getChecksumFile(p)), s"no .crc sidecar for $p")
+    val in = local.open(p)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  }
+
   test("createAtomic + close publishes the file; the temp file never shows under the final name or in list") {
     val dir = tempDir("ckpt_atomic")
     val m = new LocalCheckpointFiles(new Path(dir.toUri), conf())
-    assert(m.files.isInstanceOf[LocalCheckpointFiles.Nio])
+    assert(m.files.isInstanceOf[FileSystemBasedCheckpointFileManager])
     val f = new Path(dir.resolve("0").toUri)
     val out = m.createAtomic(f, overwriteIfPossible = false)
     out.write("v1\n{\"batchWatermarkMs\":0}".getBytes(UTF_8))
@@ -80,8 +91,9 @@ class LocalCheckpointFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     out.close()
     assert(read(m, f) == "v1\n{\"batchWatermarkMs\":0}")
     assert(m.list(new Path(dir.toUri)).map(_.getPath.getName).toSeq == Seq("0"))
-    // no temp file and no Hadoop .crc sidecar left on disk
-    assert(names(dir) == Set("0"))
+    // no temp file left on disk, and the published bytes match their sidecar
+    assert(names(dir) == Set("0", ".0.crc"))
+    assert(readChecked(f) == "v1\n{\"batchWatermarkMs\":0}")
   }
 
   test("cancel leaves no file") {
@@ -100,7 +112,7 @@ class LocalCheckpointFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     write(m, f, "first", overwrite = false)
     intercept[FileAlreadyExistsException](write(m, f, "second", overwrite = false))
     assert(read(m, f) == "first")
-    assert(names(dir) == Set("2"), "the losing temp file stayed")
+    assert(readChecked(f) == "first")
   }
 
   test("overwriteIfPossible=true replaces a file Spark's default manager wrote, .crc sidecar and all") {
@@ -113,7 +125,7 @@ class LocalCheckpointFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(names(dir) == Set("3.delta", ".3.delta.crc"), "the default manager wrote no .crc sidecar")
     write(new LocalCheckpointFiles(new Path(dir.toUri), c), f, "the new, longer bytes", overwrite = true)
     assert(read(default, f) == "the new, longer bytes")
-    assert(names(dir) == Set("3.delta"))
+    assert(readChecked(f) == "the new, longer bytes")
     // and the reverse: the default manager overwrites this store's file
     write(default, f, "default again", overwrite = true)
     assert(read(new LocalCheckpointFiles(new Path(dir.toUri), c), f) == "default again")
@@ -221,12 +233,11 @@ class LocalCheckpointFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.map(r => (r._1, r._2, r._3)).sorted == want.map(r => (r._1, r._2, r._3)).sorted)
     val avg = want.map(r => (r._1, r._2) -> r._4).toMap
     got.foreach(r => assert(math.abs(r._4 - avg((r._1, r._2))) <= 1e-9, s"window $r"))
-    // each run wrote its offset files through its own store: Hadoop's
-    // checksummed file system leaves a .crc sidecar, this store none
-    val offsets = names(Paths.get(ckpt, "offsets"))
-    val last = offsets.filter(_.forall(_.isDigit)).map(_.toLong).max
-    assert(offsets.contains(".0.crc") == (first == SparkDefault), offsets)
-    assert(offsets.contains(s".$last.crc") == (second == SparkDefault), offsets)
+    // each run wrote its offset files through its own store, both with
+    // Hadoop's .crc sidecars: every one reads back with its checksum verified
+    val offsets = names(Paths.get(ckpt, "offsets")).filter(_.forall(_.isDigit))
+    assert(offsets.contains("0") && offsets.size > 1, offsets)
+    offsets.foreach(n => readChecked(new Path(Paths.get(ckpt, "offsets", n).toUri)))
   }
 
   test("a config's window query resumes exactly from a checkpoint Spark's default manager wrote") {

@@ -141,7 +141,7 @@ class Ops2Spec extends AnyFunSuite {
     val src = graft.streaming.Streams.dummy(spark, "dummy.0", "hello", 100)
     assert(src.isStreaming)
     assert(src.columns.toSeq == Seq("tag", "ts", "message", "seq"))
-    val counted = graft.streaming.Streams.counterSink(src, "tag")
+    val counted = src.groupBy(col("tag")).agg(count(lit(1)).as("records"))
     val q = counted.writeStream.format("memory").queryName("cnt_out")
       .outputMode("complete").start()
     try {

@@ -109,9 +109,10 @@ class PlanSpec extends AnyFunSuite {
     val docs = Registry.queries("x_dedup_exact")(spark, sf) // any keyed frame
       .select("keep_id", "n_dups")
     val dir = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
-    graft.model.Layout.writeBucketed(docs, "docs_a", s"$dir/a", "keep_id", 4)
-    graft.model.Layout.writeBucketed(
-      docs.withColumnRenamed("n_dups", "n2"), "docs_b", s"$dir/b", "keep_id", 4)
+    docs.write.mode("overwrite").option("path", s"$dir/a")
+      .bucketBy(4, "keep_id").sortBy("keep_id").saveAsTable("docs_a")
+    docs.withColumnRenamed("n_dups", "n2").write.mode("overwrite").option("path", s"$dir/b")
+      .bucketBy(4, "keep_id").sortBy("keep_id").saveAsTable("docs_b")
     val j = spark.table("docs_a").join(spark.table("docs_b"), "keep_id")
     j.collect()
     val plan = j.queryExecution.executedPlan.toString

@@ -410,13 +410,12 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, String, java.sql.Timestamp, Double)]
     val ord = concat(lpad(unix_micros(col("ts")).cast("string"), 20, "0"),
       lpad(col("event_id").cast("string"), 12, "0"))
-    val rolled = Streams.windowedAgg(
-      in.toDS().toDF("event_id", "k", "ts", "v"),
-      tsCol = "ts", watermark = "5 seconds", size = "1 minute",
-      advance = None, groupKeys = Seq("k"),
-      aggs = Seq(min_by(col("v"), ord).as("open"), max(col("v")).as("high"),
+    val rolled = in.toDS().toDF("event_id", "k", "ts", "v")
+      .withWatermark("ts", "5 seconds")
+      .groupBy(window(col("ts"), "1 minute"), col("k"))
+      .agg(min_by(col("v"), ord).as("open"), max(col("v")).as("high"),
         min(col("v")).as("low"), max_by(col("v"), ord).as("close"),
-        count(lit(1)).as("n")))
+        count(lit(1)).as("n"))
     val q = rolled.writeStream.format("memory").queryName("ohlc_stream")
       .outputMode("append").trigger(Trigger.ProcessingTime(100)).start()
     val mk = java.sql.Timestamp.valueOf(_: String)
@@ -1556,8 +1555,9 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(java.sql.Timestamp, String, Double)]
     val df = in.toDF().toDF("ts", "tag", "value")
-    val agg = Streams.sessionAgg(df, "ts", "5 seconds", "10 seconds",
-      Seq("tag"), Seq(count(lit(1)).as("n"), sum("value").as("sv")))
+    val agg = df.withWatermark("ts", "5 seconds")
+      .groupBy(session_window(col("ts"), "10 seconds"), col("tag"))
+      .agg(count(lit(1)).as("n"), sum("value").as("sv"))
     val q = agg.writeStream.format("memory").queryName("sess_out")
       .outputMode("append").start()
     def t(s: String) = java.sql.Timestamp.valueOf(s)
@@ -1588,8 +1588,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(java.sql.Timestamp, String, String)]
     val df = in.toDF().toDF("ts", "doc_id", "body")
-    val out = Streams.dedupWithinWatermark(df, "ts", "30 seconds",
-      Seq("doc_id"))
+    val out = df.withWatermark("ts", "30 seconds")
+      .dropDuplicatesWithinWatermark(Seq("doc_id"))
     val q = out.writeStream.format("memory").queryName("dedup_out")
       .outputMode("append").start()
     def t(s: String) = java.sql.Timestamp.valueOf(s)
@@ -1856,8 +1856,9 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(java.sql.Timestamp, String, Double)]
     val df = in.toDF().toDF("ts", "tag", "value")
-    val agg = Streams.windowedAgg(df, "ts", "10 seconds", "1 minute", None,
-      Seq("tag"), Seq(count(lit(1)).as("n"), sum("value").as("sv")))
+    val agg = df.withWatermark("ts", "10 seconds")
+      .groupBy(window(col("ts"), "1 minute"), col("tag"))
+      .agg(count(lit(1)).as("n"), sum("value").as("sv"))
     val q = agg.writeStream.format("memory").queryName("win_out")
       .outputMode("append").start()
     def t(s: String) = java.sql.Timestamp.valueOf(s)
