@@ -27,12 +27,13 @@ import subprocess
 import sys
 
 
-def events(path):
+def events(path, name="jdk.ProcessStart"):
+    """The recording's `name` events, each stack up to 64 frames deep."""
     jfr = shutil.which("jfr")
     if jfr is None:
-        sys.exit("jfr_forks: the JDK's `jfr` tool is not on PATH")
+        sys.exit("the JDK's `jfr` tool is not on PATH")
     out = subprocess.run([jfr, "print", "--json", "--stack-depth", "64",
-                          "--events", "jdk.ProcessStart", path],
+                          "--events", name, path],
                          check=True, stdout=subprocess.PIPE, text=True).stdout
     return json.loads(out)["recording"]["events"]
 

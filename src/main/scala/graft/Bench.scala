@@ -27,9 +27,25 @@ object Bench {
   )
   private def isHeadline(n: String): Boolean = headline(n)
 
+  /** The host's 1-min load average; -1 when it cannot be read. */
+  def load1: Double = try {
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
+      .split(" ")(0).toDouble
+  } catch { case _: Throwable => -1.0 }
+
+  /** Whether a run that started at 1-min load `load1` on `cpus` cores may
+    * write the records (`bench_full.json`, `bench_line.json`): not when
+    * the load was above the core count, the host then being shared with
+    * other work (a run at load1 3.4 once replaced the calm record). An
+    * unreadable load (-1) does not refuse.
+    */
+  def calm(load1: Double, cpus: Int): Boolean = load1 <= cpus
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
+    val startLoad = load1
     // suite variance is ±15% single-shot; report the median of N runs
     // per query so round-over-round regressions are detectable
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
@@ -132,11 +148,6 @@ object Bench {
       if (!recordSf.contains(sfDir) || !cpusMatches) Map.empty
       else """"([^"]+)":([0-9]+\.[0-9]+)""".r.findAllMatchIn(record.get)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    def load1: Double = try {
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-        .split(" ")(0).toDouble
-    } catch { case _: Throwable => -1.0 }
     // Host-storm retry budget: a median window that lands inside a
     // neighbor storm (this host is multi-tenant — r12's driver bench
     // carried a 64.2 s x_fuzzy_join reading against an 8.93 s pin with
@@ -234,8 +245,12 @@ object Bench {
     // a legacy one without the field: establish or upgrade it.
     val sfMatches = recordSf.forall(_ == sfDir)
     val localMaster = master.startsWith("local[")
+    val calmStart = calm(startLoad, cpus)
+    def busyStart(file: String): Unit =
+      System.err.println(s"[bench] 1-min load $startLoad at the start is above " +
+        s"$cpus cores - $file NOT overwritten")
     if (only.isEmpty && action == "count" && !stormHeavy && sfMatches &&
-        cpusMatches && localMaster) {
+        cpusMatches && localMaster && calmStart) {
       // sf and cpus ride along so the storm-retry pins only ever
       // compare same-scale, same-core-count readings
       writeRecord("bench_full.json", s"""{"sf":"$sfDir","cpus":$cpus,"queries":${jmap(results)}}""")
@@ -248,6 +263,8 @@ object Bench {
     } else if (only.isEmpty && action == "count" && !cpusMatches) {
       System.err.println(s"[bench] cpus $cpus differs from the committed " +
         "bench_full.json record - NOT overwritten")
+    } else if (only.isEmpty && action == "count" && localMaster && !calmStart) {
+      busyStart("bench_full.json")
     }
 
     // SPARK_GRAFT_PRINT_ALL lifts the headline filter — for subset
@@ -282,7 +299,8 @@ object Bench {
     // bench_full.json, only at the record's core count (the r16 hazard
     // again: the 8-core scaling run overwrote this line).
     if (only.isEmpty && action == "count") {
-      if (cpusMatches) writeRecord("bench_line.json", line)
+      if (!calmStart) busyStart("bench_line.json")
+      else if (cpusMatches) writeRecord("bench_line.json", line)
       else System.err.println(s"[bench] cpus $cpus differs from the committed " +
         "bench_full.json record - bench_line.json NOT overwritten")
     }

@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * at-most-once, ingest-edge delivery contract as [[TcpServerSource]].
   * A body over [[Msgpack.MaxPackedBytes]] is refused with `413` before
   * it is read, and a Content-Length that is negative or not a number
-  * gets `400`; both close the connection.
+  * gets `400`; both close the connection and count as refused.
   */
 class HttpServerSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -106,8 +106,12 @@ object HttpServerSource {
         h = readLine(in)
       }
       // the declared length is checked before anything is allocated for it
-      if (contentLength < 0) { reply("400 Bad Request", close = true); return }
-      if (contentLength > Msgpack.MaxPackedBytes) { reply("413 Payload Too Large", close = true); return }
+      def refuse(status: String): Nothing = {
+        reply(status, close = true)
+        throw new IllegalArgumentException(s"http request refused: $status")
+      }
+      if (contentLength < 0) refuse("400 Bad Request")
+      if (contentLength > Msgpack.MaxPackedBytes) refuse("413 Payload Too Large")
       val rawBytes = in.readNBytes(contentLength.toInt)
       if (rawBytes.length < contentLength) throw new java.io.EOFException
       if (method == "POST" && contentLength > 0) {

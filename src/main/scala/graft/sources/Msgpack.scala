@@ -261,13 +261,19 @@ object Msgpack {
     d.length >= 2 && d(0) == 0x1f.toByte && d(1) == 0x8b.toByte
 
   /** Bounded gunzip. GZIPInputStream handles the concatenated-member
-    * streams fluentd emits when it appends compressed chunks.
+    * streams fluentd emits when it appends compressed chunks. Every
+    * failure is an `IllegalArgumentException("gzip: …")`, as in
+    * [[Zstd.decompress]]: a corrupt or cut stream is bad input, not an
+    * I/O error.
     */
-  def gunzip(data: Array[Byte], limit: Int = MaxPackedBytes): Array[Byte] = {
-    val in = new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(data))
-    try readBounded(in, limit, "gzip") finally in.close()
-  }
+  def gunzip(data: Array[Byte], limit: Int = MaxPackedBytes): Array[Byte] =
+    try {
+      val in = new java.util.zip.GZIPInputStream(
+        new java.io.ByteArrayInputStream(data))
+      try readBounded(in, limit, "gzip") finally in.close()
+    } catch {
+      case e: java.io.IOException => throw new IllegalArgumentException(s"gzip: ${e.getMessage}", e)
+    }
 
   /** Reads a decompressing stream to its end in 64 KiB steps, failing
     * once the output passes `limit` bytes.

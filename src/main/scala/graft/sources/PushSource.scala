@@ -1,16 +1,18 @@
 package graft.sources
 
-import java.io.{ByteArrayOutputStream, Closeable, InputStream, OutputStream}
+import java.io.{ByteArrayOutputStream, Closeable, IOException, InputStream, OutputStream}
 import java.net.{InetSocketAddress, ServerSocket}
 import java.nio.channels.{Channels, ServerSocketChannel}
 import java.nio.charset.StandardCharsets
 import java.util
+import java.util.Optional
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReportsSourceMetrics}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,10 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * (a constant head and entries in wire form), and an [[EntryDecoder]]
   * that turns one entry into a row in the executor task. The core owns
   * the rest: the listening loop, the segment buffer, the offsets (record
-  * counts), the byte slabs a batch ships as, the reader and the scan
-  * path. Like fluent-bit's inputs without filesystem storage, delivery
-  * is at-most-once and non-replayable — the ingest EDGE; durable
-  * large-scale ingestion fronts this with Kafka (SURVEY §2.9).
+  * counts), the one broadcast a batch ships as and the slabs that read
+  * it, the reader and the scan path. Like fluent-bit's inputs without
+  * filesystem storage, delivery is at-most-once and non-replayable — the
+  * ingest EDGE; durable large-scale ingestion fronts this with Kafka
+  * (SURVEY §2.9).
   */
 object PushSource {
 
@@ -112,16 +115,10 @@ private[sources] trait EntryDecoder[H] extends Serializable {
   * fluent-bit input chunk: a head every record shares, `bytes` holding
   * the entries back to back, `offs(i)` where entry i starts.
   */
-private[sources] final class Segment[H](val head: H, val bytes: Array[Byte], val offs: Array[Int]) {
+private[sources] final class Segment[H](val head: H, val bytes: Array[Byte], val offs: Array[Int])
+    extends Serializable {
   def count: Int = offs.length
   def pos(i: Int): Int = if (i == count) bytes.length else offs(i)
-  /** Entries `[i, j)` as one piece of a partition. */
-  def piece(i: Int, j: Int): Piece[H] =
-    if (i == 0 && j == count) Piece(head, bytes, offs)
-    else {
-      val from = offs(i)
-      Piece(head, util.Arrays.copyOfRange(bytes, from, pos(j)), offs.slice(i, j).map(_ - from))
-    }
 }
 
 private[sources] object Segment {
@@ -152,26 +149,29 @@ private[sources] object Segment {
   }
 }
 
-/** Entries of one head in wire form; `offs` as in [[Segment]]. */
-private[sources] final case class Piece[H](head: H, bytes: Array[Byte], offs: Array[Int])
-
-/** A byte slab of a batch: its Java serialization is a byte copy. */
-private[sources] final case class Slab[H](pieces: Array[Piece[H]]) extends InputPartition
+/** A slab of a batch: the handle of the batch's one broadcast of its
+  * segments, and the entry ranges `(segment, first, end)` the slab reads,
+  * flattened in threes. Its serialized size does not grow with the
+  * batch's bytes, which cross to each executor once, with the broadcast.
+  */
+private[sources] final case class Slab[H](batch: Broadcast[Array[Segment[H]]], ranges: Array[Int])
+    extends InputPartition
 
 private[sources] object Slab {
-  /** Cut entry ranges `(segment, first, end)` into at most `parts` slabs
-    * of about equal bytes, at entry boundaries: slab k ends at the first
-    * boundary at or past k/parts of the bytes. Consecutive small
-    * segments share a slab.
+  /** Cut entry ranges `(segment, first, end)`, one per segment, into at
+    * most `parts` slabs of about equal bytes, at entry boundaries: slab k
+    * ends at the first boundary at or past k/parts of the bytes.
+    * Consecutive small segments share a slab. Each slab is its ranges
+    * `(index into ranges, first, end)` flattened in threes.
     */
-  def cut[H](ranges: Seq[(Segment[H], Int, Int)], parts: Int): Seq[Slab[H]] = {
+  def cut[H](ranges: Seq[(Segment[H], Int, Int)], parts: Int): Seq[Array[Int]] = {
     val bytes = ranges.map { case (g, i, j) => (g.pos(j) - g.pos(i)).toLong }.sum
     def target(k: Int): Long = if (k < parts) bytes * k / parts else Long.MaxValue
-    val out = Seq.newBuilder[Slab[H]]
-    val cur = scala.collection.mutable.ArrayBuffer[Piece[H]]()
+    val out = Seq.newBuilder[Array[Int]]
+    val cur = scala.collection.mutable.ArrayBuffer[Int]()
     var k = 1
     var done = 0L // bytes in the ranges before this one
-    ranges.foreach { case (g, i0, j0) =>
+    ranges.iterator.zipWithIndex.foreach { case ((g, i0, j0), s) =>
       val origin = done - g.pos(i0) // global position of byte 0 of `g`
       var i = i0
       while (i < j0) {
@@ -182,10 +182,10 @@ private[sources] object Slab {
             val r = util.Arrays.binarySearch(g.offs, i + 1, j0, local.max(0L).toInt)
             if (r >= 0) r else -r - 1
           }
-        cur += g.piece(i, j)
+        cur.addOne(s).addOne(i).addOne(j)
         val at = origin + g.pos(j)
         if (at >= target(k)) {
-          out += Slab(cur.toArray)
+          out += cur.toArray
           cur.clear()
           while (target(k) <= at) k += 1
         }
@@ -193,7 +193,7 @@ private[sources] object Slab {
       }
       done += g.pos(j0) - g.pos(i0)
     }
-    if (cur.nonEmpty) out += Slab(cur.toArray)
+    if (cur.nonEmpty) out += cur.toArray
     out.result()
   }
 }
@@ -207,18 +207,20 @@ private[sources] final case class PushOffset(n: Long) extends Offset {
 private[sources] final case class PushReaderFactory[H](decoder: EntryDecoder[H])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val pieces = partition.asInstanceOf[Slab[H]].pieces
+    val slab = partition.asInstanceOf[Slab[H]]
+    val segs = slab.batch.value
+    val r = slab.ranges
     new PartitionReader[InternalRow] {
-      private var p = 0
-      private var i = -1
+      private var k = -3 // the range being read starts at r(k)
+      private var i = 0 // its next entry
+      private var end = 0
       private var row: InternalRow = _
       override def next(): Boolean = {
-        i += 1
-        while (p < pieces.length && i >= pieces(p).offs.length) { p += 1; i = 0 }
-        p < pieces.length && {
-          val pc = pieces(p)
-          val end = if (i + 1 < pc.offs.length) pc.offs(i + 1) else pc.bytes.length
-          row = decoder.row(pc.head, pc.bytes, pc.offs(i), end)
+        while (i >= end && k + 3 < r.length) { k += 3; i = r(k + 1); end = r(k + 2) }
+        i < end && {
+          val g = segs(r(k))
+          row = decoder.row(g.head, g.bytes, g.offs(i), g.pos(i + 1))
+          i += 1
           true
         }
       }
@@ -252,11 +254,14 @@ private[sources] final class PushTable[H](tableName: String, tableSchema: Struct
 /** The micro-batch stream every listening source runs on. `listen`
   * binds the source's socket and starts its loop; [[append]] is how its
   * protocol handler hands over records. Segments are buffered until a
-  * commit drops them whole; a batch ships `[start, end)` as at most
-  * `defaultParallelism` byte slabs.
+  * commit drops them whole. A batch ships `[start, end)` once, as one
+  * broadcast of its segments read by at most `defaultParallelism` slabs;
+  * the commit that passes `end` destroys it. Connections that end on a
+  * protocol error are counted and reported as the source metric
+  * `refusedConnections`.
   */
 private[sources] final class PushStream[H](decoder: EntryDecoder[H], listen: PushStream[H] => Unit)
-    extends MicroBatchStream {
+    extends MicroBatchStream with ReportsSourceMetrics {
 
   /** Segments not yet committed, oldest first; `base` is the offset of
     * the first one's first record and `total` the offset after the last
@@ -266,6 +271,13 @@ private[sources] final class PushStream[H](decoder: EntryDecoder[H], listen: Pus
   private var base = 0L
   private var total = 0L
   @volatile private var stopped = false
+  /** The slabs planned for each uncommitted range, by `(start, end)`:
+    * Spark plans a batch several times (each copy of its scan node asks
+    * again), and each range is cut and broadcast once. Guarded by its own
+    * lock.
+    */
+  private val planned = scala.collection.mutable.Map[(Long, Long), Array[InputPartition]]()
+  private val refused = new java.util.concurrent.atomic.AtomicLong
   /** The listening socket and open connections, closed by [[stop]]. */
   private val open = java.util.concurrent.ConcurrentHashMap.newKeySet[Closeable]()
 
@@ -294,7 +306,9 @@ private[sources] final class PushStream[H](decoder: EntryDecoder[H], listen: Pus
   /** Accept connections on `server` (a TCP or TLS `ServerSocket`, or a
     * unix `ServerSocketChannel`), each handled on its own thread. The
     * connection closes when `handle` returns or throws: a peer that went
-    * away or broke the protocol ends only its own connection.
+    * away or broke the protocol ends only its own connection. A throw
+    * other than an I/O error (the peer gone, the stream stopped) is a
+    * protocol error and counts as a refused connection.
     */
   def serve(server: Closeable, name: String)(handle: (InputStream, OutputStream) => Unit): Unit =
     loop(s"graft-$name-accept") {
@@ -307,7 +321,10 @@ private[sources] final class PushStream[H](decoder: EntryDecoder[H], listen: Pus
       closeOnStop(conn)
       daemon(s"graft-$name-conn") {
         try handle(in, out)
-        catch { case _: Throwable => }
+        catch {
+          case _: IOException =>
+          case _: Throwable => refused.incrementAndGet()
+        }
         finally { open.remove(conn); conn.close() }
       }
     }
@@ -334,6 +351,13 @@ private[sources] final class PushStream[H](decoder: EntryDecoder[H], listen: Pus
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[PushOffset].n
     val e = end.asInstanceOf[PushOffset].n
+    planned.synchronized(planned.getOrElseUpdate((s, e), plan(s, e)))
+  }
+
+  /** Slabs of the entries in `[s, e)` over one broadcast of the segments
+    * they lie in; none for an empty range.
+    */
+  private def plan(s: Long, e: Long): Array[InputPartition] = {
     val ranges = Seq.newBuilder[(Segment[H], Int, Int)]
     segments.synchronized {
       var at = base
@@ -344,19 +368,39 @@ private[sources] final class PushStream[H](decoder: EntryDecoder[H], listen: Pus
         at += seg.count
       }
     }
-    Slab.cut(ranges.result(), SparkSession.active.sparkContext.defaultParallelism).toArray
+    val rs = ranges.result()
+    if (rs.isEmpty) Array.empty
+    else {
+      val sc = SparkSession.active.sparkContext
+      val batch = sc.broadcast(rs.map(_._1).toArray)
+      Slab.cut(rs, sc.defaultParallelism).map(Slab(batch, _): InputPartition).toArray
+    }
+  }
+
+  /** Destroy the broadcasts of the planned ranges that `keep` rejects. */
+  private def release(keep: ((Long, Long)) => Boolean): Unit = planned.synchronized {
+    planned.filterInPlace { case (range, parts) =>
+      keep(range) || { parts.headOption.foreach(_.asInstanceOf[Slab[H]].batch.destroy()); false }
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory = PushReaderFactory(decoder)
 
-  override def commit(end: Offset): Unit = segments.synchronized {
+  override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[PushOffset].n
-    while (segments.nonEmpty && base + segments.head.count <= e)
-      base += segments.removeHead().count
+    release(_._2 > e)
+    segments.synchronized {
+      while (segments.nonEmpty && base + segments.head.count <= e)
+        base += segments.removeHead().count
+    }
   }
+
+  override def metrics(latestConsumedOffset: Optional[Offset]): util.Map[String, String] =
+    util.Map.of("refusedConnections", refused.get.toString)
 
   override def stop(): Unit = {
     stopped = true
     open.forEach(c => try c.close() catch { case _: Throwable => })
+    release(_ => false)
   }
 }

@@ -66,7 +66,7 @@ object TcpServerSource {
     * frame_have_len/frame_expected_len); a non-digit/non-space where
     * the length belongs, a length over [[PushSource.MaxLineBytes]] or
     * EOF mid-frame ends the connection, matching the reference's -1
-    * return.
+    * return. The first two throw, so the connection counts as refused.
     */
   private def octetFrames(in: InputStream, stream: PushStream[Long]): Unit = {
     val bin = new BufferedInputStream(in)
@@ -76,11 +76,14 @@ object TcpServerSource {
       while (c >= '0' && c <= '9' && n < Int.MaxValue) {
         n = n * 10 + (c - '0'); c = bin.read()
       }
-      if (c != ' ' || n > PushSource.MaxLineBytes) return
+      if (c < 0) return
+      if (c != ' ' || n > PushSource.MaxLineBytes) throw new IllegalArgumentException(
+        s"octet-counted frame length $n is over ${PushSource.MaxLineBytes} or not followed by a space")
       val bytes = bin.readNBytes(n.toInt)
       if (bytes.length < n) return
       stream.append(Segment.one(System.currentTimeMillis(), bytes))
       c = bin.read()
     }
+    if (c >= 0) throw new IllegalArgumentException(s"octet-counted frame starts with byte $c, not a digit")
   }
 }

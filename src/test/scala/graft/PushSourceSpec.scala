@@ -2,11 +2,13 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, ReportsSourceMetrics}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.PushCorpus._
 import graft.SourceStreams._
-import graft.sources.{HttpServerSource, MqttServerSource, PushSource, TcpServerSource, UdpServerSource}
+import graft.sources.{HttpServerSource, MqttServerSource, PushProbe, PushSource, TcpServerSource, UdpServerSource}
 
 /** The wire contract of the Tcp, Udp, Http and Mqtt sources on the push
   * core, driven through the public `TableProvider` path with partitions
@@ -17,6 +19,14 @@ class PushSourceSpec extends AnyFunSuite {
   import TestSpark._
 
   spark.sparkContext // planning reads defaultParallelism from the active session
+
+  /** A partition is a handle on its batch's broadcast: its serialized
+    * size does not grow with the batch.
+    */
+  private val MaxShippedPartition = 4096
+
+  private def refusedConnections(s: MicroBatchStream): Long =
+    s.asInstanceOf[ReportsSourceMetrics].metrics(java.util.Optional.empty()).get("refusedConnections").toLong
 
   /** The rows (and replies) of `PushCorpus` from the sources as they were
     * before they shared the push core (generated at commit f0c5ca5 by the
@@ -192,8 +202,110 @@ class PushSourceSpec extends AnyFunSuite {
       sock.close()
       assert(offsetOf(stream) == 2)
       assert(rowsIn(stream, 0, 2)(value) == Seq("kept one", longest))
-      // the source itself keeps serving
+      // the source itself keeps serving; a peer that closes is not refused
       assert(deliver(stream, port, 1, value)(whole("next\n".getBytes(UTF_8))) == Seq("next"))
+      assert(refusedConnections(stream) == 1)
+    }
+  }
+
+  test("http: a corrupt or cut gzip body closes the connection and counts as refused") {
+    val good = gzip("{\"z\":1}\n".getBytes(UTF_8))
+    val corrupt = good.take(10) ++ Array.fill[Byte](good.length - 10)(0x7f)
+    val cut = good.take(good.length - 4)
+    withPortStream(new HttpServerSource) { (stream, port) =>
+      Seq(corrupt, cut).zipWithIndex.foreach { case (body, k) =>
+        val sock = connect(port)
+        sock.setSoTimeout(10000)
+        sock.getOutputStream.write(request("POST", "/gz", Seq("Content-Encoding: gzip"), body))
+        sock.getOutputStream.flush()
+        assert(closedByPeer(sock.getInputStream), k)
+        sock.close()
+        assert(refusedConnections(stream) == k + 1)
+      }
+      assert(offsetOf(stream) == 0)
+      assert(post(port, Seq(request("POST", "/gz", Seq("Content-Encoding: gzip"), good))).head
+        .startsWith("HTTP/1.1 201 "))
+      assert(refusedConnections(stream) == 2)
+    }
+  }
+
+  test("tcp octet framing: a frame that starts with a non-digit closes the connection and counts as refused") {
+    withPortStream(new TcpServerSource, "framing" -> "octet") { (stream, port) =>
+      val sock = connect(port)
+      sock.setSoTimeout(10000)
+      sock.getOutputStream.write("5 hello<14> no length".getBytes(UTF_8))
+      sock.getOutputStream.flush()
+      assert(closedByPeer(sock.getInputStream))
+      sock.close()
+      assert(refusedConnections(stream) == 1)
+      assert(offsetOf(stream) == 1)
+      assert(rowsIn(stream, 0, 1)(value) == Seq("hello"))
+    }
+  }
+
+  /** Lines `line 0` to `line n-1` in ten writes (at least ten segments); the open connection. */
+  private def sendLines(port: Int, n: Int): java.net.Socket = {
+    val bytes = (0 until n).map(i => s"line $i\n").mkString.getBytes(UTF_8)
+    val sock = connect(port)
+    bytes.grouped(bytes.length / 10 + 1).foreach { w =>
+      sock.getOutputStream.write(w); sock.getOutputStream.flush(); Thread.sleep(20)
+    }
+    sock
+  }
+
+  /** The id the context's next broadcast gets. */
+  private def nextBroadcastId(): Long = {
+    val probe = spark.sparkContext.broadcast(0)
+    probe.destroy()
+    probe.id + 1
+  }
+
+  /** Reading `parts` fails on their destroyed broadcast. */
+  private def assertDestroyed(stream: MicroBatchStream, parts: Seq[InputPartition]): Unit = {
+    val e = intercept[Exception](SourceStreams.rows(stream, parts)(value))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("after it was destroyed")), e)
+  }
+
+  test("a range planned twice is the same partitions over one broadcast") {
+    withPortStream(new TcpServerSource) { (stream, port) =>
+      val sock = sendLines(port, 1000)
+      awaitOffset(stream, 1000)
+      val id = nextBroadcastId()
+      val first = partitions(stream, 0, 1000)
+      val again = partitions(stream, 0, 1000)
+      assert(nextBroadcastId() == id + 2) // the batch's and the probe's own
+      assert(first.nonEmpty && first.size == again.size)
+      assert(first.zip(again).forall { case (a, b) => a eq b })
+      assert(PushProbe.broadcastIds(first) == Set(id))
+      assert(SourceStreams.rows(stream, again)(value) == (0 until 1000).map(i => s"line $i"))
+      sock.close()
+    }
+  }
+
+  test("a committed batch's partitions can no longer be read") {
+    withPortStream(new TcpServerSource) { (stream, port) =>
+      val sock = sendLines(port, 1000)
+      awaitOffset(stream, 1000)
+      val batch = partitions(stream, 0, 600)
+      val later = partitions(stream, 600, 1000)
+      stream.commit(stream.deserializeOffset("600"))
+      assertDestroyed(stream, batch)
+      // the batch after it is untouched
+      assert(SourceStreams.rows(stream, later)(value) == (600 until 1000).map(i => s"line $i"))
+      sock.close()
+    }
+  }
+
+  test("stop destroys the broadcasts of uncommitted batches") {
+    withPortStream(new TcpServerSource) { (stream, port) =>
+      val sock = sendLines(port, 1000)
+      awaitOffset(stream, 1000)
+      val batch = partitions(stream, 0, 1000)
+      assert(SourceStreams.rows(stream, batch)(value).size == 1000)
+      stream.stop()
+      assertDestroyed(stream, batch)
+      sock.close()
     }
   }
 
@@ -211,8 +323,10 @@ class PushSourceSpec extends AnyFunSuite {
       awaitOffset(stream, 10000)
       val parts = partitions(stream, 0, 10000)
       assert(parts.size == math.min(10000, slots)) // not one partition per batch
-      val shipped = parts.map(p => javaSerialized(p).length.toLong).sum
-      assert(shipped <= 1.25 * bytes.length, s"$shipped serialized bytes for ${bytes.length} line bytes")
+      parts.foreach { p =>
+        val shipped = javaSerialized(p).length
+        assert(shipped <= MaxShippedPartition, s"a partition of ${bytes.length} line bytes ships as $shipped bytes")
+      }
       assert(SourceStreams.rows(stream, parts)(value) == lines)
       stream.commit(stream.deserializeOffset("10000"))
       assert(rowsIn(stream, 0, 10000)(value).isEmpty)
